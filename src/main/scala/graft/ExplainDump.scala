@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dump formatted physical plans for plan-shape review (dev tool). */
+/** Dump formatted physical plans for plan-shape review (dev tool),
+  * under the same session as [[Bench]]. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -10,13 +9,7 @@ object ExplainDump {
       else Seq("q_filter_like", "q_join_unique", "q_join_prefix",
         "q_agg_pricing", "q_agg_revenue_nation", "q_take_while",
         "q_dedup_exact", "q_window_rank")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(GraftSession.envCores(32), 32)
     names.foreach { n =>
       println(s"\n════════ $n ════════")
       println(SparkEntry.queries(n)(spark, dir).queryExecution.explainString(

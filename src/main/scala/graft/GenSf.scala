@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-replica generator: expand a driver-generated testdata
@@ -31,14 +31,7 @@ object GenSf {
     val Array(src, out, fStr) = args
     val f = fStr.toInt
     require(f >= 2, s"factor must be >= 2, got $f")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32, 32)
 
     def t(n: String) = spark.read.parquet(s"$src/$n.parquet")
     // driver layout parity: each table is ONE parquet FILE named

@@ -1,32 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCores(4)
     // correctness runs arm the planted-oracle preconditions (bucket
     // occupancy under the LSH skew cap — see assertPlantedBucketsFit):
     // a violated precondition must fail the gate LOUDLY here, instead
     // of surfacing as an inexplicable hash mismatch. Bench skips the
     // check (it would double the planted gates' cost).
     System.setProperty("graft.plant.guard", "1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata parquet may carry tz-naive timestamps (pyarrow writes
-      // isAdjustedToUTC=false); Spark 4 would read those as
-      // TIMESTAMP_NTZ, which watermarks and unix_micros reject. With
-      // the session pinned to UTC the LTZ read preserves the instants
-      // and matches DuckDB's naive-timestamp reading of the same files.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus, cpus)
     new java.io.File(outDir).mkdirs()
     // local pre-flight convenience: restrict to a comma-separated query
     // subset (the driver never sets this — the gate always runs all)

@@ -2,6 +2,8 @@ package graft.operators
 
 import scala.collection.mutable
 
+import graft.streaming.LandingZone
+
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -382,22 +384,9 @@ object Blocklist {
       maxPatternChars: Long = 1L << 24): Unit = {
     val pats = collectPatterns(patterns, patternCol, maxPatterns, maxPatternChars)
     val bc = spark.sparkContext.broadcast(compile(pats))
-    val schema = spark.read.parquet(streamDir).schema
-    val writer = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        annotateWith(batch, textCol, bc)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q = checkpointDir
-      .fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-    q.awaitTermination()
+    LandingZone.drain(spark, streamDir, checkpointDir) { batch =>
+      annotateWith(batch, textCol, bc)
+        .write.mode("append").parquet(outPath)
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.streaming.LandingZone
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -267,23 +268,10 @@ object Corpus {
       idCol: String, textCol: String, outPath: String,
       checkpointDir: Option[String] = None): Unit = {
     val model = lmTrain(reference, idCol, textCol)
-    val schema = spark.read.parquet(streamDir).schema
-    val writer = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        lmScoreWith(model, batch, idCol, textCol)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q = checkpointDir
-      .fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-    q.awaitTermination()
+    LandingZone.drain(spark, streamDir, checkpointDir) { batch =>
+      lmScoreWith(model, batch, idCol, textCol)
+        .write.mode("append").parquet(outPath)
+    }
   }
 
   /** Per-(document, query-term) BM25 contributions — the retrieval

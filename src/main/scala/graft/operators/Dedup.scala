@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextFunctions
+import graft.streaming.LandingZone
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -1103,11 +1104,6 @@ object Dedup {
     * @return (`idCol`, component) — component is the min node id of the
     *         connected component
     */
-  /** Per-round timing forensics for [[connectedComponents]]: read per
-    * invocation (not cached) so a harness can flip it at runtime. */
-  private def ccTiming: Boolean =
-    sys.props.get("graft.cc.timing").contains("1")
-
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 25): DataFrame = {
@@ -1134,7 +1130,6 @@ object Dedup {
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
-      val roundT0 = System.nanoTime()
       // min label among neighbours (partial agg → tiny shuffle)
       val lb = Graph.broadcastIfSmall(
         labels.select(col("__id").as("__s"), col("__comp").as("__sc")), nNodes)
@@ -1158,15 +1153,6 @@ object Dedup {
       labels = stepped.drop("__prev")
       labelsRdd = steppedRdd
       iter += 1
-      // per-round wall time + convergence progress: iterative queries
-      // are the most exposed to host-interference windows, so bench
-      // forensics need to see WHERE the time went (round count vs
-      // per-round cost) without re-running under a profiler. Opt-in
-      // (-Dgraft.cc.timing=1, set by Bench) — library callers get a
-      // silent operator by default.
-      if (ccTiming)
-        System.err.println(f"[cc] round $iter: changed=$changed " +
-          f"wall=${(System.nanoTime() - roundT0) / 1e9}%.2f s")
     }
     sym.unpersist()
     // silently-split components are worse than an error: downstream
@@ -1613,7 +1599,8 @@ object Dedup {
     * corpus-recomputing reference form ([[nearDedupIncremental]]): the
     * corpus never loses a document, an incoming near-duplicate of any
     * corpus document (transitively, through any batch/corpus chain)
-    * is rejected, and batch-only clusters keep one survivor by `pick`.
+    * is rejected, and batch-only clusters keep their smallest id (the
+    * [[SigTableHandle]] form takes a `pick`).
     *
     * Why the restricted edge set suffices: the rejected set depends only
     * on "does this batch doc's component contain a corpus doc", and the
@@ -1654,9 +1641,9 @@ object Dedup {
   def nearDedupIncremental(
       spark: org.apache.spark.sql.SparkSession, sigTablePath: String,
       incoming: DataFrame, idCol: String, textCol: String,
-      threshold: Double, pick: Seq[Column]): DataFrame =
+      threshold: Double): DataFrame =
     nearDedupIncremental(openSignatureTable(spark, sigTablePath),
-      incoming, idCol, textCol, threshold, pick)
+      incoming, idCol, textCol, threshold, Nil)
 
   /** A RESOLVED handle on a persisted signature table — the serving-
     * side open-once contract (the IVF-PQ handle's rationale,
@@ -1911,15 +1898,6 @@ object Dedup {
       batch, batchBuckets, touchedKeys)
   }
 
-  /** [[nearDedupIncremental]] against a persisted signature table with
-    * the default pick (smallest id). */
-  def nearDedupIncremental(
-      spark: org.apache.spark.sql.SparkSession, sigTablePath: String,
-      incoming: DataFrame, idCol: String, textCol: String,
-      threshold: Double): DataFrame =
-    nearDedupIncremental(spark, sigTablePath, incoming, idCol, textCol,
-      threshold, Nil)
-
   /** Append a batch's MinHash signatures to a persisted signature table
     * — the maintenance half of the incremental-ingest loop: after a
     * batch's survivors are admitted to the corpus, appending their
@@ -2117,24 +2095,11 @@ object Dedup {
       threshold: Double, outPath: String,
       checkpointDir: Option[String] = None,
       pick: Seq[Column] = Nil): Unit = {
-    val schema = spark.read.parquet(streamDir).schema
-    val writer = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        nearDedupIngest(spark, sigTablePath, batch, idCol, textCol,
-          threshold, pick)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q = checkpointDir
-      .fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-    q.awaitTermination()
+    LandingZone.drain(spark, streamDir, checkpointDir) { batch =>
+      nearDedupIngest(spark, sigTablePath, batch, idCol, textCol,
+        threshold, pick)
+        .write.mode("append").parquet(outPath)
+    }
   }
 
   /** 64-bit SimHash over whitespace tokens: bit i of the hash is the
@@ -2595,23 +2560,10 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       streamDir: String, idCol: String, sigCol: String,
       outPath: String, checkpointDir: Option[String] = None): Unit = {
-    val schema = spark.read.parquet(streamDir).schema
-    val writer = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        hammingIngest(spark, path, batch, idCol, sigCol)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q = checkpointDir
-      .fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-    q.awaitTermination()
+    LandingZone.drain(spark, streamDir, checkpointDir) { batch =>
+      hammingIngest(spark, path, batch, idCol, sigCol)
+        .write.mode("append").parquet(outPath)
+    }
   }
 
   // ───────────── persisted-store maintenance (retire / compact) ─────────────
@@ -3280,23 +3232,10 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       streamDir: String, idCol: String, textCol: String,
       outPath: String, checkpointDir: Option[String] = None): Unit = {
-    val schema = spark.read.parquet(streamDir).schema
-    val writer = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        paragraphIngest(spark, path, batch, idCol, textCol)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q = checkpointDir
-      .fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-    q.awaitTermination()
+    LandingZone.drain(spark, streamDir, checkpointDir) { batch =>
+      paragraphIngest(spark, path, batch, idCol, textCol)
+        .write.mode("append").parquet(outPath)
+    }
   }
 
   /** Remove paragraphs from a persisted paragraph-hash table — the

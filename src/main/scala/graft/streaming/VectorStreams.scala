@@ -159,28 +159,15 @@ object VectorStreams {
       spark: SparkSession, indexPath: String, streamDir: String,
       idCol: String, vecCol: String,
       checkpointDir: Option[String] = None): Unit = {
-    val schema = spark.read.parquet(streamDir).schema
-    val writer = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(streamDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val already = graft.operators.Store
-          .read(spark, s"$indexPath/codes")
-          .select(col("id").as(idCol))
-          .join(broadcast(batch.select(col(idCol)).distinct()),
-            Seq(idCol), "left_semi")
-          .localCheckpoint(true)
-        val fresh = batch.join(broadcast(already), Seq(idCol), "left_anti")
-        Similarity.appendToIvfPqIndex(spark, indexPath, fresh, idCol, vecCol)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    val q = checkpointDir
-      .fold(writer)(d => writer.option("checkpointLocation", d))
-      .start()
-    q.awaitTermination()
+    LandingZone.drain(spark, streamDir, checkpointDir) { batch =>
+      val already = graft.operators.Store
+        .read(spark, s"$indexPath/codes")
+        .select(col("id").as(idCol))
+        .join(broadcast(batch.select(col(idCol)).distinct()),
+          Seq(idCol), "left_semi")
+        .localCheckpoint(true)
+      val fresh = batch.join(broadcast(already), Seq(idCol), "left_anti")
+      Similarity.appendToIvfPqIndex(spark, indexPath, fresh, idCol, vecCol)
+    }
   }
 }

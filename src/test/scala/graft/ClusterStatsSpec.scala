@@ -174,12 +174,15 @@ class ClusterStatsSpec extends GraftSpec {
     assert(over == 0)
   }
 
-  test("nearDedupIngestStreamed drains a landing directory one micro-batch per file") {
+  /** A signature table holding one doc, plus a landing dir with two
+    * one-file batches: batch 1 is a fresh doc (10) and a copy of the
+    * stored doc (11); batch 2 copies 10 (20) and adds a fresh doc (21). */
+  private def streamIngestFixture(name: String): (String, String) = {
     val existing = Seq(
       (1L, "the quick brown fox jumps over the lazy dog again " * 3))
       .toDF("doc_id", "text")
-    val base = graft.Scratch.path("test_stream_ingest")
-    graft.Scratch.remove("test_stream_ingest")
+    val base = graft.Scratch.path(name)
+    graft.Scratch.remove(name)
     Dedup.writeSignatureTable(existing, "doc_id", "text", s"$base/sig")
     val landing = java.nio.file.Paths.get(s"$base/landing")
     java.nio.file.Files.createDirectories(landing)
@@ -203,7 +206,12 @@ class ClusterStatsSpec extends GraftSpec {
       java.nio.file.Files.setLastModifiedTime(target,
         java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 2000L))
     }
-    Dedup.nearDedupIngestStreamed(spark, s"$base/sig", landing.toString,
+    (base, landing.toString)
+  }
+
+  test("nearDedupIngestStreamed drains a landing directory one micro-batch per file") {
+    val (base, landing) = streamIngestFixture("test_stream_ingest")
+    Dedup.nearDedupIngestStreamed(spark, s"$base/sig", landing,
       "doc_id", "text", threshold = 0.6, outPath = s"$base/out",
       checkpointDir = Some(s"$base/ckpt"))
     // batch 1: 11 duplicates the corpus -> only 10 survives; batch 2:
@@ -213,6 +221,24 @@ class ClusterStatsSpec extends GraftSpec {
     assert(out == Set(10L, 21L), s"got $out")
     // survivors' signatures were appended micro-batch by micro-batch
     assert(graft.operators.Store.read(spark, s"$base/sig/sigs").count() == 3)
+  }
+
+  test("nearDedupIngestStreamed rerun on the same checkpoint ingests nothing twice") {
+    val (base, landing) = streamIngestFixture("test_stream_ingest_rerun")
+    def ingest(): Unit =
+      Dedup.nearDedupIngestStreamed(spark, s"$base/sig", landing,
+        "doc_id", "text", threshold = 0.6, outPath = s"$base/out",
+        checkpointDir = Some(s"$base/ckpt"))
+    def outRows = spark.read.parquet(s"$base/out").count()
+    def sigRows = graft.operators.Store.read(spark, s"$base/sig/sigs").count()
+    def commits = Option(new java.io.File(s"$base/ckpt/commits").list())
+      .fold(0)(_.count(!_.startsWith(".")))
+    ingest()
+    assert((outRows, sigRows, commits) == (2L, 3L, 2))
+    // no new landing files: the offset log says both are done, so the
+    // rerun runs no micro-batch and appends nothing anywhere
+    ingest()
+    assert((outRows, sigRows, commits) == (2L, 3L, 2))
   }
 
   test("appendToSignatureTable admits rows only up to a bucket's remaining headroom") {

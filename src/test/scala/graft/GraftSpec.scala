@@ -14,20 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * golden files). All values are STRINGS, like the reference's Row.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.builder(4, 4)
+    .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
+    .getOrCreate()
 }
 
 object Fixtures {
