@@ -14,13 +14,19 @@ import org.apache.spark.sql.functions._
   * Scale design (this is where we diverge HARD from the reference —
   * SURVEY.md §4.2): the reference materializes the whole dataset in
   * driver RAM and binary-searches it. Here the "index" is a cached
-  * DataFrame; lookups are Catalyst filters (parquet min/max pruning +
-  * codegen replace binary search), and joins hash-probe it — broadcast
-  * when small, shuffle-hash/sort-merge when not. Nothing ever funnels
-  * through the driver, so the same code runs at 100 TB where the
-  * reference caps out at RAM.
+  * DataFrame; lookups are Catalyst filters, and joins hash-probe it —
+  * broadcast when small, shuffle-hash/sort-merge when not. What stands
+  * in for the binary search depends on where the rows live: a
+  * [[cached]] index is held key-sorted, so the in-memory scan's
+  * per-batch min/max stats skip every batch that cannot hold the key;
+  * an index over parquet (e.g. [[Index.load]]) prunes row groups by
+  * their footer min/max stats; an uncached index over any other source
+  * scans it in full. Nothing ever funnels through the driver, so the
+  * same code runs at 100 TB where the reference caps out at RAM.
   *
-  * @param df       index contents (not necessarily sorted; sortedDf is)
+  * @param df       index contents: key-sorted (and cached) for an index
+  *                 returned by [[cached]], otherwise in source order
+  *                 ([[sortedDf]] is always sorted)
   * @param keyCols  index key columns, major → minor
   * @param broadcastHint  hint that the index is small enough to
   *                 broadcast to every executor (the moral equivalent of
@@ -39,17 +45,26 @@ final class Index private[operators] (
     * Range-partitioned global sort: scales out, unlike a driver sort. */
   lazy val sortedDf: DataFrame = df.orderBy(keyColumns: _*)
 
-  /** Cache the index for reuse across queries (reference indices are
-    * always materialized; here it's opt-in). */
-  def cached(): Index = { df.cache(); this }
+  /** A new index over the cached key-sorted view, for reuse across
+    * queries (reference indices are always materialized and sorted;
+    * here it's opt-in). The cached relation keeps the range
+    * partitioning and ordering of [[sortedDf]], so `find` and `iterate`
+    * on the returned index plan no shuffle and no sort, and its batch
+    * stats prune `find` to the batches that can hold the key. The
+    * receiver's `df` stays uncached; the storage is held until the
+    * caller releases it with `.df.unpersist()` on the returned index.
+    */
+  def cached(): Index = new Index(sortedDf.cache(), keyCols, broadcastHint)
 
   /** Reference `Index.Iterate` (csvplus.go:616-620): sorted scan. */
   def iterate: DataFrame = sortedDf
 
   /** Reference `Index.Find(values…)` (csvplus.go:622-627, 869-891):
     * point / prefix-range lookup on the leading key columns. Catalyst
-    * pushes the conjunction to the scan (parquet row-group pruning
-    * stands in for the binary search).
+    * pushes the conjunction to the scan, whose min/max stats stand in
+    * for the binary search: in-memory batch stats on a [[cached]]
+    * index, row-group stats on a parquet-backed one. Any other uncached
+    * index is scanned in full, then its hits are sorted.
     */
   def find(values: Any*): DataFrame = {
     if (values.length > keyCols.length)

@@ -2,12 +2,20 @@ package graft
 
 import graft.operators.{Index, Pipe}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Index build / unique check / find / subIndex / sorted iteration /
   * persistence — csvplus_test.go:198-246, 454-514, 573-649, 808-909,
   * 960-1014. */
-class IndexSpec extends GraftSpec {
+class IndexSpec extends GraftSpec with AdaptiveSparkPlanHelper {
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
 
   test("indexOn sorts lexicographically on the key columns") {
     val got = Index.indexOn(people, "name", "surname").iterate
@@ -103,5 +111,67 @@ class IndexSpec extends GraftSpec {
     Pipe(idx.iterate).mapColumns("name" -> lit("MUTATED")).df.count()
     val after = idx.iterate.collect().map(_.toSeq).toSeq
     assert(before == after)
+  }
+
+  test("cached() returns a new cached index; the receiver stays uncached and unpersist frees it") {
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.length
+    val idx = Index.indexOn(orders, "cust_id")
+    val c = idx.cached()
+    try {
+      c.df.count()
+      assert(c.keyCols == idx.keyCols)
+      assert(c.df.storageLevel != StorageLevel.NONE, "the cache manager must hold c.df")
+      assert(idx.df.storageLevel == StorageLevel.NONE, "the receiver's df must stay uncached")
+      assert(sc.getRDDStorageInfo.length > before)
+    } finally c.df.unpersist(blocking = true)
+    assert(sc.getRDDStorageInfo.length == before)
+  }
+
+  test("a cached index answers exactly as the uncached one, order included") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_cached").toString
+    Seq(Index.uniqueIndexOn(people, "name", "surname"), Index.indexOn(orders, "cust_id"))
+      .zipWithIndex.foreach { case (idx, i) =>
+        val c = idx.cached()
+        try {
+          val key = idx.iterate.head().getValuesMap[Any](idx.keyCols)
+          val point = idx.keyCols.map(key)
+          val prefix = point.init
+          val absent = point.init :+ "no-such-key"
+          Seq(point, prefix, absent).foreach { k =>
+            assert(rows(c.find(k: _*)) == rows(idx.find(k: _*)), s"find(${k.mkString(", ")})")
+          }
+          assert(rows(c.find(point: _*)).nonEmpty)
+          assert(rows(c.find(absent: _*)).isEmpty)
+          assert(rows(c.iterate) == rows(idx.iterate))
+          idx.writeTo(s"$dir/u$i")
+          c.writeTo(s"$dir/c$i")
+          assert(rows(Index.load(spark, s"$dir/c$i", idx.keyCols: _*).iterate) ==
+            rows(Index.load(spark, s"$dir/u$i", idx.keyCols: _*).iterate))
+        } finally c.df.unpersist(blocking = true)
+      }
+  }
+
+  test("find on a cached index is one pruned in-memory scan: no shuffle, no sort") {
+    val conf = "spark.sql.inMemoryColumnarStorage.batchSize"
+    val batch = 500
+    val prev = spark.conf.get(conf)
+    spark.conf.set(conf, batch.toString)
+    val c = try Index.indexOn(orders, "cust_id").cached() finally spark.conf.set(conf, prev)
+    try {
+      val key = Fixtures.ordersData.head.custId
+      val found = c.find(key)
+      assert(found.collect().length == Fixtures.ordersData.count(_.custId == key))
+      // walk the nodes, not the plan string: the InMemoryRelation prints
+      // the plan that built it, and that plan holds an Exchange and a Sort
+      val plan = found.queryExecution.executedPlan
+      assert(collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty, s"no shuffle:\n$plan")
+      assert(collect(plan) { case s: SortExec => s }.isEmpty, s"no sort:\n$plan")
+      // a key's rows are contiguous in the sorted cache, so they span at
+      // most two batches when there are fewer of them than a batch holds
+      val scanned = collect(plan) { case s: InMemoryTableScanExec => s.metrics("numOutputRows").value }
+      assert(scanned.nonEmpty && scanned.sum <= 2 * batch,
+        s"batch stats must skip batches that cannot hold the key (scanned $scanned)")
+    } finally c.df.unpersist(blocking = true)
   }
 }
