@@ -141,9 +141,9 @@ object Bench {
     // SPARK_GRAFT_PROBE_ROWS is set (the standing sf1 gate sets it),
     // build the three probe-serving stores UNTIMED and time ONLY a
     // fixed small batch's probe against each pre-built store — the
-    // serving-path numbers the probe-flat rehearsals measure, now
-    // regression-tracked round-over-round beside the gate rows. They
-    // are EXCLUDED from `total`/`n_queries` so the gate total stays
+    // serving-path numbers, regression-tracked round-over-round
+    // beside the gate rows. They are EXCLUDED from
+    // `total`/`n_queries` so the gate total stays
     // comparable across rounds; the fixed batch makes the walls a
     // bytes-∝-batch check at whatever SF the gate runs.
     val probeRows: Seq[(String, Double)] =

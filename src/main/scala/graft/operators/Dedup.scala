@@ -1479,13 +1479,18 @@ object Dedup {
   private def pruneLongKeyScanCollected(
       snap: Store.Snap, keyCol: String, sorted: Array[Long]): DataFrame = {
     if (snap.legacy || snap.files.isEmpty) return snap.df
-    Store.pruneFiles(snap) { (_, stats) =>
-      stats.get(keyCol) match {
-        case Some((mn, mx)) => anyKeyInRange(sorted, mn, mx)
-        case None => true
-      }
-    }
+    Store.pruneFiles(snap)(longKeepFn(keyCol, sorted))
   }
+
+  /** The per-file keep decision for a relation range-clustered on one
+    * long key: keep the file if its recorded `[min, max]` for `keyCol`
+    * holds a probe key; a file without stats is kept. */
+  private def longKeepFn(keyCol: String, sorted: Array[Long])
+      : (Map[String, String], Map[String, (Long, Long)]) => Boolean =
+    (_, stats) => stats.get(keyCol) match {
+      case Some((mn, mx)) => anyKeyInRange(sorted, mn, mx)
+      case None => true
+    }
 
   /** Materialize the MinHash signature/bucket relations for a corpus —
     * the "build the expensive structure once, reuse it" contract of the
@@ -1675,11 +1680,11 @@ object Dedup {
     * open signature table, WITHOUT running the dedup: derives the
     * batch's touched (band, bucket) keys exactly as
     * [[nearDedupIncremental]] does (minus the bucket-size cap, which
-    * can only SHRINK the touched set) and returns `(keptFiles,
-    * keptBytes, totalFiles, totalBytes)` of the bucket-relation scan
-    * after [[corpusBucketProbe]]'s file-prune decision — the direct bytes-∝-batch
-    * measurement the scale rehearsal records: probe bytes must stay
-    * ≈ flat as the corpus grows 10× with the batch fixed. */
+    * can only SHRINK the touched set) and returns [[probeFootprint]]'s
+    * `(keptFiles, keptBytes, totalFiles, totalBytes)` of the
+    * bucket-relation scan after [[corpusBucketProbe]]'s file-prune
+    * decision. ScaleShapeSpec asserts the kept side stays flat as the
+    * corpus grows 8× with the batch fixed. */
   private[graft] def probeFileFootprint(
       h: SigTableHandle, incoming: DataFrame,
       idCol: String, textCol: String): (Long, Long, Long, Long) = {
@@ -1700,13 +1705,26 @@ object Dedup {
       .select(explode(fn).as("bb"))
       .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"))
       .distinct()
+    probeFootprint(h.bucketsSnap, touched)(rows =>
+      bucketKeepFn(rows.map(r => (r.getInt(0), r.getLong(1)))))
+  }
+
+  /** The shared tail of the `*ProbeFootprint` measurements: collect the
+    * batch's distinct touched keys, build the store's per-file keep
+    * decision from them, and return `(keptFiles, keptBytes,
+    * totalFiles, totalBytes)` of the pruned scan. A batch touching more
+    * than [[MaxProbeKeys]] keys is refused: the real probe skips the
+    * prune there, so there is no pruned scan to measure. */
+  private def probeFootprint(snap: Store.Snap, touched: DataFrame)(
+      keep: Array[org.apache.spark.sql.Row] =>
+        (Map[String, String], Map[String, (Long, Long)]) => Boolean)
+      : (Long, Long, Long, Long) = {
     val rows = touched.limit(MaxProbeKeys + 1).collect()
     require(rows.length <= MaxProbeKeys,
-      s"probe footprint is a rehearsal measurement of the pruned path — " +
-        s"this batch touches > $MaxProbeKeys keys, where the production " +
-        s"probe falls back to the full scan; measure a smaller batch")
-    val keys = rows.map(r => (r.getInt(0), r.getLong(1)))
-    val p = Store.prunedScan(h.bucketsSnap)(bucketKeepFn(keys))
+      s"probe footprint measures the pruned path, and this batch " +
+        s"touches > $MaxProbeKeys keys, where the probe falls back to " +
+        s"the full scan; measure a smaller batch")
+    val p = Store.prunedScan(snap)(keep(rows))
     (p.keptFiles, p.keptBytes, p.totalFiles, p.totalBytes)
   }
 
@@ -2305,29 +2323,19 @@ object Dedup {
 
   /** [[probeFileFootprint]] for a persisted Hamming table: the batch's
     * touched (band, bucket) keys against the stored bucket relation's
-    * file layout — the scale rehearsal's bytes-∝-batch measurement for
-    * the media store. */
+    * file layout. */
   private[graft] def hammingProbeFootprint(
-      h: HamTableHandle, incoming: DataFrame, sigCol: String,
-      multiProbe: Boolean = false): (Long, Long, Long, Long) = {
+      h: HamTableHandle, incoming: DataFrame,
+      sigCol: String): (Long, Long, Long, Long) = {
     val nBands = h.meta.getAs[Int]("max_hamming") + 1
-    val probeBands =
-      if (multiProbe) hammingBandsMultiProbe(col("sig"), nBands)
-      else hammingBands(col("sig"), nBands)
-    val rows = incoming
+    val touched = incoming
       .select(col(sigCol).cast("long").as("sig"))
       .filter(col("sig").isNotNull)
-      .select(explode(probeBands).as("bb"))
+      .select(explode(hammingBands(col("sig"), nBands)).as("bb"))
       .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"))
       .distinct()
-      .limit(MaxProbeKeys + 1).collect()
-    require(rows.length <= MaxProbeKeys,
-      s"probe footprint is a rehearsal measurement of the pruned path — " +
-        s"this batch touches > $MaxProbeKeys keys, where the production " +
-        s"probe falls back to the full scan; measure a smaller batch")
-    val keys = rows.map(r => (r.getInt(0), r.getLong(1)))
-    val p = Store.prunedScan(h.bucketsSnap)(bucketKeepFn(keys))
-    (p.keptFiles, p.keptBytes, p.totalFiles, p.totalBytes)
+    probeFootprint(h.bucketsSnap, touched)(rows =>
+      bucketKeepFn(rows.map(r => (r.getInt(0), r.getLong(1)))))
   }
 
   /** [[hammingNearDupsIncremental]] against an already-open
@@ -3110,31 +3118,18 @@ object Dedup {
 
   /** [[probeFileFootprint]] for a persisted paragraph table: the
     * batch's distinct paragraph hashes against the hash relation's
-    * file layout — the scale rehearsal's bytes-∝-batch measurement for
-    * the exact-paragraph store. */
+    * file layout. */
   private[graft] def paragraphProbeFootprint(
       spark: org.apache.spark.sql.SparkSession, path: String,
       incoming: DataFrame, textCol: String): (Long, Long, Long, Long) = {
     val sep = Store.readMetaRow(spark, paraTableMeta(path)).getAs[String]("sep")
-    val rows = incoming.filter(col(textCol).isNotNull)
+    val touched = incoming.filter(col(textCol).isNotNull)
       .select(explode(split(col(textCol),
         java.util.regex.Pattern.quote(sep))).as("line"))
       .select(xxhash64(col("line")).as("h"))
       .distinct()
-      .limit(MaxProbeKeys + 1).collect()
-    require(rows.length <= MaxProbeKeys,
-      s"probe footprint is a rehearsal measurement of the pruned path — " +
-        s"this batch touches > $MaxProbeKeys keys, where the production " +
-        s"probe falls back to the full scan; measure a smaller batch")
-    val keys = rows.map(_.getLong(0)).sorted
-    val snap = Store.snapshot(spark, paraTableHashes(path))
-    val p = Store.prunedScan(snap) { (_, stats) =>
-      stats.get("h") match {
-        case Some((mn, mx)) => anyKeyInRange(keys, mn, mx)
-        case None => true
-      }
-    }
-    (p.keptFiles, p.keptBytes, p.totalFiles, p.totalBytes)
+    probeFootprint(Store.snapshot(spark, paraTableHashes(path)), touched)(
+      rows => longKeepFn("h", rows.map(_.getLong(0)).sorted))
   }
 
   /** Append a batch's paragraph hashes to the persisted table (the
