@@ -1,0 +1,381 @@
+package graft.operators
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
+
+/** The one store layer under the five persisted stores: the MinHash
+  * signature, Hamming and paragraph tables ([[Dedup]]) and the PQ and
+  * IVF-PQ indexes ([[Similarity]]). Each relation's layout is declared
+  * once ([[Relation]]) and create, append shaping, retire and compact
+  * all read that declaration; the banded-bucket append, the touched-key
+  * probe prune, retire and compact are each written once here.
+  *
+  * The pruning scheme is REPOSE's (ICDE 2021): one per-partition
+  * summary — a file's recorded key range — prunes every store's probe
+  * the same way ([[KeyScheme]]), so a batch touching K keys reads O(K)
+  * files however large the store grows. */
+private[graft] object BucketStore {
+
+  type KeepFn = (Map[String, String], Map[String, (Long, Long)]) => Boolean
+
+  /** One persisted relation of a store, at `<store path>/<dir>`: its
+    * partition columns, cluster keys and sampling-free range placement
+    * (`splits(None)` at create, `splits(Some(snap))` on a rewrite of
+    * `snap`), and `shape`, the batch-sized placement an append's rows
+    * take before they are written. */
+  final case class Relation(
+      dir: String,
+      partitionCols: Seq[String] = Nil,
+      clusterBy: Seq[String] = Nil,
+      splits: Option[Store.Snap] => Option[Store.RangeSplits] = _ => None,
+      shape: DataFrame => DataFrame = identity) {
+    def root(path: String): String = s"$path/$dir"
+    def snapshot(spark: SparkSession, path: String): Store.Snap =
+      Store.snapshot(spark, root(path))
+    def read(spark: SparkSession, path: String): DataFrame =
+      Store.read(spark, root(path))
+    def create(df: DataFrame, path: String): Unit =
+      Store.create(df, root(path), partitionCols, clusterBy,
+        splits = splits(None))
+
+    /** Append `rows` under the [[Store.append]] fence, shaped by the
+      * layout; `partitioned = false` writes a legacy flat store flat. */
+    def append(spark: SparkSession, path: String,
+        partitioned: Boolean = true)(rows: => DataFrame): Unit =
+      Store.append(spark, root(path)) { dir =>
+        val w = shape(rows).write.mode("append")
+        (if (partitioned && partitionCols.nonEmpty)
+          w.partitionBy(partitionCols: _*) else w).parquet(dir)
+      }
+
+    /** Layout-preserving bounded-replay rewrite (legacy flat stores
+      * upgrade to the declared layout here). */
+    def rewrite(spark: SparkSession, path: String, numFiles: Int)(
+        out: Store.Snap => DataFrame): Unit =
+      Store.rewriteWithRetry(spark, root(path), numFiles, partitionCols,
+        clusterBy, splits = s => splits(Some(s)))(out)
+  }
+
+  /** A banded (id, …, band, bucket) relation: partitioned by band and
+    * range-clustered by bucket, so DPP prunes band directories and the
+    * per-file bucket ranges prune files inside them. An append is
+    * placed into 4 files by `slot(band, bucket, slots)`, a monotone
+    * partition index over the (band, bucket) order computed by
+    * arithmetic — a range partitioner's sample would run the occupancy
+    * window and store probe a second time per append. */
+  def banded(slot: (Column, Column, Int) => Column)(
+      splits: Option[Store.Snap] => Option[Store.RangeSplits]): Relation =
+    Relation("buckets", Seq("band"), Seq("bucket"), splits,
+      Store.placeByPid(_, slot(col("band"), col("bucket"), 4), 4,
+        Seq(col("band"), col("bucket")))
+        .sortWithinPartitions(col("band"), col("bucket")))
+
+  /** A store's write-once `meta` relation: one row of the construction
+    * parameters every probe and append reads back. */
+  private def metaDir(path: String): String = s"$path/meta"
+
+  def writeMeta(spark: SparkSession, path: String, cols: Column*): Unit =
+    spark.range(1).select(cols: _*).write.mode("overwrite")
+      .parquet(metaDir(path))
+
+  /** The meta row, read on the driver (no Spark job). */
+  def readMeta(spark: SparkSession, path: String): Row =
+    Store.readMetaRow(spark, metaDir(path))
+
+  /** The meta row as a frame, for the stats queries. */
+  def metaFrame(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(metaDir(path))
+
+  /** Drop every row of a (band, bucket) relation whose bucket holds
+    * more than `maxBucketSize` rows — the write-time skew guard. */
+  def capBuckets(buckets: DataFrame, maxBucketSize: Int): DataFrame =
+    buckets
+      .withColumn("__graft_bsz",
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window
+          .partitionBy(col("band"), col("bucket"))))
+      .filter(col("__graft_bsz") <= maxBucketSize)
+      .drop("__graft_bsz")
+
+  // ───────── probe-side dynamic file pruning ─────────
+
+  /** Probes touching more keys than this skip driver-side file pruning
+    * (collecting the key list stops being "tiny") and fall back to the
+    * full manifest scan + broadcast semi-join — which a batch of that
+    * size amortizes anyway. The collect this bounds is the SAME key
+    * relation the probe already broadcasts, so the guard's cost model
+    * matches the join's. */
+  val MaxProbeKeys: Int = 1 << 20
+
+  /** The collected key rows of one probe — gathered ONCE on the driver
+    * and reused by every phase of an ingest batch (the driver-side file
+    * prune, the exact local-relation semi-join, and the append's
+    * occupancy count), so the touched-key plan never re-executes per
+    * phase. */
+  final case class ProbeKeys(rows: Array[Row], schema: StructType)
+
+  /** The one bounded key collect: None when `keys` holds more than
+    * [[MaxProbeKeys]] rows, where callers fall back to the distributed
+    * broadcast path. */
+  def collectKeys(keys: DataFrame): Option[ProbeKeys] = {
+    val rows = keys.limit(MaxProbeKeys + 1).collect()
+    if (rows.length > MaxProbeKeys) None
+    else Some(ProbeKeys(rows, keys.schema))
+  }
+
+  /** How a probe's key rows prune a relation: the key columns, the
+    * per-file keep decision built from the collected rows, and an
+    * optional predicate restated on the probe side. */
+  final case class KeyScheme(
+      cols: Seq[String], keep: Array[Row] => KeepFn,
+      guard: Option[Column] = None)
+
+  /** (band, bucket) keys of a banded relation. `band >= 0` is a
+    * construction invariant of every banding scheme — restating it on
+    * the probe side is what makes Catalyst plan the dynamic partition
+    * prune: the touched relation is usually a projection over a CACHED
+    * batch, whose internal filters an InMemoryRelation hides from
+    * PartitionPruning's selectivity check; without a visible selective
+    * predicate the rule never inserts the band subquery (PlanSpec pins
+    * the resulting PartitionFilters). */
+  val BandBucket: KeyScheme = KeyScheme(Seq("band", "bucket"),
+    rows => bucketKeepFn(rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .map(r => (r.getInt(0), r.getLong(1)))),
+    Some(col("band") >= 0))
+
+  /** One integral key of a relation range-clustered on it (paragraph
+    * hashes, signature ids). The manifest records int and long stats
+    * alike as longs, so an int key prunes the same way; a key of any
+    * other type has no stats to prune by and keeps every file. */
+  def longKey(key: String): KeyScheme = KeyScheme(Seq(key),
+    rows => longKeepFn(key,
+      rows.map(_.get(0)).collect { case n: java.lang.Number => n.longValue }.sorted))
+
+  /** Any key of the sorted array inside `[mn, mx]`? (binary search —
+    * the per-file test of the driver-side prune). */
+  private def anyKeyInRange(sorted: Array[Long], mn: Long, mx: Long): Boolean = {
+    var i = java.util.Arrays.binarySearch(sorted, mn)
+    if (i < 0) i = -i - 1
+    i < sorted.length && sorted(i) <= mx
+  }
+
+  /** The per-file keep decision for a banded bucket relation probed
+    * with `(band, bucket)` keys: the file's band comes from its
+    * partition path (or its recorded band stats for unpartitioned
+    * legacy layouts), its bucket range from the recorded stats;
+    * anything unknown keeps the file (conservative superset). */
+  private def bucketKeepFn(keys: Array[(Int, Long)]): KeepFn = {
+    val byBand: Map[Int, Array[Long]] =
+      keys.groupBy(_._1).map { case (b, ks) => b -> ks.map(_._2).sorted }
+    (pv, stats) => {
+      val bands: Iterable[Int] =
+        pv.collectFirst { case (k, v) if k.equalsIgnoreCase("band") => v }
+          .flatMap(v => scala.util.Try(v.toInt).toOption)
+          .map(Seq(_))
+          .getOrElse(stats.get("band") match {
+            case Some((mn, mx)) => mn.toInt to mx.toInt
+            case None => byBand.keys
+          })
+      bands.exists(b => byBand.get(b).exists(arr =>
+        stats.get("bucket") match {
+          case Some((mn, mx)) => anyKeyInRange(arr, mn, mx)
+          case None => true
+        }))
+    }
+  }
+
+  /** The per-file keep decision for a relation range-clustered on one
+    * long key: keep the file if its recorded `[min, max]` for `keyCol`
+    * holds a probe key; a file without stats is kept. */
+  private def longKeepFn(keyCol: String, sorted: Array[Long]): KeepFn =
+    (_, stats) => stats.get(keyCol) match {
+      case Some((mn, mx)) => anyKeyInRange(sorted, mn, mx)
+      case None => true
+    }
+
+  private def unprunable(snap: Store.Snap): Boolean =
+    snap.legacy || snap.files.isEmpty
+
+  /** The snapshot's scan restricted to the files that can hold a
+    * collected key — a conservative SUPERSET (files without stats
+    * survive; legacy generations scan fully), so it prunes BYTES,
+    * never rows. */
+  def prunedScan(snap: Store.Snap, scheme: KeyScheme,
+      keys: ProbeKeys): DataFrame =
+    if (unprunable(snap)) snap.df
+    else Store.pruneFiles(snap)(scheme.keep(keys.rows))
+
+  /** [[probe]] over keys a caller ALREADY collected — pruned scan +
+    * local-relation broadcast semi-join, zero additional driver
+    * actions. */
+  def probeCollected(spark: SparkSession, snap: Store.Snap,
+      scheme: KeyScheme, keys: ProbeKeys): DataFrame = {
+    val local = spark
+      .createDataFrame(java.util.Arrays.asList(keys.rows: _*), keys.schema)
+    prunedScan(snap, scheme, keys).join(
+      broadcast(scheme.guard.fold(local)(local.filter)), scheme.cols,
+      "left_semi")
+  }
+
+  /** The stored rows matching a probe's `touched` keys: the serving-path
+    * scan bound. The key plan is evaluated ONCE: the same collected
+    * rows drive both the driver-side file prune and (as a local
+    * relation) the exact semi-join — re-evaluating the distributed
+    * plan for the broadcast would repeat its shuffle on every probe.
+    * Probes touching more than [[MaxProbeKeys]] keys (or legacy,
+    * stat-less stores) fall back to the distributed broadcast, where
+    * the scan-side bound comes from DPP alone. On a banded relation
+    * Catalyst's DPP prunes the band partitions through the semi-join;
+    * the file prune covers the file-in-partition granularity DPP cannot
+    * reach on V1 sources. PlanSpec pins the REAL serving plan — the
+    * semi-join must reach a banded scan as a `dynamicpruningexpression`
+    * partition filter on `band`. */
+  def probe(snap: Store.Snap, scheme: KeyScheme,
+      touched: DataFrame): DataFrame = {
+    val keys = scheme.guard.fold(touched)(touched.filter)
+      .select(scheme.cols.map(col): _*)
+    (if (unprunable(snap)) None else collectKeys(keys)) match {
+      case Some(k) => probeCollected(touched.sparkSession, snap, scheme, k)
+      case None => snap.df.join(broadcast(keys), scheme.cols, "left_semi")
+    }
+  }
+
+  /** [[probe]] of a banded relation with the batch's (band, bucket)
+    * rows: `touched`. Keys are collected from `superset` (a superset of
+    * `touched`, e.g. before the batch-side bucket cap), so the same
+    * batch's append can reuse them for its occupancy count. Returns the
+    * stored rows and the collected keys. */
+  def bandProbe(snap: Store.Snap, superset: DataFrame,
+      touched: DataFrame): (DataFrame, Option[ProbeKeys]) = {
+    val keys =
+      if (unprunable(snap)) None
+      else collectKeys(superset.filter(col("band") >= 0)
+        .select(col("band"), col("bucket")).distinct())
+    val stored = keys match {
+      case Some(k) => probeCollected(superset.sparkSession, snap, BandBucket, k)
+      case None => probe(snap, BandBucket,
+        touched.select(col("band"), col("bucket")).distinct())
+    }
+    (stored, keys)
+  }
+
+  /** A probe-time result reused at append time only while the relation
+    * has committed nothing since `snap` — one directory listing, no
+    * Spark job. A concurrent commit between a batch's probe and append
+    * (a violated single-ingest-loop contract) would make the reused
+    * result stale — an occupancy undercount or duplicate rows — so it
+    * is recomputed against a fresh snapshot instead. */
+  def fenced(spark: SparkSession, snap: Store.Snap)(reuse: => DataFrame)(
+      fresh: => DataFrame): DataFrame =
+    if (!Store.changedSince(spark, snap)) reuse else fresh
+
+  /** The measured file-skipping arithmetic of one probe, WITHOUT running
+    * it: collect the batch's distinct `touched` keys and return
+    * `(keptFiles, keptBytes, totalFiles, totalBytes)` of the pruned
+    * scan. A batch touching more than [[MaxProbeKeys]] keys is refused:
+    * the real probe skips the prune there, so there is no pruned scan
+    * to measure. */
+  def footprint(snap: Store.Snap, scheme: KeyScheme,
+      touched: DataFrame): (Long, Long, Long, Long) = {
+    val keys = collectKeys(touched)
+    require(keys.isDefined,
+      s"probe footprint measures the pruned path, and this batch " +
+        s"touches > $MaxProbeKeys keys, where the probe falls back to " +
+        s"the full scan; measure a smaller batch")
+    val p = Store.prunedScan(snap)(scheme.keep(keys.get.rows))
+    (p.keptFiles, p.keptBytes, p.totalFiles, p.totalBytes)
+  }
+
+  // ───────── the banded append, retire and compact ─────────
+
+  /** Append a batch's banded `rows` (id, payload…, band, bucket) with
+    * occupancy-headroom admission, keeping the write-time invariant "no
+    * stored bucket exceeds `maxBucketSize`": the stored occupancy of
+    * the touched buckets is counted (pruned scan + broadcast semi-join
+    * — cost ∝ batch, not corpus) and batch rows enter a bucket only up
+    * to its remaining headroom, smallest id first. A bucket already at
+    * the cap accepts nothing — the same documented recall loss as
+    * write-time capping, never a quadratic blow-up. `snap` is the
+    * snapshot occupancy is counted against and `touched` optionally
+    * carries a probe's already-collected key superset (the fused ingest
+    * path — no new driver action, under the [[fenced]] check). */
+  def appendBanded(spark: SparkSession, path: String, rel: Relation,
+      rows: DataFrame, maxBucketSize: Int, snap: Store.Snap,
+      touched: Option[ProbeKeys]): Unit = {
+    def keys = rows.select(col("band"), col("bucket")).distinct()
+    val storedRows = touched match {
+      case Some(k) => fenced(spark, snap)(
+        probeCollected(spark, snap, BandBucket, k))(
+        probe(rel.snapshot(spark, path), BandBucket, keys))
+      case None => probe(snap, BandBucket, keys)
+    }
+    val stored = storedRows
+      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("__stored"))
+    rel.append(spark, path, snap.partitionSchema.fieldNames.nonEmpty) {
+      rows
+        .withColumn("__rn",
+          row_number().over(org.apache.spark.sql.expressions.Window
+            .partitionBy(col("band"), col("bucket")).orderBy(col("id"))))
+        .join(stored, Seq("band", "bucket"), "left")
+        .filter(coalesce(col("__stored"), lit(0L)) + col("__rn") <= maxBucketSize)
+        .select(rows.columns.map(col): _*)
+    }
+  }
+
+  /** Remove the rows whose `key` is retired from a store's relations,
+    * each rewritten in `rels` order through its layout-preserving
+    * [[Relation.rewrite]] (new generation + atomic manifest flip, with
+    * bounded replay: a retire racing a stream of appends re-derives
+    * from a fresh snapshot and converges). The retirement keys are
+    * resolved against the first relation's OWN key type and a lossy
+    * cast fails loudly ([[Store.retireIds]]) — a takedown must never
+    * silently no-op — unless the caller passes them resolved as `ids`.
+    *
+    * The removed count is taken from the first relation inside the
+    * replay loop, so it reflects the snapshot the commit applied to
+    * (distinct keys when `countDistinct`). On a relation clustered by a
+    * long `key` the count scans only the files whose recorded range
+    * holds a retired key: the rewrite is inherently full-scan, a second
+    * full scan just to report a count is not. Cost ∝ store,
+    * independent of the list size (which broadcasts); `numFiles > 0`
+    * compacts in passing. */
+  def retire(spark: SparkSession, path: String, rels: Seq[Relation],
+      key: String, retired: DataFrame, idCol: String, numFiles: Int,
+      ids: Option[DataFrame] = None, countDistinct: Boolean = false): Long = {
+    val counted = rels.head
+    val stored = counted.read(spark, path)
+    val gone = ids.getOrElse {
+      val resolved = Store.retireIds(stored, key, retired, idCol)
+      if (key == "id") resolved else resolved.select(col("id").as(key))
+    }
+    val keys =
+      if (counted.clusterBy == Seq(key) &&
+        stored.schema(key).dataType == LongType) collectKeys(gone)
+      else None
+    def drop(snap: Store.Snap) =
+      snap.df.join(broadcast(gone), Seq(key), "left_anti")
+    var removed = 0L
+    counted.rewrite(spark, path, numFiles) { snap =>
+      val hit = keys.fold(snap.df)(prunedScan(snap, longKey(key), _))
+        .join(broadcast(gone), Seq(key), "left_semi")
+      removed =
+        (if (countDistinct) hit.select(col(key)).distinct() else hit).count()
+      drop(snap)
+    }
+    rels.tail.foreach(_.rewrite(spark, path, numFiles)(drop))
+    removed
+  }
+
+  /** Compact a store's relations to `numFiles` files each, in `rels`
+    * order — the periodic cleanup after many append generations (a
+    * year of hourly batches is ~9 000 generations of small files, and
+    * open cost, not bytes, comes to dominate the per-batch probe). The
+    * last relation's rewrite runs `sweep` (default: keep every row). */
+  def compact(spark: SparkSession, path: String, numFiles: Int,
+      rels: Seq[Relation],
+      sweep: Store.Snap => DataFrame = _.df): Unit = {
+    require(numFiles > 0, s"numFiles must be > 0, got $numFiles")
+    rels.init.foreach(_.rewrite(spark, path, numFiles)(_.df))
+    rels.last.rewrite(spark, path, numFiles)(sweep)
+  }
+}

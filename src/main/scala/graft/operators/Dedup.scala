@@ -178,12 +178,7 @@ object Dedup {
       .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
 
     // skew guard: drop degenerate buckets before the self-join
-    val sized = buckets
-      .withColumn("__graft_bsz",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bucket"))))
-      .filter(col("__graft_bsz") <= maxBucketSize)
-      .drop("__graft_bsz")
+    val sized = BucketStore.capBuckets(buckets, maxBucketSize)
 
     val a = sized.select(col("band"), col("bucket"), col("id").as("id_a"))
     val b = sized.select(col("band"), col("bucket"), col("id").as("id_b"))
@@ -602,12 +597,7 @@ object Dedup {
       .select(col("id"),
         explode(bandBuckets(col("sig"), bands, rowsPerBand)).as("bb"))
       .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val sized = buckets
-      .withColumn("__graft_bsz",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bucket"))))
-      .filter(col("__graft_bsz") <= maxBucketSize)
-      .drop("__graft_bsz")
+    val sized = BucketStore.capBuckets(buckets, maxBucketSize)
     val candidates = sized.select(col("band"), col("bucket"), col("id").as("id_a"))
       .join(sized.select(col("band"), col("bucket"), col("id").as("id_b")),
         Seq("band", "bucket"))
@@ -951,33 +941,24 @@ object Dedup {
       .drop("__bsz")
     val benchSh = bench.select(col("bench_id"), col("sh_b"))
     val schema = spark.read.parquet(docsPath).schema
-    val stream = spark.readStream.schema(schema).parquet(docsPath)
-      .select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", minhashSignature(col("sh"), numPerm))
-      .select(col("id"), col("sh"),
-        explode(bandBuckets(col("sig"), bands, rowsPerBand)).as("bb"))
-      .select(col("id"), col("sh"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .join(broadcast(benchBuckets), Seq("band", "bucket"))
-      .join(broadcast(benchSh), Seq("bench_id"))
-      .filter(
-        size(array_intersect(col("sh"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh"), col("sh_b"))).cast("double")
-          >= threshold)
-      .select(col("id"))
-    val name = "graft_fuzzdecon_" + math.abs(docsPath.hashCode)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = stream.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    spark.table(name)
+    LandingZone.toMemory(spark, "append") { s =>
+      s.readStream.schema(schema).parquet(docsPath)
+        .select(col(idCol).as("id"),
+          shingleHashes(col(textCol), shingleLen).as("sh"))
+        .filter(size(col("sh")) > 0)
+        .withColumn("sig", minhashSignature(col("sh"), numPerm))
+        .select(col("id"), col("sh"),
+          explode(bandBuckets(col("sig"), bands, rowsPerBand)).as("bb"))
+        .select(col("id"), col("sh"),
+          col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+        .join(broadcast(benchBuckets), Seq("band", "bucket"))
+        .join(broadcast(benchSh), Seq("bench_id"))
+        .filter(
+          size(array_intersect(col("sh"), col("sh_b"))).cast("double") /
+            size(array_union(col("sh"), col("sh_b"))).cast("double")
+            >= threshold)
+        .select(col("id"))
+    }
   }
 
   /** Per-document benchmark-contamination REPORT: the fraction of each
@@ -1326,171 +1307,76 @@ object Dedup {
     incoming.join(survivors, Seq(idCol), "left_semi")
   }
 
-  private def sigTableMeta(path: String) = s"$path/meta"
-  private def sigTableSigs(path: String) = s"$path/sigs"
-  private def sigTableBuckets(path: String) = s"$path/buckets"
+  // ───────── persisted MinHash signature table ─────────
 
-  // ───────── probe-side dynamic file pruning (shared by the stores) ─────────
+  /** The signature table's `sigs` relation (id, sig), range-clustered
+    * by id so the candidate sig fetch reads only the files whose id
+    * range holds a candidate; a rewrite takes its id split points from
+    * the snapshot's own manifest stats. An append is RANGE-shaped into
+    * 4 files with tight, disjoint id ranges in their footer stats
+    * (sortWithinPartitions alone would leave every file spanning the
+    * whole batch range on a hash-partitioned input), placed by an
+    * in-plan ntile pid — a range partitioner's sampling pass would
+    * execute the batch plan once more per append. */
+  private val SigIds = BucketStore.Relation("sigs", clusterBy = Seq("id"),
+    splits = _.flatMap(Store.statsSplits(_, "id")),
+    shape = Store.placeBatchByKey(_, "id", 4).sortWithinPartitions("id"))
 
-  /** Probes touching more keys than this skip driver-side file pruning
-    * (collecting the key list stops being "tiny") and fall back to the
-    * full manifest scan + broadcast semi-join — which a batch of that
-    * size amortizes anyway. The collect this bounds is the SAME key
-    * relation the probe already broadcasts, so the guard's cost model
-    * matches the join's. */
-  private[graft] val MaxProbeKeys = 1 << 20
+  private val SigIdKey = BucketStore.longKey("id")
 
-  /** Any key of the sorted array inside `[mn, mx]`? (binary search —
-    * the per-file test of the driver-side prune). */
-  private def anyKeyInRange(sorted: Array[Long], mn: Long, mx: Long): Boolean = {
-    var i = java.util.Arrays.binarySearch(sorted, mn)
-    if (i < 0) i = -i - 1
-    i < sorted.length && sorted(i) <= mx
-  }
+  /** The signature table's `buckets` relation (id, band, bucket) for
+    * `bandCount` band ids. `bucket` is xxhash64 — uniform by
+    * construction — so the create places it by hash arithmetic with
+    * ZERO sampling (the occupancy-cap window executes exactly once); a
+    * rewrite blocks by the band ids its snapshot holds. */
+  private def sigBuckets(bandCount: Int): BucketStore.Relation =
+    BucketStore.banded(bandBucketSlot(_, _, bandCount, _))(s =>
+      s.fold(Option(bandCount))(Store.partitionBlockCount(_, "band"))
+        .map(c => Store.hashKeySplits(col("bucket"), Some((col("band"), c)))))
 
-  /** The per-file keep decision for a banded bucket relation probed
-    * with `(band, bucket)` keys: the file's band comes from its
-    * partition path (or its recorded band stats for unpartitioned
-    * legacy layouts), its bucket range from the recorded stats;
-    * anything unknown keeps the file (conservative superset). */
-  private def bucketKeepFn(keys: Array[(Int, Long)])
-      : (Map[String, String], Map[String, (Long, Long)]) => Boolean = {
-    val byBand: Map[Int, Array[Long]] =
-      keys.groupBy(_._1).map { case (b, ks) => b -> ks.map(_._2).sorted }
-    (pv, stats) => {
-      val bands: Iterable[Int] =
-        pv.collectFirst { case (k, v) if k.equalsIgnoreCase("band") => v }
-          .flatMap(v => scala.util.Try(v.toInt).toOption)
-          .map(Seq(_))
-          .getOrElse(stats.get("band") match {
-            case Some((mn, mx)) => mn.toInt to mx.toInt
-            case None => byBand.keys
-          })
-      bands.exists(b => byBand.get(b).exists(arr =>
-        stats.get("bucket") match {
-          case Some((mn, mx)) => anyKeyInRange(arr, mn, mx)
-          case None => true
-        }))
+  /** Both relations of the table at `path`, sigs first. */
+  private def sigRelations(spark: org.apache.spark.sql.SparkSession,
+      path: String): Seq[BucketStore.Relation] =
+    Seq(SigIds, SigParams(BucketStore.readMeta(spark, path)).buckets)
+
+  /** A signature table's construction parameters and the two
+    * derivations that read them: a document's signature and its
+    * banding. */
+  private final case class SigParams(
+      shingleLen: Int, numPerm: Int, bands: Int, maxBucketSize: Int,
+      multiProbe: Boolean) {
+    /** Band ids: one per band, or one per (band, omitted row) with
+      * multi-probe. */
+    def bandCount: Int = if (multiProbe) numPerm else bands
+    def buckets: BucketStore.Relation = sigBuckets(bandCount)
+
+    /** (id, sig) for every token-ful document of `df`. */
+    def sigs(df: DataFrame, idCol: String, textCol: String): DataFrame = df
+      .select(col(idCol).as("id"),
+        shingleHashes(col(textCol), shingleLen).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .select(col("id"), minhashSignature(col("sh"), numPerm).as("sig"))
+
+    /** (id, band, bucket) for every band key of the (id, sig) rows. */
+    def banded(sigs: DataFrame): DataFrame = {
+      val rowsPerBand = numPerm / bands
+      val fn =
+        if (multiProbe) bandBucketsMultiProbe(col("sig"), bands, rowsPerBand)
+        else bandBuckets(col("sig"), bands, rowsPerBand)
+      sigs.select(col("id"), explode(fn).as("bb"))
+        .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
     }
   }
 
-  /** Driver-side file pruning of a banded bucket store by the probe's
-    * touched `(band, bucket)` keys — the serving-path scan bound: with
-    * the bucket relations partitioned by band and range-clustered by
-    * bucket ([[writeSignatureTable]]), a batch touching K keys reads
-    * O(K) bucket files however large the corpus relation grows,
-    * instead of scanning it end to end. The pruned scan is a
-    * conservative SUPERSET (files without stats survive; legacy
-    * unpartitioned generations scan fully), so the caller's exact
-    * broadcast semi-join downstream is unchanged — this prunes BYTES,
-    * never rows. Catalyst's own DPP additionally prunes the band
-    * partitions through the semi-join (PlanSpec pins it); this covers
-    * the file-in-partition granularity DPP cannot reach on V1 sources. */
-  /** The production bucket-probe plan: file-pruned scan of a banded
-    * bucket relation semi-joined (broadcast) on the probe's touched
-    * keys. Package-visible so PlanSpec pins the REAL serving plan —
-    * the semi-join must reach the scan as a `dynamicpruningexpression`
-    * partition filter on `band` (file skipping at partition
-    * granularity even when the driver-side key prune fell back).
-    *
-    * The touched-key plan is evaluated ONCE: the same collected rows
-    * drive both the driver-side file prune and (as a local relation)
-    * the exact semi-join — re-evaluating the distributed plan for the
-    * broadcast would repeat its distinct shuffle on every probe,
-    * append occupancy count and Hamming probe. Probes touching more
-    * keys than [[MaxProbeKeys]] (or legacy/stat-less stores) fall back
-    * to the distributed broadcast, where the scan-side bound comes
-    * from DPP alone. */
-  private[graft] def corpusBucketProbe(
-      snap: Store.Snap, touched: DataFrame): DataFrame = {
-    // `band >= 0` is a construction invariant of every banding scheme
-    // in this file — restating it HERE (on both the local and the
-    // fallback probe side) is what makes Catalyst plan the dynamic
-    // partition prune: the touched relation is usually a projection
-    // over a CACHED batch, whose internal filters an InMemoryRelation
-    // hides from PartitionPruning's selectivity check; without a
-    // visible selective predicate the rule never inserts the band
-    // subquery. Semantically a no-op, plan-wise the DPP trigger
-    // (PlanSpec pins the resulting PartitionFilters).
-    val probeKeys = touched.filter(col("band") >= 0)
-      .select(col("band"), col("bucket"))
-    if (snap.legacy || snap.files.isEmpty)
-      return snap.df.join(broadcast(probeKeys),
-        Seq("band", "bucket"), "left_semi")
-    collectBucketKeys(probeKeys) match {
-      case None =>
-        snap.df.join(broadcast(probeKeys), Seq("band", "bucket"), "left_semi")
-      case Some(keys) =>
-        corpusBucketProbeCollected(touched.sparkSession, snap, keys)
-    }
+  private object SigParams {
+    /** The parameters pinned in a table's meta (older tables without
+      * the `multi_probe` column band plain). */
+    def apply(meta: org.apache.spark.sql.Row): SigParams = SigParams(
+      meta.getAs[Int]("shingle_len"), meta.getAs[Int]("num_perm"),
+      meta.getAs[Int]("bands"), meta.getAs[Int]("max_bucket_size"),
+      meta.schema.fieldNames.contains("multi_probe") &&
+        meta.getAs[Boolean]("multi_probe"))
   }
-
-  /** The collected (band, bucket) key rows of one probe — gathered
-    * ONCE on the driver and reused by every phase of an ingest batch
-    * (the driver-side file prune, the exact local-relation semi-join,
-    * and the append's occupancy count), so the touched-key plan never
-    * re-executes per phase. None = the batch touches more than
-    * [[MaxProbeKeys]] keys and the probe falls back to the distributed
-    * broadcast path. */
-  private[graft] final case class ProbeKeys(
-      rows: Array[org.apache.spark.sql.Row],
-      schema: org.apache.spark.sql.types.StructType)
-
-  private def collectBucketKeys(probeKeys: DataFrame): Option[ProbeKeys] = {
-    val rows = probeKeys.limit(MaxProbeKeys + 1).collect()
-    if (rows.length > MaxProbeKeys) None
-    else Some(ProbeKeys(rows, probeKeys.schema))
-  }
-
-  /** [[corpusBucketProbe]]'s plan over keys a caller ALREADY collected
-    * — pruned scan + local-relation broadcast semi-join, zero
-    * additional driver actions. Conservative like the parent: a
-    * SUPERSET key set only keeps more files; the semi-join still
-    * bounds the rows. */
-  private def corpusBucketProbeCollected(
-      spark: org.apache.spark.sql.SparkSession, snap: Store.Snap,
-      keys: ProbeKeys): DataFrame = {
-    val localKeys = spark
-      .createDataFrame(java.util.Arrays.asList(keys.rows: _*), keys.schema)
-      .filter(col("band") >= 0)
-    if (snap.legacy || snap.files.isEmpty)
-      return snap.df.join(broadcast(localKeys),
-        Seq("band", "bucket"), "left_semi")
-    val ks = keys.rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-      .map(r => (r.getInt(0), r.getLong(1)))
-    val pruned = Store.pruneFiles(snap)(bucketKeepFn(ks))
-    pruned.join(broadcast(localKeys), Seq("band", "bucket"), "left_semi")
-  }
-
-  /** The [[corpusBucketProbe]] file prune for single-long-keyed relations (paragraph
-    * hashes, signature ids): keep only files whose recorded `[min,
-    * max]` for `keyCol` intersects the probe's key set. */
-  private def pruneLongKeyScan(
-      snap: Store.Snap, keyCol: String, keys: DataFrame): DataFrame = {
-    if (snap.legacy || snap.files.isEmpty) return snap.df
-    val rows = keys.select(col(keyCol)).limit(MaxProbeKeys + 1).collect()
-    if (rows.length > MaxProbeKeys) return snap.df
-    pruneLongKeyScanCollected(snap, keyCol,
-      rows.filter(!_.isNullAt(0)).map(_.getLong(0)).sorted)
-  }
-
-  /** [[pruneLongKeyScan]] over keys a caller already collected (the
-    * fused ingest path) — zero additional driver actions. */
-  private def pruneLongKeyScanCollected(
-      snap: Store.Snap, keyCol: String, sorted: Array[Long]): DataFrame = {
-    if (snap.legacy || snap.files.isEmpty) return snap.df
-    Store.pruneFiles(snap)(longKeepFn(keyCol, sorted))
-  }
-
-  /** The per-file keep decision for a relation range-clustered on one
-    * long key: keep the file if its recorded `[min, max]` for `keyCol`
-    * holds a probe key; a file without stats is kept. */
-  private def longKeepFn(keyCol: String, sorted: Array[Long])
-      : (Map[String, String], Map[String, (Long, Long)]) => Boolean =
-    (_, stats) => stats.get(keyCol) match {
-      case Some((mn, mx)) => anyKeyInRange(sorted, mn, mx)
-      case None => true
-    }
 
   /** Materialize the MinHash signature/bucket relations for a corpus —
     * the "build the expensive structure once, reuse it" contract of the
@@ -1513,7 +1399,7 @@ object Dedup {
     * `id`, and the [[Store]] manifest records each file's key range —
     * so a probe touching K `(band, bucket)` keys reads O(K) bucket
     * files (Catalyst DPP prunes band partitions through the semi-join;
-    * [[corpusBucketProbe]] prunes files inside them), and the candidate
+    * [[BucketStore.probe]] prunes files inside them), and the candidate
     * sig fetch reads only the files whose id range holds a candidate.
     * Per-batch probe BYTES are ∝ batch, never corpus. Both mutable
     * relations live under the [[Store]] generation/manifest layout
@@ -1539,48 +1425,17 @@ object Dedup {
     require(!multiProbe || rowsPerBand >= 2,
       "multiProbe needs rowsPerBand >= 2: omitting the only row of a " +
         "1-row band would bucket every document together")
-    val sigs = df
-      .select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), minhashSignature(col("sh"), numPerm).as("sig"))
+    val p = SigParams(shingleLen, numPerm, bands, maxBucketSize, multiProbe)
+    val sigs = p.sigs(df, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Store.create(sigs, sigTableSigs(path), clusterBy = Seq("id"))
-    val bucketFn =
-      if (multiProbe) bandBucketsMultiProbe(col("sig"), bands, rowsPerBand)
-      else bandBuckets(col("sig"), bands, rowsPerBand)
-    val buckets = sigs
-      .select(col("id"), explode(bucketFn).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    // persisted so the range-clustered write's sampling pass re-reads a
-    // cache instead of replaying the occupancy window over the corpus
-    // bucket is xxhash64 — uniform by construction, so the clustered
-    // write derives its range placement with ZERO sampling: the plan
-    // (occupancy-cap window included) executes exactly once, needing
-    // neither the range partitioner's re-read nor a cache to absorb it
-    val capped = buckets
-      .withColumn("__graft_bsz",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bucket"))))
-      .filter(col("__graft_bsz") <= maxBucketSize)
-      .drop("__graft_bsz")
-    Store.create(capped, sigTableBuckets(path),
-      partitionCols = Seq("band"), clusterBy = Seq("bucket"),
-      splits = Some(Store.hashKeySplits(col("bucket"),
-        Some((col("band"), if (multiProbe) numPerm else bands)))))
+    SigIds.create(sigs, path)
+    p.buckets.create(BucketStore.capBuckets(p.banded(sigs), maxBucketSize), path)
     sigs.unpersist(blocking = false)
-    df.sparkSession.range(1)
-      .select(lit(shingleLen).as("shingle_len"), lit(numPerm).as("num_perm"),
-        lit(bands).as("bands"), lit(maxBucketSize).as("max_bucket_size"),
-        lit(multiProbe).as("multi_probe"))
-      .write.mode("overwrite").parquet(sigTableMeta(path))
+    BucketStore.writeMeta(df.sparkSession, path,
+      lit(shingleLen).as("shingle_len"), lit(numPerm).as("num_perm"),
+      lit(bands).as("bands"), lit(maxBucketSize).as("max_bucket_size"),
+      lit(multiProbe).as("multi_probe"))
   }
-
-  /** The table's banding choice, from its own meta (older tables
-    * without the column band plain). */
-  private def metaMultiProbe(meta: org.apache.spark.sql.Row): Boolean =
-    meta.schema.fieldNames.contains("multi_probe") &&
-      meta.getAs[Boolean]("multi_probe")
 
   /** Monotone partition index over the composite (band, hash-bucket)
     * order for a batch append's few-file range shaping: global
@@ -1620,7 +1475,7 @@ object Dedup {
     *
     * Scale shape: signatures are computed for the batch only; the
     * stored bucket relation is FILE-PRUNED to the batch's touched
-    * (band, bucket) keys before the scan is planned ([[corpusBucketProbe]]
+    * (band, bucket) keys before the scan is planned ([[BucketStore.probe]]
     * — bytes read ∝ batch on the partitioned/clustered layout) and
     * reduced with a broadcast semi-join — no corpus-wide shuffle, no
     * corpus signature recompute; corpus signatures are fetched only
@@ -1670,62 +1525,28 @@ object Dedup {
   /** Open a persisted signature table once for repeated probes. */
   def openSignatureTable(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): SigTableHandle =
-    SigTableHandle(
-      Store.readMetaRow(spark, sigTableMeta(path)),
-      Store.snapshot(spark, sigTableSigs(path)),
-      Store.snapshot(spark, sigTableBuckets(path)))
+      path: String): SigTableHandle = {
+    val meta = BucketStore.readMeta(spark, path)
+    SigTableHandle(meta, SigIds.snapshot(spark, path),
+      SigParams(meta).buckets.snapshot(spark, path))
+  }
 
   /** The probe-side file-skipping arithmetic for one batch against an
     * open signature table, WITHOUT running the dedup: derives the
     * batch's touched (band, bucket) keys exactly as
     * [[nearDedupIncremental]] does (minus the bucket-size cap, which
-    * can only SHRINK the touched set) and returns [[probeFootprint]]'s
-    * `(keptFiles, keptBytes, totalFiles, totalBytes)` of the
-    * bucket-relation scan after [[corpusBucketProbe]]'s file-prune
-    * decision. ScaleShapeSpec asserts the kept side stays flat as the
-    * corpus grows 8× with the batch fixed. */
+    * can only SHRINK the touched set) and returns
+    * [[BucketStore.footprint]]'s `(keptFiles, keptBytes, totalFiles,
+    * totalBytes)` of the bucket-relation scan after the probe's
+    * file-prune decision. ScaleShapeSpec asserts the kept side stays
+    * flat as the corpus grows 8× with the batch fixed. */
   private[graft] def probeFileFootprint(
       h: SigTableHandle, incoming: DataFrame,
       idCol: String, textCol: String): (Long, Long, Long, Long) = {
-    val meta = h.meta
-    val shingleLen = meta.getAs[Int]("shingle_len")
-    val numPerm = meta.getAs[Int]("num_perm")
-    val bands = meta.getAs[Int]("bands")
-    val rowsPerBand = numPerm / bands
-    val fn =
-      if (metaMultiProbe(meta))
-        bandBucketsMultiProbe(col("sig"), bands, rowsPerBand)
-      else bandBuckets(col("sig"), bands, rowsPerBand)
-    val touched = incoming
-      .select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(minhashSignature(col("sh"), numPerm).as("sig"))
-      .select(explode(fn).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .distinct()
-    probeFootprint(h.bucketsSnap, touched)(rows =>
-      bucketKeepFn(rows.map(r => (r.getInt(0), r.getLong(1)))))
-  }
-
-  /** The shared tail of the `*ProbeFootprint` measurements: collect the
-    * batch's distinct touched keys, build the store's per-file keep
-    * decision from them, and return `(keptFiles, keptBytes,
-    * totalFiles, totalBytes)` of the pruned scan. A batch touching more
-    * than [[MaxProbeKeys]] keys is refused: the real probe skips the
-    * prune there, so there is no pruned scan to measure. */
-  private def probeFootprint(snap: Store.Snap, touched: DataFrame)(
-      keep: Array[org.apache.spark.sql.Row] =>
-        (Map[String, String], Map[String, (Long, Long)]) => Boolean)
-      : (Long, Long, Long, Long) = {
-    val rows = touched.limit(MaxProbeKeys + 1).collect()
-    require(rows.length <= MaxProbeKeys,
-      s"probe footprint measures the pruned path, and this batch " +
-        s"touches > $MaxProbeKeys keys, where the probe falls back to " +
-        s"the full scan; measure a smaller batch")
-    val p = Store.prunedScan(snap)(keep(rows))
-    (p.keptFiles, p.keptBytes, p.totalFiles, p.totalBytes)
+    val p = SigParams(h.meta)
+    BucketStore.footprint(h.bucketsSnap, BucketStore.BandBucket,
+      p.banded(p.sigs(incoming, idCol, textCol))
+        .select(col("band"), col("bucket")).distinct())
   }
 
   /** Everything one probe computes that the SAME batch's append phase
@@ -1736,7 +1557,7 @@ object Dedup {
     * caller owns the two persists. */
   private final case class IncrementalProbe(
       survivors: DataFrame, batchSigs: DataFrame,
-      batchBuckets: DataFrame, touched: Option[ProbeKeys])
+      batchBuckets: DataFrame, touched: Option[BucketStore.ProbeKeys])
 
   /** [[nearDedupIncremental]] against an already-open [[SigTableHandle]]. */
   def nearDedupIncremental(
@@ -1754,32 +1575,11 @@ object Dedup {
       h: SigTableHandle,
       incoming: DataFrame, idCol: String, textCol: String,
       threshold: Double, pick: Seq[Column]): IncrementalProbe = {
-    val meta = h.meta
-    val shingleLen = meta.getAs[Int]("shingle_len")
-    val numPerm = meta.getAs[Int]("num_perm")
-    val bands = meta.getAs[Int]("bands")
-    val maxBucketSize = meta.getAs[Int]("max_bucket_size")
-    val rowsPerBand = numPerm / bands
-    val mp = metaMultiProbe(meta)
-
-    val batch = incoming
-      .select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), minhashSignature(col("sh"), numPerm).as("sig"))
+    val p = SigParams(h.meta)
+    val batch = p.sigs(incoming, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val batchBucketFn =
-      if (mp) bandBucketsMultiProbe(col("sig"), bands, rowsPerBand)
-      else bandBuckets(col("sig"), bands, rowsPerBand)
-    val batchBucketsRaw = batch
-      .select(col("id"), explode(batchBucketFn).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val batchBuckets = batchBucketsRaw
-      .withColumn("__graft_bsz",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bucket"))))
-      .filter(col("__graft_bsz") <= maxBucketSize)
-      .drop("__graft_bsz")
+    val batchBucketsRaw = p.banded(batch)
+    val batchBuckets = BucketStore.capBuckets(batchBucketsRaw, p.maxBucketSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // corpus rows in buckets the batch touches: file-pruned scan +
@@ -1792,16 +1592,8 @@ object Dedup {
     // the append's survivor keys, so the fused ingest path reuses ONE
     // collect for every phase — an over-cap batch bucket must still
     // see its true stored occupancy at append time.
-    val touchedKeys =
-      if (h.bucketsSnap.legacy || h.bucketsSnap.files.isEmpty) None
-      else collectBucketKeys(batchBucketsRaw.filter(col("band") >= 0)
-        .select(col("band"), col("bucket")).distinct())
-    val corpusMatch = touchedKeys match {
-      case Some(k) =>
-        corpusBucketProbeCollected(incoming.sparkSession, h.bucketsSnap, k)
-      case None => corpusBucketProbe(h.bucketsSnap,
-        batchBuckets.select(col("band"), col("bucket")).distinct())
-    }
+    val (corpusMatch, touchedKeys) =
+      BucketStore.bandProbe(h.bucketsSnap, batchBucketsRaw, batchBuckets)
 
     // candidates: batch×batch (self-join) ∪ batch×corpus — id spaces
     // are disjoint, so the two relations cannot share a pair, and they
@@ -1827,7 +1619,7 @@ object Dedup {
       .join(sigsB, "id_b")
       .withColumn("est_jaccard",
         graft.plans.native.sigEqCount(col("sig_a"), col("sig_b"))
-          .cast("double") / lit(numPerm.toDouble))
+          .cast("double") / lit(p.numPerm.toDouble))
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"))
     // the candidate corpus-id set drives the sig relation's driver-side
@@ -1836,24 +1628,15 @@ object Dedup {
     // local relation — the former eager checkpoint paid one action to
     // materialize and a second inside the prune's own collect.
     // Over-limit (or non-long-id) batches keep the checkpointed path.
-    val spark0 = incoming.sparkSession
     val idIsLong = incoming.schema(idCol).dataType ==
       org.apache.spark.sql.types.LongType
     val neededPlan = crossPairs.select(col("id_b").as("id")).distinct()
-    val neededRows =
-      if (!idIsLong) null
-      else neededPlan.limit(MaxProbeKeys + 1).collect()
     val corpusSigs =
-      if (neededRows != null && neededRows.length <= MaxProbeKeys) {
-        val ks = neededRows.filter(!_.isNullAt(0)).map(_.getLong(0)).sorted
-        val local = spark0.createDataFrame(
-          java.util.Arrays.asList(neededRows: _*), neededPlan.schema)
-        pruneLongKeyScanCollected(h.sigsSnap, "id", ks)
-          .join(broadcast(local), Seq("id"), "left_semi")
-      } else {
-        val neededCorpus = neededPlan.localCheckpoint(true)
-        pruneLongKeyScan(h.sigsSnap, "id", neededCorpus)
-          .join(broadcast(neededCorpus), Seq("id"), "left_semi")
+      (if (idIsLong) BucketStore.collectKeys(neededPlan) else None) match {
+        case Some(k) => BucketStore.probeCollected(
+          incoming.sparkSession, h.sigsSnap, SigIdKey, k)
+        case None => BucketStore.probe(
+          h.sigsSnap, SigIdKey, neededPlan.localCheckpoint(true))
       }
     val edgesBatch = estimate(batchPairs,
       batch.select(col("id").as("id_b"), col("sig").as("sig_b")))
@@ -1925,13 +1708,9 @@ object Dedup {
     * shingle/permutation settings.
     *
     * The write-time invariant "no stored bucket exceeds
-    * `max_bucket_size`" is maintained incrementally: the stored
-    * occupancy of the buckets this batch touches is counted (broadcast
-    * semi-join — cost ∝ batch, not corpus) and batch rows are admitted
-    * into a bucket only up to the remaining headroom (deterministic
-    * order: smallest id first). A bucket already at the cap accepts
-    * nothing — the same documented recall loss as write-time capping,
-    * never a quadratic blow-up.
+    * `max_bucket_size`" is maintained incrementally by headroom-capped
+    * admission ([[BucketStore.appendBanded]]): batch rows enter a
+    * bucket only up to its remaining headroom, smallest id first.
     *
     * Caller contract: ids disjoint from everything already in the
     * table (a re-appended id would double its rows in both relations),
@@ -1944,31 +1723,13 @@ object Dedup {
     * replayed batch restores them). */
   def appendToSignatureTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, textCol: String): Unit =
-    appendToSignatureTable(spark, path, batch, idCol, textCol,
-      Store.readMetaRow(spark, sigTableMeta(path)))
-
-  /** [[appendToSignatureTable]] with the table's meta row already in
-    * hand — the ingest chain probes and appends against the SAME path
-    * in one call, so it reads the immutable meta once instead of per
-    * phase (snapshots still re-resolve per phase: only the
-    * construction parameters are immutable, the fence is not). */
-  private def appendToSignatureTable(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      meta: org.apache.spark.sql.Row): Unit = {
-    val shingleLen = meta.getAs[Int]("shingle_len")
-    val numPerm = meta.getAs[Int]("num_perm")
-    val bands = meta.getAs[Int]("bands")
-    val maxBucketSize = meta.getAs[Int]("max_bucket_size")
-    val sigs = batch
-      .select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), minhashSignature(col("sh"), numPerm).as("sig"))
+      batch: DataFrame, idCol: String, textCol: String): Unit = {
+    val meta = BucketStore.readMeta(spark, path)
+    val p = SigParams(meta)
+    val sigs = p.sigs(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     appendSigsAndBuckets(spark, path, meta, sigs,
-      Store.snapshot(spark, sigTableBuckets(path)), touched = None)
+      p.buckets.snapshot(spark, path), touched = None)
     sigs.unpersist(blocking = false)
   }
 
@@ -1982,68 +1743,11 @@ object Dedup {
   private def appendSigsAndBuckets(
       spark: org.apache.spark.sql.SparkSession, path: String,
       meta: org.apache.spark.sql.Row, sigs: DataFrame,
-      bktSnap: Store.Snap, touched: Option[ProbeKeys]): Unit = {
-    val numPerm = meta.getAs[Int]("num_perm")
-    val bands = meta.getAs[Int]("bands")
-    val maxBucketSize = meta.getAs[Int]("max_bucket_size")
-    Store.append(spark, sigTableSigs(path)) { dir =>
-      // RANGE-shaped batch files carry tight, disjoint id ranges in
-      // their footer stats, so the candidate sig fetch keeps skipping
-      // appended files too (sortWithinPartitions alone would leave
-      // every file spanning the whole batch range on a hash-partitioned
-      // input — each file's [min,max] then prunes nothing); placed by
-      // an in-plan ntile pid, not repartitionByRange, whose sampling
-      // pass would execute the batch plan once more per append
-      Store.placeBatchByKey(sigs, "id", 4).sortWithinPartitions("id")
-        .write.mode("append").parquet(dir)
-    }
-    val appendBucketFn =
-      if (metaMultiProbe(meta))
-        bandBucketsMultiProbe(col("sig"), bands, numPerm / bands)
-      else bandBuckets(col("sig"), bands, numPerm / bands)
-    val buckets = sigs
-      .select(col("id"), explode(appendBucketFn).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val storedRows = touched match {
-      // reuse of the probe-time snapshot + keys is fenced: if anything
-      // committed to the bucket relation between this batch's probe and
-      // append (a violated single-ingest-loop contract), occupancy
-      // counted against the stale snapshot would silently undercount
-      // and break the max_bucket_size invariant — re-resolve and run
-      // the distributed probe instead (ADVICE r15). The check is one
-      // directory listing, no Spark job.
-      case Some(k) if !Store.changedSince(spark, bktSnap) =>
-        corpusBucketProbeCollected(spark, bktSnap, k)
-      case Some(_) => corpusBucketProbe(
-        Store.snapshot(spark, sigTableBuckets(path)),
-        buckets.select(col("band"), col("bucket")).distinct())
-      case None => corpusBucketProbe(bktSnap,
-        buckets.select(col("band"), col("bucket")).distinct())
-    }
-    val stored = storedRows
-      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("__stored"))
-    val partitioned = bktSnap.partitionSchema.fieldNames.nonEmpty
-    Store.append(spark, sigTableBuckets(path)) { dir =>
-      val admitted = buckets
-        .withColumn("__rn",
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("band"), col("bucket")).orderBy(col("id"))))
-        .join(stored, Seq("band", "bucket"), "left")
-        .filter(coalesce(col("__stored"), lit(0L)) + col("__rn") <= maxBucketSize)
-        .select(col("id"), col("band"), col("bucket"))
-      // batch-sized range shaping: a few files per append, each with a
-      // tight (band, bucket) footprint, written into the band partition
-      // dirs when the store is partitioned (legacy stores stay flat);
-      // placed by arithmetic, not sampling — the sample would run the
-      // occupancy window + store probe a second time per append
-      val bandCount = if (metaMultiProbe(meta)) numPerm else bands
-      val shaped = Store.placeByPid(admitted,
-          bandBucketSlot(col("band"), col("bucket"), bandCount, 4), 4,
-          Seq(col("band"), col("bucket")))
-        .sortWithinPartitions(col("band"), col("bucket"))
-      val w = shaped.write.mode("append")
-      (if (partitioned) w.partitionBy("band") else w).parquet(dir)
-    }
+      bktSnap: Store.Snap, touched: Option[BucketStore.ProbeKeys]): Unit = {
+    val p = SigParams(meta)
+    SigIds.append(spark, path)(sigs)
+    BucketStore.appendBanded(spark, path, p.buckets, p.banded(sigs),
+      p.maxBucketSize, bktSnap, touched)
   }
 
   /** The full production ingest step: dedup `incoming` against the
@@ -2227,8 +1931,32 @@ object Dedup {
       .cast("int")
   }
 
-  private def hamTableMeta(path: String) = s"$path/meta"
-  private def hamTableBuckets(path: String) = s"$path/buckets"
+  /** The Hamming table's one relation: banded (id, sig, band, bucket)
+    * rows, placed by [[hammingSlot]] over the table's `nBands` at
+    * create, append and rewrite alike. */
+  private def hamBuckets(nBands: Int): BucketStore.Relation =
+    BucketStore.banded(hammingSlot(_, _, nBands, _))(_ => Some(
+      Store.RangeSplits(n =>
+        (hammingSlot(col("band"), col("bucket"), nBands, n), n))))
+
+  private def hamBuckets(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): BucketStore.Relation =
+    hamBuckets(hamBands(BucketStore.readMeta(spark, path)))
+
+  /** The table's band count, from its meta. */
+  private def hamBands(meta: org.apache.spark.sql.Row): Int =
+    meta.getAs[Int]("max_hamming") + 1
+
+  /** (id, sig, band, bucket): the non-null 64-bit signatures of
+    * `sigCol`, one row per (band, bucket) key `bandsFn` gives them. */
+  private def hamBanded(df: DataFrame, idCol: String, sigCol: String,
+      bandsFn: Column => Column): DataFrame =
+    df.select(col(idCol).as("id"), col(sigCol).cast("long").as("sig"))
+      .filter(col("sig").isNotNull)
+      .select(col("id"), col("sig"), explode(bandsFn(col("sig"))).as("bb"))
+      .select(col("id"), col("sig"),
+        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
 
   /** Persist a Hamming signature table for PRECOMPUTED 64-bit
     * signatures (image dHash, audio energy hash, SimHash) — the media
@@ -2237,7 +1965,10 @@ object Dedup {
     * long, so storing it beside the bucket erases the second join the
     * text table needs) plus a meta relation pinning the construction
     * parameters. Buckets over `maxBucketSize` are dropped at write
-    * time (the documented recall loss, never a blow-up). */
+    * time (the documented recall loss, never a blow-up). Band-
+    * partitioned and bucket-clustered, so incremental probes read
+    * O(touched keys) files; the placement is arithmetic, so the plan
+    * (window cap included) executes exactly once. */
   def writeHammingTable(
       sigs: DataFrame, idCol: String, sigCol: String, path: String,
       maxHamming: Int = 3, maxBucketSize: Int = 1000): Unit = {
@@ -2245,32 +1976,12 @@ object Dedup {
       s"maxHamming must be in [0, 15], got $maxHamming")
     require(maxBucketSize > 0, "maxBucketSize must be > 0")
     val nBands = maxHamming + 1
-    // persisted so the range-clustered write's sampling pass re-reads a
-    // cache instead of replaying the occupancy window (the
-    // writeSignatureTable rationale); band-partitioned + bucket-
-    // clustered so incremental probes read O(touched keys) files
-    val capped = sigs
-      .select(col(idCol).as("id"), col(sigCol).cast("long").as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("id"), col("sig"),
-        explode(hammingBands(col("sig"), nBands)).as("bb"))
-      .select(col("id"), col("sig"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .withColumn("__bsz",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bucket"))))
-      .filter(col("__bsz") <= maxBucketSize)
-      .drop("__bsz")
-    // zero-sampling placement: the plan (window cap included) executes
-    // exactly once, so it no longer needs a cache to absorb a re-read
-    Store.create(capped, hamTableBuckets(path),
-      partitionCols = Seq("band"), clusterBy = Seq("bucket"),
-      splits = Some(Store.RangeSplits(n =>
-        (hammingSlot(col("band"), col("bucket"), nBands, n), n))))
-    sigs.sparkSession.range(1)
-      .select(lit(maxHamming).as("max_hamming"),
-        lit(maxBucketSize).as("max_bucket_size"))
-      .write.mode("overwrite").parquet(hamTableMeta(path))
+    hamBuckets(nBands).create(BucketStore.capBuckets(
+      hamBanded(sigs, idCol, sigCol, hammingBands(_, nBands)),
+      maxBucketSize), path)
+    BucketStore.writeMeta(sigs.sparkSession, path,
+      lit(maxHamming).as("max_hamming"),
+      lit(maxBucketSize).as("max_bucket_size"))
   }
 
   /** Incremental media near-dup: an incoming batch of 64-bit
@@ -2316,10 +2027,10 @@ object Dedup {
   /** Open a persisted Hamming table once for repeated probes. */
   def openHammingTable(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): HamTableHandle =
-    HamTableHandle(
-      Store.readMetaRow(spark, hamTableMeta(path)),
-      Store.snapshot(spark, hamTableBuckets(path)))
+      path: String): HamTableHandle = {
+    val meta = BucketStore.readMeta(spark, path)
+    HamTableHandle(meta, hamBuckets(hamBands(meta)).snapshot(spark, path))
+  }
 
   /** [[probeFileFootprint]] for a persisted Hamming table: the batch's
     * touched (band, bucket) keys against the stored bucket relation's
@@ -2327,15 +2038,11 @@ object Dedup {
   private[graft] def hammingProbeFootprint(
       h: HamTableHandle, incoming: DataFrame,
       sigCol: String): (Long, Long, Long, Long) = {
-    val nBands = h.meta.getAs[Int]("max_hamming") + 1
-    val touched = incoming
-      .select(col(sigCol).cast("long").as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(explode(hammingBands(col("sig"), nBands)).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .distinct()
-    probeFootprint(h.bucketsSnap, touched)(rows =>
-      bucketKeepFn(rows.map(r => (r.getInt(0), r.getLong(1)))))
+    val nBands = hamBands(h.meta)
+    // the id column is not read: the footprint only needs the keys
+    BucketStore.footprint(h.bucketsSnap, BucketStore.BandBucket,
+      hamBanded(incoming, sigCol, sigCol, hammingBands(_, nBands))
+        .select(col("band"), col("bucket")).distinct())
   }
 
   /** [[hammingNearDupsIncremental]] against an already-open
@@ -2354,9 +2061,8 @@ object Dedup {
       h: HamTableHandle,
       incoming: DataFrame, idCol: String, sigCol: String,
       multiProbe: Boolean, radius: Option[Int])
-      : (DataFrame, Option[ProbeKeys]) = {
-    val meta = h.meta
-    val maxHamming = meta.getAs[Int]("max_hamming")
+      : (DataFrame, Option[BucketStore.ProbeKeys]) = {
+    val maxHamming = h.meta.getAs[Int]("max_hamming")
     val nBands = maxHamming + 1
     val r = radius.getOrElse(maxHamming)
     val complete = if (multiProbe) 2 * nBands - 1 else nBands - 1
@@ -2366,25 +2072,10 @@ object Dedup {
         (if (multiProbe) ", one-bit probes)"
          else ") — enable multiProbe for radii up to " +
            s"${2 * nBands - 1}"))
-    val probeBands =
-      if (multiProbe) hammingBandsMultiProbe(col("sig"), nBands)
-      else hammingBands(col("sig"), nBands)
-    val incB = incoming
-      .select(col(idCol).as("id"), col(sigCol).cast("long").as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("id"), col("sig"), explode(probeBands).as("bb"))
-      .select(col("id"), col("sig"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val touchedKeys =
-      if (h.bucketsSnap.legacy || h.bucketsSnap.files.isEmpty) None
-      else collectBucketKeys(incB.filter(col("band") >= 0)
-        .select(col("band"), col("bucket")).distinct())
-    val stored = touchedKeys match {
-      case Some(k) =>
-        corpusBucketProbeCollected(incoming.sparkSession, h.bucketsSnap, k)
-      case None => corpusBucketProbe(h.bucketsSnap,
-        incB.select(col("band"), col("bucket")).distinct())
-    }
+    val incB = hamBanded(incoming, idCol, sigCol,
+      if (multiProbe) hammingBandsMultiProbe(_, nBands)
+      else hammingBands(_, nBands))
+    val (stored, touchedKeys) = BucketStore.bandProbe(h.bucketsSnap, incB, incB)
     val matches = incB.join(stored.select(col("band"), col("bucket"),
         col("id").as("corpus_id"), col("sig").as("corpus_sig")),
         Seq("band", "bucket"))
@@ -2416,76 +2107,29 @@ object Dedup {
   /** Append a batch's signatures to a persisted Hamming table — the
     * maintenance half of the incremental media-ingest loop, with the
     * same headroom-capped bucket admission as
-    * [[appendToSignatureTable]]: stored occupancy of the touched
-    * buckets is counted (broadcast semi-join, cost ∝ batch) and batch
-    * rows are admitted only up to the remaining headroom (smallest id
-    * first). Caller contract: ids disjoint from the table, and batch
-    * must not itself read from `path`. */
+    * [[appendToSignatureTable]] ([[BucketStore.appendBanded]]).
+    * Caller contract: ids disjoint from the table, and batch must not
+    * itself read from `path`. */
   def appendToHammingTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, sigCol: String): Unit =
-    appendToHammingTable(spark, path, batch, idCol, sigCol,
-      Store.readMetaRow(spark, hamTableMeta(path)))
-
-  private def appendToHammingTable(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, sigCol: String,
-      meta: org.apache.spark.sql.Row): Unit =
+      batch: DataFrame, idCol: String, sigCol: String): Unit = {
+    val meta = BucketStore.readMeta(spark, path)
     appendHammingBuckets(spark, path, batch, idCol, sigCol, meta,
-      Store.snapshot(spark, hamTableBuckets(path)), touched = None)
+      hamBuckets(hamBands(meta)).snapshot(spark, path), touched = None)
+  }
 
   /** The write half of a Hamming-table append: `bktSnap` is the
     * snapshot occupancy counts against and `touched` optionally reuses
-    * a probe's already-collected key superset (the fused ingest path —
-    * zero new driver actions here; [[Store.append]] still re-lists and
-    * fences the commit). */
+    * a probe's already-collected key superset (the fused ingest path). */
   private def appendHammingBuckets(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, sigCol: String,
       meta: org.apache.spark.sql.Row,
-      bktSnap: Store.Snap, touched: Option[ProbeKeys]): Unit = {
-    val maxHamming = meta.getAs[Int]("max_hamming")
-    val maxBucketSize = meta.getAs[Int]("max_bucket_size")
-    val incB = batch
-      .select(col(idCol).as("id"), col(sigCol).cast("long").as("sig"))
-      .filter(col("sig").isNotNull)
-      .select(col("id"), col("sig"),
-        explode(hammingBands(col("sig"), maxHamming + 1)).as("bb"))
-      .select(col("id"), col("sig"),
-        col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val storedRows = touched match {
-      // same fence as the signature-table append: stale probe snapshot
-      // (concurrent commit between phases) → fresh snapshot +
-      // distributed probe, so max_bucket_size holds instead of silently
-      // undercounting (ADVICE r15)
-      case Some(k) if !Store.changedSince(spark, bktSnap) =>
-        corpusBucketProbeCollected(spark, bktSnap, k)
-      case Some(_) => corpusBucketProbe(
-        Store.snapshot(spark, hamTableBuckets(path)),
-        incB.select(col("band"), col("bucket")).distinct())
-      case None => corpusBucketProbe(bktSnap,
-        incB.select(col("band"), col("bucket")).distinct())
-    }
-    val stored = storedRows
-      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("__stored"))
-    val partitioned = bktSnap.partitionSchema.fieldNames.nonEmpty
-    Store.append(spark, hamTableBuckets(path)) { dir =>
-      val admitted = incB
-        .withColumn("__rn",
-          row_number().over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("band"), col("bucket")).orderBy(col("id"))))
-        .join(stored, Seq("band", "bucket"), "left")
-        .filter(coalesce(col("__stored"), lit(0L)) + col("__rn") <= maxBucketSize)
-        .select(col("id"), col("sig"), col("band"), col("bucket"))
-      // placed by arithmetic, not sampling — the sample would run the
-      // occupancy window + store probe a second time per append
-      val shaped = Store.placeByPid(admitted,
-          hammingSlot(col("band"), col("bucket"), maxHamming + 1, 4), 4,
-          Seq(col("band"), col("bucket")))
-        .sortWithinPartitions(col("band"), col("bucket"))
-      val w = shaped.write.mode("append")
-      (if (partitioned) w.partitionBy("band") else w).parquet(dir)
-    }
+      bktSnap: Store.Snap, touched: Option[BucketStore.ProbeKeys]): Unit = {
+    val nBands = hamBands(meta)
+    BucketStore.appendBanded(spark, path, hamBuckets(nBands),
+      hamBanded(batch, idCol, sigCol, hammingBands(_, nBands)),
+      meta.getAs[Int]("max_bucket_size"), bktSnap, touched)
   }
 
   /** Media-ingest step over a persisted Hamming table — the 64-bit-
@@ -2581,7 +2225,7 @@ object Dedup {
     * reference's Index has no delete: csvplus.go:655 persists a frozen
     * lookup; a standing ingest store additionally needs retirement).
     * Every `sigs` and `buckets` row whose id is in `retired` is
-    * dropped and both relations rewrite via [[Store.rewriteWithRetry]]
+    * dropped and both relations rewrite through [[BucketStore.retire]]
     * (new generation + atomic manifest flip — no rename, no headless
     * window — with bounded replay: a retire racing a stream of
     * appends re-derives from a fresh snapshot and converges instead
@@ -2622,89 +2266,38 @@ object Dedup {
     * @return number of stored documents removed */
   def retireFromSignatureTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      retired: DataFrame, idCol: String, numFiles: Int = 0): Long = {
-    val sigs0 = Store.read(spark, sigTableSigs(path))
-    val ids = Store.retireIds(sigs0, "id", retired, idCol)
-    // layout-preserving rewrites: sigs stay id-clustered, buckets stay
-    // band-partitioned + bucket-clustered, so probe file-skipping
-    // survives the takedown (legacy flat stores upgrade here); the
-    // removed count is taken inside the replay loop so it reflects the
-    // snapshot the commit actually applied to
-    var removed = 0L
-    // the removed COUNT only needs rows whose id is on the (tiny, by
-    // caller contract) takedown list: on the id-clustered layout the
-    // count scans O(list) files via the manifest stats instead of the
-    // whole store — the rewrite itself is inherently full-scan, but
-    // paying a second full scan just to report a count is not
-    val retiredKeys: Option[Array[Long]] =
-      if (sigs0.schema("id").dataType !=
-        org.apache.spark.sql.types.LongType) None
-      else {
-        val rows = ids.limit(MaxProbeKeys + 1).collect()
-        if (rows.length > MaxProbeKeys) None
-        else Some(rows.filter(!_.isNullAt(0)).map(_.getLong(0)).sorted)
-      }
-    // zero-sampling rewrites: id split points come from the snapshot's
-    // own manifest stats, bucket placement from hash arithmetic — the
-    // range partitioner would read the WHOLE store once more per
-    // relation just to re-learn its layout
-    Store.rewriteWithRetry(spark, sigTableSigs(path), numFiles,
-      clusterBy = Seq("id"),
-      splits = s => Store.statsSplits(s, "id")) { snap =>
-      val countScan = retiredKeys
-        .map(ks => pruneLongKeyScanCollected(snap, "id", ks))
-        .getOrElse(snap.df)
-      removed = countScan.join(broadcast(ids), Seq("id"), "left_semi").count()
-      snap.df.join(broadcast(ids), Seq("id"), "left_anti")
-    }
-    Store.rewriteWithRetry(spark, sigTableBuckets(path), numFiles,
-      partitionCols = Seq("band"), clusterBy = Seq("bucket"),
-      splits = s => Store.partitionBlockCount(s, "band").map(c =>
-        Store.hashKeySplits(col("bucket"), Some((col("band"), c))))) { snap =>
-      snap.df.join(broadcast(ids), Seq("id"), "left_anti")
-    }
-    removed
-  }
+      retired: DataFrame, idCol: String, numFiles: Int = 0): Long =
+    BucketStore.retire(spark, path, sigRelations(spark, path), "id",
+      retired, idCol, numFiles)
 
   /** Compact a signature table's relations to `numFiles` files each —
     * the periodic cleanup after many [[appendToSignatureTable]]
-    * generations (each append adds a file set; a year of hourly
-    * batches is ~9 000 generations of small files, and open-cost, not
-    * bytes, starts to dominate the per-batch semi-join scan). The
-    * bucket relation is additionally swept against the live sig ids —
-    * orphaned bucket rows left by a crash between
+    * generations. The bucket relation is additionally swept against
+    * the live sig ids — orphaned bucket rows left by a crash between
     * [[retireFromSignatureTable]]'s two swaps self-heal here, freeing
     * the headroom they were consuming. On a healthy store the sweep
     * keeps every row, so query results are byte-identical before and
     * after (the gate pins this). */
   def compactSignatureTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      numFiles: Int): Unit = {
-    require(numFiles > 0, s"numFiles must be > 0, got $numFiles")
-    Store.rewriteWithRetry(spark, sigTableSigs(path), numFiles,
-      clusterBy = Seq("id"),
-      splits = s => Store.statsSplits(s, "id"))(_.df)
-    Store.rewriteWithRetry(spark, sigTableBuckets(path), numFiles,
-      partitionCols = Seq("band"), clusterBy = Seq("bucket"),
-      splits = s => Store.partitionBlockCount(s, "band").map(c =>
-        Store.hashKeySplits(col("bucket"), Some((col("band"), c))))) { snap =>
-      // the live-sig read happens INSIDE the replay loop, so each
-      // attempt sweeps against the sig generation current at that point.
-      // The sig-id side broadcasts when the manifest's recorded row
-      // counts say it fits (r15 verdict #5): the sweep's planner-side
-      // estimate is the sig relation's FILE bytes — dominated by the
-      // 64-long signature arrays the sweep never reads — so the
-      // planner sort-merge-joined full store × live ids even when the
-      // id build side was a few MB. The exact count is free (manifest
-      // scalar, no job); stores without counts (pre-r16 manifests)
-      // keep the planner's choice.
-      val sigSnap = Store.snapshot(spark, sigTableSigs(path))
-      val ids = sigSnap.df.select(col("id"))
-      snap.df.join(
-        sigSnap.manifestRowCount.fold(ids)(n =>
-          Graph.broadcastIfSmall(ids, n)),
-        Seq("id"), "left_semi")
-    }
+      numFiles: Int): Unit =
+    // the live-sig read happens INSIDE the replay loop, so each attempt
+    // sweeps against the sig generation current at that point
+    BucketStore.compact(spark, path, numFiles, sigRelations(spark, path),
+      snap => snap.df.join(liveSigIds(SigIds.snapshot(spark, path)),
+        Seq("id"), "left_semi"))
+
+  /** The live signature ids, broadcast when the manifest's recorded row
+    * count says they fit: the planner's estimate for
+    * this side is the sig relation's FILE bytes — dominated by the
+    * 64-long signature arrays the id join never reads — so it
+    * sort-merge-joined full store × live ids even when the id side was
+    * a few MB. The exact count is free (manifest scalar, no job);
+    * stores without counts (pre-r16 manifests) keep the planner's
+    * choice. */
+  private def liveSigIds(sigSnap: Store.Snap): DataFrame = {
+    val ids = sigSnap.df.select(col("id"))
+    sigSnap.manifestRowCount.fold(ids)(n => Graph.broadcastIfSmall(ids, n))
   }
 
   /** [[retireFromSignatureTable]] for a persisted Hamming table (one
@@ -2712,37 +2305,15 @@ object Dedup {
     * @return number of stored documents removed */
   def retireFromHammingTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      retired: DataFrame, idCol: String, numFiles: Int = 0): Long = {
-    val ids = Store.retireIds(
-      Store.read(spark, hamTableBuckets(path)), "id", retired, idCol)
-    val nBands =
-      Store.readMetaRow(spark, hamTableMeta(path))
-        .getAs[Int]("max_hamming") + 1
-    var removed = 0L
-    Store.rewriteWithRetry(spark, hamTableBuckets(path), numFiles,
-      partitionCols = Seq("band"), clusterBy = Seq("bucket"),
-      splits = _ => Some(Store.RangeSplits(n =>
-        (hammingSlot(col("band"), col("bucket"), nBands, n), n)))) { snap =>
-      removed = snap.df.join(broadcast(ids), Seq("id"), "left_semi")
-        .select(col("id")).distinct().count()
-      snap.df.join(broadcast(ids), Seq("id"), "left_anti")
-    }
-    removed
-  }
+      retired: DataFrame, idCol: String, numFiles: Int = 0): Long =
+    BucketStore.retire(spark, path, Seq(hamBuckets(spark, path)), "id",
+      retired, idCol, numFiles, countDistinct = true)
 
   /** [[compactSignatureTable]] for a persisted Hamming table. */
   def compactHammingTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      numFiles: Int): Unit = {
-    require(numFiles > 0, s"numFiles must be > 0, got $numFiles")
-    val nBands =
-      Store.readMetaRow(spark, hamTableMeta(path))
-        .getAs[Int]("max_hamming") + 1
-    Store.rewriteWithRetry(spark, hamTableBuckets(path), numFiles,
-      partitionCols = Seq("band"), clusterBy = Seq("bucket"),
-      splits = _ => Some(Store.RangeSplits(n =>
-        (hammingSlot(col("band"), col("bucket"), nBands, n), n))))(_.df)
-  }
+      numFiles: Int): Unit =
+    BucketStore.compact(spark, path, numFiles, Seq(hamBuckets(spark, path)))
 
   /** One-row operational summary of a persisted signature table — the
     * observability face of store maintenance: the construction
@@ -2758,72 +2329,48 @@ object Dedup {
     * broadcast-scalar crossJoins (the Stats.scala pattern). */
   def signatureTableStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val buckets = Store.read(spark, sigTableBuckets(path))
-    val sigsSnap = Store.snapshot(spark, sigTableSigs(path))
-    val sigs = sigsSnap.df
-    spark.read.parquet(sigTableMeta(path))
-      .crossJoin(sigs.agg(count(lit(1)).as("n_docs")))
+    val Seq(sigRel, bucketRel) = sigRelations(spark, path)
+    val buckets = bucketRel.read(spark, path)
+    val sigsSnap = sigRel.snapshot(spark, path)
+    BucketStore.metaFrame(spark, path)
+      .crossJoin(sigsSnap.df.agg(count(lit(1)).as("n_docs")))
       .crossJoin(buckets.agg(count(lit(1)).as("n_bucket_rows")))
-      .crossJoin(buckets
-        .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("__occ"))
-        .agg(coalesce(max(col("__occ")), lit(0L)).as("max_bucket_occupancy")))
+      .crossJoin(maxOccupancy(buckets))
       // bucket rows whose id has left sigs — the reconciliation signal
       // for retireFromSignatureTable's documented two-commit window
       // (nonzero = a retire crashed between its swaps; answers stay
       // as-if-retired, the next compaction sweeps). A corpus-sized
-      // id join — the audit-cadence cost of the health check; the
-      // id side broadcasts when the manifest's recorded counts say it
-      // fits (the compactSignatureTable sweep rationale).
-      .crossJoin(buckets
-        .join(sigsSnap.manifestRowCount.fold(sigs.select(col("id")))(n =>
-          Graph.broadcastIfSmall(sigs.select(col("id")), n)),
-          Seq("id"), "left_anti")
+      // id join — the audit-cadence cost of the health check
+      .crossJoin(buckets.join(liveSigIds(sigsSnap), Seq("id"), "left_anti")
         .agg(count(lit(1)).as("orphaned_bucket_rows")))
       .withColumn("n_sig_files",
-        lit(Store.partFileCount(spark, sigTableSigs(path))))
+        lit(Store.partFileCount(spark, sigRel.root(path))))
       .withColumn("n_bucket_files",
-        lit(Store.partFileCount(spark, sigTableBuckets(path))))
+        lit(Store.partFileCount(spark, bucketRel.root(path))))
   }
+
+  /** The hottest bucket's row count (0 for an empty relation). */
+  private def maxOccupancy(buckets: DataFrame): DataFrame =
+    buckets
+      .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("__occ"))
+      .agg(coalesce(max(col("__occ")), lit(0L)).as("max_bucket_occupancy"))
 
   /** [[signatureTableStats]] for a persisted Hamming table (n_docs is
     * the distinct stored id count — the banded relation holds
     * `max_hamming + 1` rows per document minus write-cap drops). */
   def hammingTableStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val buckets = Store.read(spark, hamTableBuckets(path))
-    spark.read.parquet(hamTableMeta(path))
+    val rel = hamBuckets(spark, path)
+    val buckets = rel.read(spark, path)
+    BucketStore.metaFrame(spark, path)
       .crossJoin(buckets.agg(
         count_distinct(col("id")).as("n_docs"),
         count(lit(1)).as("n_bucket_rows")))
-      .crossJoin(buckets
-        .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("__occ"))
-        .agg(coalesce(max(col("__occ")), lit(0L)).as("max_bucket_occupancy")))
+      .crossJoin(maxOccupancy(buckets))
       .withColumn("n_bucket_files",
-        lit(Store.partFileCount(spark, hamTableBuckets(path))))
+        lit(Store.partFileCount(spark, rel.root(path))))
   }
 
-  /** Paragraph-level (line-level) deduplication across the corpus, the
-    * CCNet/Gopher preprocessing step: split every document on `sep`,
-    * keep only the FIRST occurrence of each distinct paragraph corpus-
-    * wide (first = smallest (doc id, position) — deterministic), and
-    * re-assemble each document from its surviving paragraphs in
-    * original order. Boilerplate that repeats across pages (nav bars,
-    * cookie banners, license headers) collapses to its single first
-    * occurrence. Documents left with no surviving paragraph are
-    * dropped.
-    *
-    * Scale shape: the first-occurrence pick is `groupBy(paragraph).agg
-    * (min(struct(doc, pos)))` — map-side partial aggregation, so a
-    * paragraph repeated on a billion pages costs one candidate per
-    * partition, never a hot-key window. Reassembly groups by doc id
-    * (each group only as big as one document). Two shuffles total.
-    *
-    * Exact-duplicate paragraphs WITHIN one document also collapse to
-    * their first position, by the same rule.
-    *
-    * @param sep literal (non-regex) paragraph separator, default "\n"
-    * @return (doc_id, text) — only documents with ≥1 surviving paragraph
-    */
   // ─────────────── span-level exact substring dedup ───────────────
 
   /** One row per k-token window of each document:
@@ -2980,32 +2527,89 @@ object Dedup {
           .otherwise(col("text")).as("text"))
   }
 
+  /** Paragraph-level (line-level) deduplication across the corpus, the
+    * CCNet/Gopher preprocessing step: split every document on `sep`,
+    * keep only the FIRST occurrence of each distinct paragraph corpus-
+    * wide (first = smallest (doc id, position) — deterministic), and
+    * re-assemble each document from its surviving paragraphs in
+    * original order. Boilerplate that repeats across pages (nav bars,
+    * cookie banners, license headers) collapses to its single first
+    * occurrence. Documents left with no surviving paragraph are
+    * dropped.
+    *
+    * Scale shape: the first-occurrence pick is `groupBy(paragraph).agg
+    * (min(struct(doc, pos)))` — map-side partial aggregation, so a
+    * paragraph repeated on a billion pages costs one candidate per
+    * partition, never a hot-key window. Reassembly groups by doc id
+    * (each group only as big as one document). Two shuffles total.
+    *
+    * Exact-duplicate paragraphs WITHIN one document also collapse to
+    * their first position, by the same rule.
+    *
+    * @param sep literal (non-regex) paragraph separator, default "\n"
+    * @return (doc_id, text) — only documents with ≥1 surviving paragraph
+    */
   def paragraphDedup(
       df: DataFrame, idCol: String, textCol: String,
       sep: String = "\n"): DataFrame = {
     require(sep.nonEmpty, "sep must not be empty")
-    val lines = df
-      .filter(col(textCol).isNotNull)
+    firstOccurrences(paragraphLines(df, idCol, textCol, sep))
+      .groupBy(col("doc_id")).agg(joinedLines(sep).as("text"))
+  }
+
+  /** `text` split into paragraphs on the literal `sep`. */
+  private def paragraphs(text: Column, sep: String): Column =
+    split(text, java.util.regex.Pattern.quote(sep))
+
+  /** (doc_id, pos, line): every paragraph of `df`'s non-null `textCol`. */
+  private def paragraphLines(
+      df: DataFrame, idCol: String, textCol: String, sep: String): DataFrame =
+    df.filter(col(textCol).isNotNull)
       .select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol),
-          java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
-    val firsts = lines
+        posexplode(paragraphs(col(textCol), sep)).as(Seq("pos", "line")))
+
+  /** Each distinct line of (doc_id, pos, line) rows at its first
+    * occurrence, min (doc_id, pos). */
+  private def firstOccurrences(lines: DataFrame): DataFrame =
+    lines
       .groupBy(col("line"))
       .agg(min(struct(col("doc_id"), col("pos"))).as("__first"))
       .select(col("__first.doc_id").as("doc_id"),
         col("__first.pos").as("pos"), col("line"))
-    firsts
-      .groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("pos"), col("line")))),
-          x => x.getField("line")),
-        sep).as("text"))
-  }
+
+  /** The aggregate re-assembling a document's (pos, line) rows in
+    * position order, joined by `sep`. */
+  private def joinedLines(sep: String): Column =
+    array_join(
+      transform(array_sort(collect_list(struct(col("pos"), col("line")))),
+        x => x.getField("line")),
+      sep)
 
   // ───────── persisted paragraph-hash table (incremental CCNet dedup) ─────────
 
-  private def paraTableMeta(path: String) = s"$path/meta"
-  private def paraTableHashes(path: String) = s"$path/hashes"
+  /** The paragraph table's one relation: distinct paragraph hashes `h`
+    * (xxhash64 of the line), range-clustered by hash so a batch probe
+    * touching K distinct paragraphs reads O(K) files. `h` is
+    * xxhash64-uniform, so placement is arithmetic — no sampling pass.
+    * An append lands as one sorted file: a tight hash range in its
+    * footer stats, so later probes keep skipping appended files. */
+  private val ParaHashes = BucketStore.Relation("hashes", clusterBy = Seq("h"),
+    splits = _ => Some(Store.hashKeySplits(col("h"))),
+    shape = _.repartitionByRange(1, col("h")).sortWithinPartitions("h"))
+
+  private val ParaKey = BucketStore.longKey("h")
+
+  /** The separator pinned in the table's meta. */
+  private def paraSep(
+      spark: org.apache.spark.sql.SparkSession, path: String): String =
+    BucketStore.readMeta(spark, path).getAs[String]("sep")
+
+  /** The distinct paragraph hashes of `df`'s non-null `textCol`. */
+  private def paraHashes(df: DataFrame, textCol: String, sep: String): DataFrame =
+    df.filter(col(textCol).isNotNull)
+      .select(explode(paragraphs(col(textCol), sep)).as("line"))
+      .select(xxhash64(col("line")).as("h"))
+      .distinct()
 
   /** Persist the paragraph-hash table of a corpus — the incremental
     * face of [[paragraphDedup]]: one row per DISTINCT paragraph
@@ -3022,19 +2626,8 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String, path: String,
       sep: String = "\n"): Unit = {
     require(sep.nonEmpty, "sep must not be empty")
-    // range-clustered by hash so a batch probe touching K distinct
-    // paragraph hashes reads O(K) files (pruneLongKeyScan); h is
-    // xxhash64-uniform, so the placement is arithmetic — no sampling
-    // pass, no need to even persist the explode for a re-read
-    val hashes = df.filter(col(textCol).isNotNull)
-      .select(explode(split(col(textCol),
-        java.util.regex.Pattern.quote(sep))).as("line"))
-      .select(xxhash64(col("line")).as("h"))
-      .distinct()
-    Store.create(hashes, paraTableHashes(path), clusterBy = Seq("h"),
-      splits = Some(Store.hashKeySplits(col("h"))))
-    df.sparkSession.range(1).select(lit(sep).as("sep"))
-      .write.mode("overwrite").parquet(paraTableMeta(path))
+    ParaHashes.create(paraHashes(df, textCol, sep), path)
+    BucketStore.writeMeta(df.sparkSession, path, lit(sep).as("sep"))
   }
 
   /** Incremental paragraph dedup of a batch against the persisted
@@ -3053,65 +2646,24 @@ object Dedup {
   def paragraphDedupIncremental(
       spark: org.apache.spark.sql.SparkSession, path: String,
       incoming: DataFrame, idCol: String, textCol: String): DataFrame =
-    paragraphDedupIncremental(spark, path, incoming, idCol, textCol,
-      Store.readMetaRow(spark, paraTableMeta(path)).getAs[String]("sep"))
-
-  /** [[paragraphDedupIncremental]] with the table's pinned separator
-    * already in hand — the ingest chain reads the immutable meta once
-    * per batch instead of per phase. */
-  private def paragraphDedupIncremental(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      incoming: DataFrame, idCol: String, textCol: String,
-      sep: String): DataFrame =
-    paragraphProbePlan(spark, Store.snapshot(spark, paraTableHashes(path)),
-      incoming, idCol, textCol, sep)._1
+    paragraphProbePlan(ParaHashes.snapshot(spark, path), incoming, idCol,
+      textCol, paraSep(spark, path))._1
 
   /** The shared probe construction: the survivor plan plus the
     * storedHit relation it anti-joins (the fused ingest's append
     * reuses BOTH — same snapshot, same collected keys, zero additional
     * driver actions). The batch's distinct hashes are collected ONCE
     * and drive the file prune AND the exact semi-join as a local
-    * relation — broadcasting the distributed `probeHashes` plan would
-    * re-execute the batch's explode+hash once more per phase. */
+    * relation ([[BucketStore.probe]]). */
   private def paragraphProbePlan(
-      spark: org.apache.spark.sql.SparkSession, snap: Store.Snap,
-      incoming: DataFrame, idCol: String, textCol: String,
+      snap: Store.Snap, incoming: DataFrame, idCol: String, textCol: String,
       sep: String): (DataFrame, DataFrame) = {
-    val lines = incoming
-      .filter(col(textCol).isNotNull)
-      .select(col(idCol).as("doc_id"),
-        posexplode(split(col(textCol),
-          java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
+    val lines = paragraphLines(incoming, idCol, textCol, sep)
       .withColumn("h", xxhash64(col("line")))
-    val probeHashes = lines.select(col("h")).distinct()
-    val collected: Option[Array[Long]] =
-      if (snap.legacy || snap.files.isEmpty) None
-      else {
-        val rows = probeHashes.limit(MaxProbeKeys + 1).collect()
-        if (rows.length > MaxProbeKeys) None
-        else Some(rows.filter(!_.isNullAt(0)).map(_.getLong(0)).sorted)
-      }
-    val storedHit = collected match {
-      case Some(ks) =>
-        import spark.implicits._
-        val local = ks.toSeq.toDF("h")
-        pruneLongKeyScanCollected(snap, "h", ks)
-          .join(broadcast(local), Seq("h"), "left_semi")
-      case None =>
-        snap.df.join(broadcast(probeHashes), Seq("h"), "left_semi")
-    }
-    val freshLines = lines.join(storedHit, Seq("h"), "left_anti")
-    val firsts = freshLines
-      .groupBy(col("line"))
-      .agg(min(struct(col("doc_id"), col("pos"))).as("__first"))
-      .select(col("__first.doc_id").as("doc_id"),
-        col("__first.pos").as("pos"), col("line"))
-    val survivors = firsts
-      .groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("pos"), col("line")))),
-          x => x.getField("line")),
-        sep).as("text"))
+    val storedHit =
+      BucketStore.probe(snap, ParaKey, lines.select(col("h")).distinct())
+    val survivors = firstOccurrences(lines.join(storedHit, Seq("h"), "left_anti"))
+      .groupBy(col("doc_id")).agg(joinedLines(sep).as("text"))
       .select(col("doc_id").as(idCol), col("text"))
     (survivors, storedHit)
   }
@@ -3121,49 +2673,23 @@ object Dedup {
     * file layout. */
   private[graft] def paragraphProbeFootprint(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      incoming: DataFrame, textCol: String): (Long, Long, Long, Long) = {
-    val sep = Store.readMetaRow(spark, paraTableMeta(path)).getAs[String]("sep")
-    val touched = incoming.filter(col(textCol).isNotNull)
-      .select(explode(split(col(textCol),
-        java.util.regex.Pattern.quote(sep))).as("line"))
-      .select(xxhash64(col("line")).as("h"))
-      .distinct()
-    probeFootprint(Store.snapshot(spark, paraTableHashes(path)), touched)(
-      rows => longKeepFn("h", rows.map(_.getLong(0)).sorted))
-  }
+      incoming: DataFrame, textCol: String): (Long, Long, Long, Long) =
+    BucketStore.footprint(ParaHashes.snapshot(spark, path), ParaKey,
+      paraHashes(incoming, textCol, paraSep(spark, path)))
 
   /** Append a batch's paragraph hashes to the persisted table (the
     * maintenance half of [[paragraphIngest]]): the batch's distinct
     * hashes anti-join the stored relation — reduced first by the same
-    * broadcast semi-join prune, cost ∝ batch — and only genuinely new
+    * pruned semi-join probe, cost ∝ batch — and only genuinely new
     * hashes append (the store stays distinct), under the
     * [[Store.append]] maintenance fence. */
   def appendToParagraphTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, textCol: String): Unit =
-    appendToParagraphTable(spark, path, batch, idCol, textCol,
-      Store.readMetaRow(spark, paraTableMeta(path)).getAs[String]("sep"))
-
-  private def appendToParagraphTable(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      sep: String): Unit = {
-    val hashes = batch.filter(col(textCol).isNotNull)
-      .select(explode(split(col(textCol),
-        java.util.regex.Pattern.quote(sep))).as("line"))
-      .select(xxhash64(col("line")).as("h"))
-      .distinct()
+      batch: DataFrame, idCol: String, textCol: String): Unit = {
+    val hashes = paraHashes(batch, textCol, paraSep(spark, path))
     val storedHit =
-      pruneLongKeyScan(Store.snapshot(spark, paraTableHashes(path)),
-        "h", hashes)
-      .join(broadcast(hashes), Seq("h"), "left_semi")
-    Store.append(spark, paraTableHashes(path)) { dir =>
-      // one sorted file per append batch: tight hash range in the
-      // footer stats, so later probes keep skipping appended files too
-      hashes.join(storedHit, Seq("h"), "left_anti")
-        .repartitionByRange(1, col("h")).sortWithinPartitions("h")
-        .write.mode("append").parquet(dir)
-    }
+      BucketStore.probe(ParaHashes.snapshot(spark, path), ParaKey, hashes)
+    ParaHashes.append(spark, path)(hashes.join(storedHit, Seq("h"), "left_anti"))
   }
 
   /** The paragraph-level ingest step — [[nearDedupIngest]]'s contract
@@ -3182,36 +2708,19 @@ object Dedup {
     // batch, shared by the probe and the append: the appended hash set
     // (survivor-text hashes minus stored) is by construction exactly
     // the batch's fresh distinct hashes, so the append re-uses the
-    // probe's storedHit relation instead of re-resolving and
-    // re-collecting; [[Store.append]] still re-lists and fences the
-    // commit itself
-    val sep =
-      Store.readMetaRow(spark, paraTableMeta(path)).getAs[String]("sep")
-    val snap = Store.snapshot(spark, paraTableHashes(path))
+    // probe's storedHit relation (fenced: re-probed against a fresh
+    // snapshot if anything committed in between) instead of
+    // re-resolving and re-collecting
+    val sep = paraSep(spark, path)
+    val snap = ParaHashes.snapshot(spark, path)
     val (survPlan, storedHit) =
-      paragraphProbePlan(spark, snap, incoming, idCol, textCol, sep)
+      paragraphProbePlan(snap, incoming, idCol, textCol, sep)
     val survivors = survPlan.localCheckpoint(true)
-    Store.append(spark, paraTableHashes(path)) { dir =>
-      val hashes = survivors.filter(col("text").isNotNull)
-        .select(explode(split(col("text"),
-          java.util.regex.Pattern.quote(sep))).as("line"))
-        .select(xxhash64(col("line")).as("h"))
-        .distinct()
-      // probe-snapshot reuse is fenced: a concurrent commit between
-      // this batch's probe and append would make the probe-time
-      // storedHit miss freshly-stored hashes and accrete duplicate
-      // hash rows — re-resolve and re-probe in that case (ADVICE r15;
-      // the check is one directory listing, no Spark job)
-      val hit =
-        if (!Store.changedSince(spark, snap)) storedHit
-        else {
-          val fresh = Store.snapshot(spark, paraTableHashes(path))
-          pruneLongKeyScan(fresh, "h", hashes)
-            .join(broadcast(hashes), Seq("h"), "left_semi")
-        }
-      hashes.join(hit, Seq("h"), "left_anti")
-        .repartitionByRange(1, col("h")).sortWithinPartitions("h")
-        .write.mode("append").parquet(dir)
+    ParaHashes.append(spark, path) {
+      val hashes = paraHashes(survivors, "text", sep)
+      hashes.join(BucketStore.fenced(spark, snap)(storedHit)(
+        BucketStore.probe(ParaHashes.snapshot(spark, path), ParaKey, hashes)),
+        Seq("h"), "left_anti")
     }
     survivors
   }
@@ -3256,11 +2765,9 @@ object Dedup {
   def retireFromParagraphTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
       retired: DataFrame, colName: String, numFiles: Int = 0): Long = {
-    val stored = Store.read(spark, paraTableHashes(path))
-    val ids = retired.schema(colName).dataType match {
+    val textHashes = retired.schema(colName).dataType match {
       case org.apache.spark.sql.types.StringType =>
-        val sep = Store.readMetaRow(spark, paraTableMeta(path))
-          .getAs[String]("sep")
+        val sep = paraSep(spark, path)
         val bad = retired
           .filter(col(colName).isNotNull && col(colName).contains(sep))
           .limit(1).collect()
@@ -3269,33 +2776,13 @@ object Dedup {
             s"paragraph separator — the store hashes single paragraphs, " +
             s"so a multi-paragraph entry could never match; split it and " +
             s"retire each paragraph")
-        retired.filter(col(colName).isNotNull)
+        Some(retired.filter(col(colName).isNotNull)
           .select(xxhash64(col(colName)).as("h")).distinct()
-          .localCheckpoint(true)
-      case _ =>
-        Store.retireIds(stored, "h", retired, colName)
-          .select(col("id").as("h"))
+          .localCheckpoint(true))
+      case _ => None
     }
-    var removed = 0L
-    // the removed COUNT scans only the files whose recorded hash range
-    // intersects the (tiny) takedown list — the retireFromSignatureTable
-    // treatment; the rewrite below is inherently full-scan, the count
-    // need not be a second one
-    val retiredKeys: Option[Array[Long]] = {
-      val rows = ids.limit(MaxProbeKeys + 1).collect()
-      if (rows.length > MaxProbeKeys) None
-      else Some(rows.filter(!_.isNullAt(0)).map(_.getLong(0)).sorted)
-    }
-    Store.rewriteWithRetry(spark, paraTableHashes(path), numFiles,
-      clusterBy = Seq("h"),
-      splits = _ => Some(Store.hashKeySplits(col("h")))) { snap =>
-      val countScan = retiredKeys
-        .map(ks => pruneLongKeyScanCollected(snap, "h", ks))
-        .getOrElse(snap.df)
-      removed = countScan.join(broadcast(ids), Seq("h"), "left_semi").count()
-      snap.df.join(broadcast(ids), Seq("h"), "left_anti")
-    }
-    removed
+    BucketStore.retire(spark, path, Seq(ParaHashes), "h", retired, colName,
+      numFiles, ids = textHashes)
   }
 
   /** Compact a paragraph table's hash relation to `numFiles` files —
@@ -3310,12 +2797,8 @@ object Dedup {
     * dedup results before and after. */
   def compactParagraphTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      numFiles: Int): Unit = {
-    require(numFiles > 0, s"numFiles must be > 0, got $numFiles")
-    Store.rewriteWithRetry(spark, paraTableHashes(path), numFiles,
-      clusterBy = Seq("h"),
-      splits = _ => Some(Store.hashKeySplits(col("h"))))(_.df.distinct())
-  }
+      numFiles: Int): Unit =
+    BucketStore.compact(spark, path, numFiles, Seq(ParaHashes), _.df.distinct())
 
   /** One-row operational summary of a persisted paragraph table (the
     * [[signatureTableStats]] shape): the pinned separator (what every
@@ -3326,11 +2809,11 @@ object Dedup {
     * broadcast joins. */
   def paragraphTableStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(paraTableMeta(path))
-      .crossJoin(Store.read(spark, paraTableHashes(path))
+    BucketStore.metaFrame(spark, path)
+      .crossJoin(ParaHashes.read(spark, path)
         .agg(count(lit(1)).as("n_paragraphs")))
       .withColumn("n_hash_files",
-        lit(Store.partFileCount(spark, paraTableHashes(path))))
+        lit(Store.partFileCount(spark, ParaHashes.root(path))))
 
   /** Boilerplate-line removal: drop every line whose exact text appears
     * in at least `minDocs` DISTINCT documents, rebuild each document's
@@ -3361,8 +2844,7 @@ object Dedup {
       .select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val lines = base
       .select(col("doc_id"),
-        posexplode(split(col("text"),
-          java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
+        posexplode(paragraphs(col("text"), sep)).as(Seq("pos", "line")))
     val boiler = lines
       .select(col("doc_id"), col("line")).distinct()
       .groupBy(col("line")).agg(count(lit(1)).as("line_df"))
@@ -3370,11 +2852,7 @@ object Dedup {
       .select(col("line"))
     val rebuilt = lines
       .join(boiler, Seq("line"), "left_anti")
-      .groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("pos"), col("line")))),
-          x => x.getField("line")),
-        sep).as("__kept"))
+      .groupBy(col("doc_id")).agg(joinedLines(sep).as("__kept"))
     base.select(col("doc_id"))
       .join(rebuilt, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("__kept"), lit("")).as("text"))

@@ -143,25 +143,16 @@ object FuzzyJoin {
           explode(deletionVariants(col(refStr), maxDist)).as("variant")),
       maxBucketSize, dropHotKeys)
     val schema = spark.read.parquet(dirtyPath).schema
-    val matches = spark.readStream.schema(schema).parquet(dirtyPath)
-      .filter(col(dirtyStr).isNotNull && length(col(dirtyStr)) > 0)
-      .select(col(dirtyId).as("r_id"), col(dirtyStr).as("r_str"),
-        explode(deletionVariants(col(dirtyStr), maxDist)).as("variant"))
-      .join(broadcast(rv), "variant")
-      .withColumn("dist", levenshtein(col("l_str"), col("r_str"), maxDist))
-      .filter(col("dist") >= 0) // threshold form: -1 = beyond maxDist
-      .select(col("l_id"), col("r_id"), col("l_str"), col("r_str"), col("dist"))
-    val name = "graft_fuzzyjoin_" + math.abs(dirtyPath.hashCode)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = matches.writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    spark.table(name)
+    graft.streaming.LandingZone.toMemory(spark, "append") { s =>
+      s.readStream.schema(schema).parquet(dirtyPath)
+        .filter(col(dirtyStr).isNotNull && length(col(dirtyStr)) > 0)
+        .select(col(dirtyId).as("r_id"), col(dirtyStr).as("r_str"),
+          explode(deletionVariants(col(dirtyStr), maxDist)).as("variant"))
+        .join(broadcast(rv), "variant")
+        .withColumn("dist", levenshtein(col("l_str"), col("r_str"), maxDist))
+        .filter(col("dist") >= 0) // threshold form: -1 = beyond maxDist
+        .select(col("l_id"), col("r_id"), col("l_str"), col("r_str"), col("dist"))
+    }
   }
 
   /** Sorted-neighborhood blocking (Hernández & Stolfo's merge/purge,

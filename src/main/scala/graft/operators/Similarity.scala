@@ -751,11 +751,19 @@ object Similarity {
     val normed = data.select(col(idCol).as("id"), l2Normalize(col(vecCol)).as("nv"))
     val cb = pqTrain(normed, "id", "nv", m, k, iters)
     cb.toDF(spark).write.mode("overwrite").parquet(s"$path/codebook")
-    Store.create(
-      pqEncodePacked(normed, "nv", cb).select(col("id"), col("pq_code")),
-      s"$path/codes")
+    PqCodes.create(
+      pqEncodePacked(normed, "nv", cb).select(col("id"), col("pq_code")), path)
     cb
   }
+
+  /** The PQ index's code relation (id, pq_code): 8 bytes a vector,
+    * unclustered — a search scans it whole. */
+  private val PqCodes = BucketStore.Relation("codes")
+
+  /** The IVF-PQ index's code relation (id, pq_code, centroid_id),
+    * PARTITIONED BY list id so a search's probed lists prune the scan. */
+  private val IvfCodes =
+    BucketStore.Relation("codes", partitionCols = Seq("centroid_id"))
 
   /** Append a batch to a persisted PQ index: the batch is encoded with
     * the EXISTING codebook (codebooks are stable artifacts — retrain
@@ -768,12 +776,11 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, vecCol: String): PqCodebook = {
     val cb = pqCodebookFromDF(spark.read.parquet(s"$path/codebook"))
-    Store.append(spark, s"$path/codes") { dir =>
+    PqCodes.append(spark, path) {
       pqEncodePacked(
         batch.select(col(idCol).as("id"), l2Normalize(col(vecCol)).as("nv")),
         "nv", cb)
         .select(col("id"), col("pq_code"))
-        .write.mode("append").parquet(dir)
     }
     cb
   }
@@ -790,26 +797,17 @@ object Similarity {
     * @return number of indexed vectors removed */
   def retireFromPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      retired: DataFrame, idCol: String, numFiles: Int = 0): Long = {
-    val ids = Store.retireIds(
-      Store.read(spark, s"$path/codes"), "id", retired, idCol)
-    var removed = 0L
-    Store.rewriteWithRetry(spark, s"$path/codes", numFiles) { snap =>
-      removed = snap.df.join(broadcast(ids), Seq("id"), "left_semi").count()
-      snap.df.join(broadcast(ids), Seq("id"), "left_anti")
-    }
-    removed
-  }
+      retired: DataFrame, idCol: String, numFiles: Int = 0): Long =
+    BucketStore.retire(spark, path, Seq(PqCodes), "id", retired, idCol,
+      numFiles)
 
   /** Compact a persisted PQ index's code table to `numFiles` files —
     * the small-file cleanup after many [[appendToPqIndex]] generations
     * ([[Dedup.compactSignatureTable]]'s rationale; a pure rewrite). */
   def compactPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      numFiles: Int): Unit = {
-    require(numFiles > 0, s"numFiles must be > 0, got $numFiles")
-    Store.rewriteWithRetry(spark, s"$path/codes", numFiles)(_.df)
-  }
+      numFiles: Int): Unit =
+    BucketStore.compact(spark, path, numFiles, Seq(PqCodes))
 
   // ───────── persisted IVF-PQ index (partition-pruned inverted lists) ─────────
 
@@ -839,10 +837,9 @@ object Similarity {
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
     val cb = pqTrain(normed, "id", "nv", m, k, iters)
     cb.toDF(spark).write.mode("overwrite").parquet(s"$path/codebook")
-    Store.create(
+    IvfCodes.create(
       pqEncodePacked(assigned, "v", cb)
-        .select(col("id"), col("pq_code"), col("centroid_id")),
-      s"$path/codes", partitionCols = Seq("centroid_id"))
+        .select(col("id"), col("pq_code"), col("centroid_id")), path)
     normed.unpersist(blocking = false)
   }
 
@@ -870,11 +867,9 @@ object Similarity {
       .withColumn("v", transform(col("nv"), x => x.cast("double")))
       .withColumn("centroid_id",
         graft.plans.native.nearestCentroid(col("v"), flat, cents.length))
-    Store.append(spark, s"$path/codes") { dir =>
+    IvfCodes.append(spark, path) {
       pqEncodePacked(assigned, "v", cb)
         .select(col("id"), col("pq_code"), col("centroid_id"))
-        .write.mode("append").partitionBy("centroid_id")
-        .parquet(dir)
     }
   }
 
@@ -899,7 +894,7 @@ object Similarity {
     IvfPqIndexHandle(
       pqCodebookFromDF(spark.read.parquet(s"$path/codebook")),
       spark.read.parquet(s"$path/centroids"),
-      Store.read(spark, s"$path/codes"))
+      IvfCodes.read(spark, path))
 
   /** Search a persisted IVF-PQ index. The coarse stage's probed list
     * ids prune the code scan via DYNAMIC PARTITION PRUNING: the probed
@@ -948,27 +943,16 @@ object Similarity {
     * survives the takedown. @return number of indexed vectors removed */
   def retireFromIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      retired: DataFrame, idCol: String, numFiles: Int = 0): Long = {
-    val ids = Store.retireIds(
-      Store.read(spark, s"$path/codes"), "id", retired, idCol)
-    var removed = 0L
-    Store.rewriteWithRetry(spark, s"$path/codes", numFiles,
-      partitionCols = Seq("centroid_id")) { snap =>
-      removed = snap.df.join(broadcast(ids), Seq("id"), "left_semi").count()
-      snap.df.join(broadcast(ids), Seq("id"), "left_anti")
-    }
-    removed
-  }
+      retired: DataFrame, idCol: String, numFiles: Int = 0): Long =
+    BucketStore.retire(spark, path, Seq(IvfCodes), "id", retired, idCol,
+      numFiles)
 
   /** [[compactPqIndex]] for a persisted IVF-PQ index: one file per
     * list partition (the repartition-on-partition-columns rewrite). */
   def compactIvfPqIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      numFiles: Int): Unit = {
-    require(numFiles > 0, s"numFiles must be > 0, got $numFiles")
-    Store.rewriteWithRetry(spark, s"$path/codes", numFiles,
-      partitionCols = Seq("centroid_id"))(_.df)
-  }
+      numFiles: Int): Unit =
+    BucketStore.compact(spark, path, numFiles, Seq(IvfCodes))
 
   /** One-row operational summary of a persisted PQ index
     * ([[Dedup.signatureTableStats]]'s shape): quantizer geometry from
@@ -979,10 +963,10 @@ object Similarity {
     spark.read.parquet(s"$path/codebook")
       .agg((max(col("subspace")) + 1).as("m"), max(col("code")).as("k"),
         ((max(col("subspace")) + 1) * max(size(col("cvec")))).as("dim"))
-      .crossJoin(Store.read(spark, s"$path/codes")
+      .crossJoin(PqCodes.read(spark, path)
         .agg(count(lit(1)).as("n_vectors")))
       .withColumn("n_code_files",
-        lit(Store.partFileCount(spark, s"$path/codes")))
+        lit(Store.partFileCount(spark, PqCodes.root(path))))
   }
 
   /** [[pqIndexStats]] for a persisted IVF-PQ index: adds the list
@@ -994,7 +978,7 @@ object Similarity {
     * zero minimum. Code files count across the list partition dirs. */
   def ivfPqIndexStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val codes = Store.read(spark, s"$path/codes")
+    val codes = IvfCodes.read(spark, path)
     val occ = codes.groupBy(col("centroid_id"))
       .agg(count(lit(1)).as("__occ"))
     spark.read.parquet(s"$path/codebook")
@@ -1010,7 +994,7 @@ object Similarity {
       .withColumn("n_empty_lists", col("n_lists") - col("__n_used"))
       .drop("__n_used")
       .withColumn("n_code_files",
-        lit(Store.partFileCount(spark, s"$path/codes")))
+        lit(Store.partFileCount(spark, IvfCodes.root(path))))
   }
 
   /** Search a persisted PQ index: ADC over the stored packed codes
@@ -1024,7 +1008,7 @@ object Similarity {
       probes: DataFrame, probeIdCol: String, probeVecCol: String,
       k: Int, shortlist: Int): DataFrame = {
     val cb = pqCodebookFromDF(spark.read.parquet(s"$path/codebook"))
-    val codes = Store.read(spark, s"$path/codes")
+    val codes = PqCodes.read(spark, path)
     pqSearchRerank(codes, "id", "pq_code",
       vectors, vecIdCol, vecCol, probes, probeIdCol, probeVecCol,
       cb, k, shortlist)

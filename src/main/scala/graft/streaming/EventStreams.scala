@@ -42,54 +42,28 @@ object EventStreams {
     * complete mode recomputes every window, so the result equals the
     * batch twin exactly — which is what lets the driver's DuckDB oracle
     * check a Structured Streaming execution path. */
-  private def runStreamed(spark: SparkSession, path: String, tag: String,
+  private def runStreamed(spark: SparkSession, path: String,
       outputMode: String = "complete")(
       transform: DataFrame => DataFrame): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the file stream source requires a DIRECTORY; stage a single-file
-    // input into one
-    val src = java.nio.file.Paths.get(path)
-    val streamPath =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val dir = java.nio.file.Paths.get(
-          graft.Scratch.path(s"stream_${math.abs(path.hashCode)}"))
-        java.nio.file.Files.createDirectories(dir)
-        java.nio.file.Files.copy(src, dir.resolve(src.getFileName),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dir.toString
-      }
     val batchSchema = spark.read.parquet(path).schema
-    val raw = spark.readStream.schema(batchSchema).parquet(streamPath)
-    val events =
-      if (batchSchema("ts").dataType == LongType)
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else raw
-    val name = s"graft_${tag}_" + math.abs(path.hashCode)
-    // stateful operators allocate one state store per shuffle partition
-    // per stateful op (a stream-stream join has four) — at this input
-    // size the per-store setup dominates, so run the streaming query on
-    // few partitions and restore the session setting after. On a real
-    // cluster this knob is sized to the key cardinality instead.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = transform(events)
-        .writeStream.outputMode(outputMode).format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    spark.table(name)
+    LandingZone.toMemory(spark, outputMode) { s =>
+      val raw = s.readStream.schema(batchSchema)
+        .parquet(LandingZone.stageDir(path, "stream"))
+      transform(
+        if (batchSchema("ts").dataType == LongType)
+          raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        else raw)
+    }
   }
 
   /** [[hourlyTypeCounts]] executed as a real streaming query. */
   def hourlyTypeCountsStreamed(spark: SparkSession, path: String): DataFrame =
-    runStreamed(spark, path, "hourly")(hourlyTypeCounts)
+    runStreamed(spark, path)(hourlyTypeCounts)
 
   /** [[slidingTypeCounts]] executed as a real streaming query. */
   def slidingTypeCountsStreamed(spark: SparkSession, path: String): DataFrame =
-    runStreamed(spark, path, "sliding")(slidingTypeCounts(_))
+    runStreamed(spark, path)(slidingTypeCounts(_))
 
   /** Sliding-window counts: 1-hour windows advancing every 30 minutes —
     * each event lands in exactly two windows (window assignment is a
@@ -140,7 +114,7 @@ object EventStreams {
   /** [[clickPurchaseJoin]] executed as a real stream-stream join
     * (append mode — the only mode stream-stream inner joins support). */
   def clickPurchaseJoinStreamed(spark: SparkSession, path: String): DataFrame =
-    runStreamed(spark, path, "clickjoin", outputMode = "append")(
+    runStreamed(spark, path, outputMode = "append")(
       clickPurchaseJoin(_))
 
   /** Stream-static join: enrich each event with a (small) static
@@ -156,7 +130,7 @@ object EventStreams {
   def enrichWithDimStreamed(spark: SparkSession, path: String, dim: DataFrame,
                             eventKey: String, dimKey: String,
                             project: DataFrame => DataFrame): DataFrame =
-    runStreamed(spark, path, "enrich", outputMode = "append")(ev =>
+    runStreamed(spark, path, outputMode = "append")(ev =>
       project(enrichWithDim(ev, dim, eventKey, dimKey)))
 
   /** Streaming hourly tumbling-window counts with a 2-hour watermark
@@ -234,7 +208,7 @@ object EventStreams {
       java.nio.file.Files.copy(partFile, dir.resolve(n),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
-    runStreamed(spark, dir.toString, "dedup", outputMode = "append")(ev =>
+    runStreamed(spark, dir.toString, outputMode = "append")(ev =>
       dedupProjection(dedupStream(ev, "event_id")))
   }
 
@@ -326,32 +300,14 @@ object EventStreams {
       spark: SparkSession, parquetPath: String,
       groupCol: String, valueCol: String, sideCol: org.apache.spark.sql.Column,
       lo: Double, hi: Double, nBins: Int): DataFrame = {
-    val src = java.nio.file.Paths.get(parquetPath)
-    val streamPath =
-      if (java.nio.file.Files.isDirectory(src)) parquetPath
-      else {
-        val dir = java.nio.file.Paths.get(
-          graft.Scratch.path(s"histdrift_${math.abs(parquetPath.hashCode)}"))
-        java.nio.file.Files.createDirectories(dir)
-        java.nio.file.Files.copy(src, dir.resolve(src.getFileName),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dir.toString
-      }
     val schema = spark.read.parquet(parquetPath).schema
-    val stream = spark.readStream.schema(schema).parquet(streamPath)
-    val counts = graft.operators.Stats.histDriftCounts(
-      stream, groupCol, valueCol, sideCol, lo, hi, nBins)
-    val name = "graft_histdrift_" + math.abs(parquetPath.hashCode)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = counts.writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    graft.operators.Stats.finalizeHistDrift(spark.table(name))
+    val counts = LandingZone.toMemory(spark, "complete") { s =>
+      graft.operators.Stats.histDriftCounts(
+        s.readStream.schema(schema)
+          .parquet(LandingZone.stageDir(parquetPath, "histdrift")),
+        groupCol, valueCol, sideCol, lo, hi, nBins)
+    }
+    graft.operators.Stats.finalizeHistDrift(counts)
       .select(col("grp").as(groupCol), col("n_a"), col("n_b"),
         col("n_bins_hit"), col("chi2"))
   }

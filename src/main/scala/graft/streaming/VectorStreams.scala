@@ -61,38 +61,16 @@ object VectorStreams {
   def corpusStatsStreamed(
       spark: SparkSession, docsParquet: String,
       sourceCol: String, textCol: String): DataFrame = {
-    // the file stream source requires a DIRECTORY; stage a single-file
-    // input into one (same convention as EventStreams.runStreamed)
-    val src = java.nio.file.Paths.get(docsParquet)
-    val streamPath =
-      if (java.nio.file.Files.isDirectory(src)) docsParquet
-      else {
-        val dir = java.nio.file.Paths.get(
-          graft.Scratch.path(s"corpstats_${math.abs(docsParquet.hashCode)}"))
-        java.nio.file.Files.createDirectories(dir)
-        java.nio.file.Files.copy(src, dir.resolve(src.getFileName),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dir.toString
-      }
     val schema = spark.read.parquet(docsParquet).schema
-    val stream = spark.readStream.schema(schema).parquet(streamPath)
-    val agg = stream
-      .groupBy(col(sourceCol).as("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(graft.functions.TextFunctions.tokenCount(col(textCol)).cast("long"))
-          .as("n_tokens"),
-        sum(length(col(textCol)).cast("long")).as("n_chars"))
-    val name = "graft_corpstats_" + math.abs(docsParquet.hashCode)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    spark.table(name)
+    LandingZone.toMemory(spark, "complete") { s =>
+      s.readStream.schema(schema)
+        .parquet(LandingZone.stageDir(docsParquet, "corpstats"))
+        .groupBy(col(sourceCol).as("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(graft.functions.TextFunctions.tokenCount(col(textCol)).cast("long"))
+            .as("n_tokens"),
+          sum(length(col(textCol)).cast("long")).as("n_chars"))
+    }
   }
 
   /** [[nearestByAdc]] executed as a REAL streaming query: the probe
@@ -106,31 +84,12 @@ object VectorStreams {
       probeIdCol: String, probeVecCol: String,
       codes: DataFrame, idCol: String, codesCol: String,
       cb: Similarity.PqCodebook): DataFrame = {
-    val src = java.nio.file.Paths.get(probeParquet)
-    val streamPath =
-      if (java.nio.file.Files.isDirectory(src)) probeParquet
-      else {
-        val dir = java.nio.file.Paths.get(
-          graft.Scratch.path(s"annstream_${math.abs(probeParquet.hashCode)}"))
-        java.nio.file.Files.createDirectories(dir)
-        java.nio.file.Files.copy(src, dir.resolve(src.getFileName),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dir.toString
-      }
     val schema = spark.read.parquet(probeParquet).schema
-    val stream = spark.readStream.schema(schema).parquet(streamPath)
-    val name = "graft_annstream_" + math.abs(probeParquet.hashCode)
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = nearestByAdc(stream, probeIdCol, probeVecCol,
-        codes, idCol, codesCol, cb)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    spark.table(name)
+    LandingZone.toMemory(spark, "complete") { s =>
+      nearestByAdc(s.readStream.schema(schema)
+          .parquet(LandingZone.stageDir(probeParquet, "annstream")),
+        probeIdCol, probeVecCol, codes, idCol, codesCol, cb)
+    }
   }
 
   /** CONTINUOUS ANN ingest — the vector landing-zone twin of

@@ -208,7 +208,7 @@ class PlanSpec extends GraftSpec {
   test("persisted bucket store: the probe plan evaluates the touched " +
     "keys ONCE and scans only driver-pruned files") {
     // the serving-path plan of every incremental dedup probe
-    // (Dedup.corpusBucketProbe — nearDedupIncremental, the Hamming
+    // (BucketStore.probe — nearDedupIncremental, the Hamming
     // probe and both append occupancy counts all share it): the
     // batch's touched (band, bucket) keys are collected once; they
     // prune the scan to O(touched keys) FILES driver-side (stronger
@@ -216,7 +216,7 @@ class PlanSpec extends GraftSpec {
     // for the exact broadcast semi-join — the distributed touched plan
     // must not be evaluated a second time for the broadcast, and the
     // scan must carry only the kept files.
-    import graft.operators.Dedup
+    import graft.operators.{BucketStore, Dedup}
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_dpp_").toString
     val docs = (1L to 40L)
@@ -228,7 +228,7 @@ class PlanSpec extends GraftSpec {
       .map(i => (i.toInt % 16, i * 7919L)).toDF("band", "bucket")
       .persist()
       .distinct()
-    val probe = Dedup.corpusBucketProbe(h.bucketsSnap, touched)
+    val probe = BucketStore.probe(h.bucketsSnap, BucketStore.BandBucket, touched)
     val p = probe.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("LocalTableScan"),
@@ -257,7 +257,7 @@ class PlanSpec extends GraftSpec {
     // band partition column, planned through the broadcast semi-join's
     // restated band-invariant filter (never a post-scan filter, never
     // a literal In list)
-    import graft.operators.Dedup
+    import graft.operators.{BucketStore, Dedup}
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_dppf_").toString
     val docs = (1L to 40L)
@@ -266,12 +266,12 @@ class PlanSpec extends GraftSpec {
     Dedup.writeSignatureTable(docs, "doc_id", "text", s"$tmp/sig")
     val h = Dedup.openSignatureTable(spark, s"$tmp/sig")
     import org.apache.spark.sql.functions.col
-    val touched = spark.range(Dedup.MaxProbeKeys + 64L)
+    val touched = spark.range(BucketStore.MaxProbeKeys + 64L)
       .select((col("id") % 16).cast("int").as("band"),
         (col("id") * 7919L).as("bucket"))
       .persist()
       .distinct()
-    val p = Dedup.corpusBucketProbe(h.bucketsSnap, touched)
+    val p = BucketStore.probe(h.bucketsSnap, BucketStore.BandBucket, touched)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     touched.unpersist(blocking = false)
     val pf = p.linesIterator.filter(_.contains("PartitionFilters")).toSeq

@@ -52,6 +52,32 @@ class StreamingSpec extends GraftSpec {
     } finally q.stop()
   }
 
+  test("a streamed query leaves the caller's session conf alone while it runs") {
+    // a second user of the session reads the shuffle partition count
+    // throughout the streamed query; it must only ever see its own value
+    val path = java.nio.file.Files.createTempDirectory("graft_conf_")
+      .resolve("events").toString
+    eventsDf.coalesce(1).write.parquet(path)
+    val own = spark.conf.get("spark.sql.shuffle.partitions")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var running = true
+    val reader = new Thread(() =>
+      while (running) seen.add(spark.conf.get("spark.sql.shuffle.partitions")))
+    reader.start()
+    val got =
+      try EventStreams.hourlyTypeCountsStreamed(spark, path)
+        .select("hour", "event_type", "n", "total_value")
+        .collect().map(_.toSeq).toSet
+      finally { running = false; reader.join() }
+    assert(seen.toArray.toSet == Set(own),
+      s"the caller's session saw shuffle partitions ${seen.toArray.toSet}, " +
+        s"not only its own $own")
+    val want = EventStreams.hourlyTypeCountsBatch(eventsDf)
+      .select("hour", "event_type", "n", "total_value")
+      .collect().map(_.toSeq).toSet
+    assert(got == want, s"streamed $got != batch $want")
+  }
+
   test("streaming sessionization matches the batch twin on closed sessions") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, java.sql.Timestamp, Long, String, Double, String)]
