@@ -31,26 +31,38 @@ private[graft] object BucketStore {
       splits: Option[Store.Snap] => Option[Store.RangeSplits] = _ => None,
       shape: DataFrame => DataFrame = identity) {
     def root(path: String): String = s"$path/$dir"
-    def snapshot(spark: SparkSession, path: String): Store.Snap =
-      Store.snapshot(spark, root(path))
+
+    /** The live snapshot, refused when the relation's manifest is not
+      * laid out as declared — an append would otherwise fail at its
+      * schema fence only after a sibling relation's batch committed. */
+    def snapshot(spark: SparkSession, path: String): Store.Snap = {
+      val snap = Store.snapshot(spark, root(path))
+      val laid = snap.partitionSchema.fieldNames.map(_.toLowerCase).toSeq
+      if (laid != partitionCols.map(_.toLowerCase))
+        throw new IllegalStateException(
+          s"store relation ${root(path)} is partitioned by " +
+            s"${laid.mkString("[", ", ", "]")}, not its declared " +
+            s"${partitionCols.mkString("[", ", ", "]")} — compact the store " +
+            s"to re-lay it in the declared layout, or rebuild it")
+      snap
+    }
     def read(spark: SparkSession, path: String): DataFrame =
       Store.read(spark, root(path))
     def create(df: DataFrame, path: String): Unit =
       Store.create(df, root(path), partitionCols, clusterBy,
         splits = splits(None))
 
-    /** Append `rows` under the [[Store.append]] fence, shaped by the
-      * layout; `partitioned = false` writes a legacy flat store flat. */
-    def append(spark: SparkSession, path: String,
-        partitioned: Boolean = true)(rows: => DataFrame): Unit =
+    /** Append `rows` under the [[Store.append]] fence, shaped and
+      * partitioned by the declared layout. */
+    def append(spark: SparkSession, path: String)(rows: => DataFrame): Unit =
       Store.append(spark, root(path)) { dir =>
         val w = shape(rows).write.mode("append")
-        (if (partitioned && partitionCols.nonEmpty)
-          w.partitionBy(partitionCols: _*) else w).parquet(dir)
+        (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+          .parquet(dir)
       }
 
-    /** Layout-preserving bounded-replay rewrite (legacy flat stores
-      * upgrade to the declared layout here). */
+    /** Bounded-replay rewrite into the declared layout (so a relation
+      * laid out otherwise is re-laid here). */
     def rewrite(spark: SparkSession, path: String, numFiles: Int)(
         out: Store.Snap => DataFrame): Unit =
       Store.rewriteWithRetry(spark, root(path), numFiles, partitionCols,
@@ -88,9 +100,12 @@ private[graft] object BucketStore {
     spark.read.parquet(metaDir(path))
 
   /** Drop every row of a (band, bucket) relation whose bucket holds
-    * more than `maxBucketSize` rows — the write-time skew guard. */
+    * more than `maxBucketSize` rows — the skew guard of every banded
+    * match and store write. `Int.MaxValue` keeps every row, with no
+    * window. */
   def capBuckets(buckets: DataFrame, maxBucketSize: Int): DataFrame =
-    buckets
+    if (maxBucketSize == Int.MaxValue) buckets
+    else buckets
       .withColumn("__graft_bsz",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("band"), col("bucket"))))
@@ -161,9 +176,9 @@ private[graft] object BucketStore {
 
   /** The per-file keep decision for a banded bucket relation probed
     * with `(band, bucket)` keys: the file's band comes from its
-    * partition path (or its recorded band stats for unpartitioned
-    * legacy layouts), its bucket range from the recorded stats;
-    * anything unknown keeps the file (conservative superset). */
+    * partition path, its bucket range from the recorded stats;
+    * anything unknown (no band segment, no bucket stats) keeps the
+    * file against every probed band (conservative superset). */
   private def bucketKeepFn(keys: Array[(Int, Long)]): KeepFn = {
     val byBand: Map[Int, Array[Long]] =
       keys.groupBy(_._1).map { case (b, ks) => b -> ks.map(_._2).sorted }
@@ -171,11 +186,7 @@ private[graft] object BucketStore {
       val bands: Iterable[Int] =
         pv.collectFirst { case (k, v) if k.equalsIgnoreCase("band") => v }
           .flatMap(v => scala.util.Try(v.toInt).toOption)
-          .map(Seq(_))
-          .getOrElse(stats.get("band") match {
-            case Some((mn, mx)) => mn.toInt to mx.toInt
-            case None => byBand.keys
-          })
+          .fold[Iterable[Int]](byBand.keys)(Seq(_))
       bands.exists(b => byBand.get(b).exists(arr =>
         stats.get("bucket") match {
           case Some((mn, mx)) => anyKeyInRange(arr, mn, mx)
@@ -193,13 +204,11 @@ private[graft] object BucketStore {
       case None => true
     }
 
-  private def unprunable(snap: Store.Snap): Boolean =
-    snap.legacy || snap.files.isEmpty
+  private def unprunable(snap: Store.Snap): Boolean = snap.files.isEmpty
 
   /** The snapshot's scan restricted to the files that can hold a
     * collected key — a conservative SUPERSET (files without stats
-    * survive; legacy generations scan fully), so it prunes BYTES,
-    * never rows. */
+    * survive), so it prunes BYTES, never rows. */
   def prunedScan(snap: Store.Snap, scheme: KeyScheme,
       keys: ProbeKeys): DataFrame =
     if (unprunable(snap)) snap.df
@@ -222,8 +231,8 @@ private[graft] object BucketStore {
     * rows drive both the driver-side file prune and (as a local
     * relation) the exact semi-join — re-evaluating the distributed
     * plan for the broadcast would repeat its shuffle on every probe.
-    * Probes touching more than [[MaxProbeKeys]] keys (or legacy,
-    * stat-less stores) fall back to the distributed broadcast, where
+    * Probes touching more than [[MaxProbeKeys]] keys (or an empty
+    * relation) fall back to the distributed broadcast, where
     * the scan-side bound comes from DPP alone. On a banded relation
     * Catalyst's DPP prunes the band partitions through the semi-join;
     * the file prune covers the file-in-partition granularity DPP cannot
@@ -311,7 +320,7 @@ private[graft] object BucketStore {
     }
     val stored = storedRows
       .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("__stored"))
-    rel.append(spark, path, snap.partitionSchema.fieldNames.nonEmpty) {
+    rel.append(spark, path) {
       rows
         .withColumn("__rn",
           row_number().over(org.apache.spark.sql.expressions.Window

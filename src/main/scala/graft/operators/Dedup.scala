@@ -846,20 +846,16 @@ object Dedup {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     require(maxBucketSize > 0, "maxBucketSize must be > 0")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("band"), col("bucket"))
     def sigSide(src: DataFrame, id: Column, text: Column): DataFrame =
       src.select(id.as("id"), shingleHashes(text, shingleLen).as("sh"))
         .filter(size(col("sh")) > 0)
         .withColumn("sig", minhashSignature(col("sh"), numPerm))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def bucketSide(sigs: DataFrame): DataFrame =
+    def bucketSide(sigs: DataFrame): DataFrame = BucketStore.capBuckets(
       sigs.select(col("id"),
         explode(bandBuckets(col("sig"), bands, rowsPerBand)).as("bb"))
-        .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-        .withColumn("__bsz", count(lit(1)).over(w))
-        .filter(col("__bsz") <= maxBucketSize)
-        .drop("__bsz")
+        .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket")),
+      maxBucketSize)
     val corpus = sigSide(df, col(idCol), col(textCol))
     // identical benchmark texts collapse to one id (xxhash64 of the
     // text) — the match relation only needs SOME bench witness
@@ -930,18 +926,15 @@ object Dedup {
       .filter(size(col("sh_b")) > 0)
       .withColumn("sig", minhashSignature(col("sh_b"), numPerm))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val benchBuckets = bench
+    val benchBuckets = BucketStore.capBuckets(bench
       .select(col("bench_id"),
         explode(bandBuckets(col("sig"), bands, rowsPerBand)).as("bb"))
-      .select(col("bench_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .withColumn("__bsz", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("bucket"))))
-      .filter(col("__bsz") <= maxBucketSize)
-      .drop("__bsz")
+      .select(col("bench_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket")),
+      maxBucketSize)
     val benchSh = bench.select(col("bench_id"), col("sh_b"))
     val schema = spark.read.parquet(docsPath).schema
-    LandingZone.toMemory(spark, "append") { s =>
+    // the returned rows are collected, so nothing reads `bench` after
+    try LandingZone.toMemory(spark, "append") { s =>
       s.readStream.schema(schema).parquet(docsPath)
         .select(col(idCol).as("id"),
           shingleHashes(col(textCol), shingleLen).as("sh"))
@@ -958,7 +951,7 @@ object Dedup {
             size(array_union(col("sh"), col("sh_b"))).cast("double")
             >= threshold)
         .select(col("id"))
-    }
+    } finally bench.unpersist(blocking = false)
   }
 
   /** Per-document benchmark-contamination REPORT: the fraction of each
@@ -1369,13 +1362,11 @@ object Dedup {
   }
 
   private object SigParams {
-    /** The parameters pinned in a table's meta (older tables without
-      * the `multi_probe` column band plain). */
+    /** The parameters pinned in a table's meta. */
     def apply(meta: org.apache.spark.sql.Row): SigParams = SigParams(
       meta.getAs[Int]("shingle_len"), meta.getAs[Int]("num_perm"),
       meta.getAs[Int]("bands"), meta.getAs[Int]("max_bucket_size"),
-      meta.schema.fieldNames.contains("multi_probe") &&
-        meta.getAs[Boolean]("multi_probe"))
+      meta.getAs[Boolean]("multi_probe"))
   }
 
   /** Materialize the MinHash signature/bucket relations for a corpus —
@@ -1876,14 +1867,7 @@ object Dedup {
     val banded = withSig.select(col("id"), col("sig"),
       explode(hammingBands(col("sig"), nBands)).as("bb"))
       .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val capped =
-      if (maxBucketSize == Int.MaxValue) banded
-      else banded
-        .withColumn("__bsz",
-          count(lit(1)).over(org.apache.spark.sql.expressions.Window
-            .partitionBy(col("band"), col("bucket"))))
-        .filter(col("__bsz") <= maxBucketSize)
-        .drop("__bsz")
+    val capped = BucketStore.capBuckets(banded, maxBucketSize)
     val a = capped.select(col("band"), col("bucket"), col("id").as("id_a"), col("sig").as("sig_a"))
     val b = capped.select(col("band"), col("bucket"), col("id").as("id_b"), col("sig").as("sig_b"))
     a.join(b, Seq("band", "bucket"))

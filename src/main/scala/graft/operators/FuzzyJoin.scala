@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape:
   *  - neighborhood size is O(|s|^maxDist) per row (|s|+1 for d=1),
-  *    generated inside the row by codegen-friendly built-ins
-  *    (`transform`/`flatten`/`array_distinct`) — no UDF;
+  *    generated inside the row by one native codegen'd kernel
+  *    ([[deletionVariants]]) — no UDF;
   *  - the only shuffle is the variant-key equi-join; a hot key
   *    (shared boilerplate values) makes it quadratic in that key's
   *    occupancy, so the same loud `maxBucketSize` contract as the LSH
@@ -36,30 +36,12 @@ object FuzzyJoin {
 
   /** All strings reachable from `s` by deleting up to `maxDist`
     * characters (including `s` itself), distinct. Native one-pass
-    * kernel (graft.plans) — the HOF form below is interpreted
-    * (|s| boxed lambda calls per row per level) and was the measured
-    * cost center of the candidate stage in the 10× rehearsal. */
+    * kernel (graft.plans) — an interpreted higher-order-function form
+    * (|s| boxed lambda calls per row per level) was the measured cost
+    * center of the candidate stage in the 10× rehearsal. */
   private[operators] def deletionVariants(s: Column, maxDist: Int): Column = {
     require(maxDist >= 0, "maxDist must be >= 0")
     graft.plans.native.deletionVariants(s, maxDist)
-  }
-
-  /** Reference HOF formulation of [[deletionVariants]] — kept as the
-    * test oracle for the native kernel (FuzzyJoinSpec pins elementwise
-    * equality, order included). */
-  private[operators] def deletionVariantsHof(s: Column, maxDist: Int): Column = {
-    require(maxDist >= 0, "maxDist must be >= 0")
-    def dels(strs: Column): Column = // one deletion applied to each element
-      flatten(transform(strs, v =>
-        transform(sequence(lit(1), length(v)), i =>
-          concat(v.substr(lit(1), i - 1), v.substr(i + 1, length(v) - i)))))
-    var acc = array(s)
-    var frontier = array(s)
-    for (_ <- 1 to maxDist) {
-      frontier = array_distinct(dels(frontier))
-      acc = concat(acc, frontier)
-    }
-    array_distinct(acc)
   }
 
   /** Fuzzy inner join of `left` and `right` on Levenshtein distance

@@ -165,13 +165,7 @@ object Similarity {
       posexplode(array((0 until bands).map { b =>
         hyperplaneSignature(col("v"), bandBits, seed = b.toLong)
       }: _*)).as(Seq("band", "bucket")))
-    val capped =
-      if (maxBucketSize == Int.MaxValue) banded
-      else banded
-        .withColumn("__bsz",
-          count(lit(1)).over(Window.partitionBy(col("band"), col("bucket"))))
-        .filter(col("__bsz") <= maxBucketSize)
-        .drop("__bsz")
+    val capped = BucketStore.capBuckets(banded, maxBucketSize)
     // multi-probe expands the PROBE side only (flips after the cap:
     // cap semantics stay defined on true bucket occupancy, and a probe
     // into a capped-out hot bucket finds its rows already gone)

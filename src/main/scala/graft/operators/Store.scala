@@ -108,14 +108,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    loudly with one winner whose manifest lists only its own files,
   *    but racing creates is a caller bug, not a supported protocol.
   *
-  * Generations written by rounds before the file-list manifest (their
-  * manifest files are EMPTY) stay readable through directory
-  * discovery, and their appends keep the r11 semantics (direct write
-  * into the generation directory, pointer re-check plus intent check);
-  * the first rewrite upgrades the relation to the new format. For
-  * those legacy generations the rewrite-side fence re-lists the data
-  * directory instead of the marker set — same guarantee, one extra
-  * listing, paid only until the upgrade.
+  * Every manifest carries the `graft-store-v2` header. A manifest
+  * without it (zero bytes, truncated, or written before the file-list
+  * manifest existed) fails loudly as corrupt: such a store must be
+  * rebuilt.
   *
   * Single-relation metadata that never changes after the build (the
   * `meta` / `codebook` / `centroids` relations) stays a plain
@@ -135,32 +131,29 @@ object Store {
       extends IllegalStateException(msg)
 
   /** A resolved read snapshot of one relation: the generation it
-    * bound, the fence state observed when the file list was read
-    * (v2: the set of append-marker names; legacy: the data
-    * directory's `relPath:size` fingerprint), the committed file list
-    * with its per-file stats (empty for legacy generations), the
-    * partition/data schema split, and the DataFrame over exactly those
-    * files. [[rewrite]] REQUIRES the snapshot its output was derived
-    * from — that is what makes the ingest-vs-maintenance fence sound
-    * in the ordering where the append lands between the caller's read
-    * and the rewrite's commit. */
+    * bound, the fence state observed when the file list was read (the
+    * set of append-marker names), the committed file list with its
+    * per-file stats, the partition/data schema split, and the
+    * DataFrame over exactly those files. [[rewrite]] REQUIRES the
+    * snapshot its output was derived from — that is what makes the
+    * ingest-vs-maintenance fence sound in the ordering where the
+    * append lands between the caller's read and the rewrite's commit. */
   final case class Snap(
-      relRoot: String, gen: Gen, fence: Set[String], legacy: Boolean,
+      relRoot: String, gen: Gen, fence: Set[String],
       df: DataFrame, files: Seq[FileEntry],
       partitionSchema: StructType, dataSchema: StructType) {
     /** The snapshot's EXACT row count from the manifest's per-file
       * counts (recorded from parquet footers at commit time) — a
       * free scalar where a `count()` is a whole job. None when any
-      * file predates the r16 count entry or the store is legacy:
-      * callers gating a broadcast on it must then leave the planner's
-      * choice standing (the conservative direction). */
+      * file predates the r16 count entry: callers gating a broadcast
+      * on it must then leave the planner's choice standing (the
+      * conservative direction). */
     def manifestRowCount: Option[Long] =
-      if (legacy || files.isEmpty || files.exists(_.rows < 0)) None
+      if (files.isEmpty || files.exists(_.rows < 0)) None
       else Some(files.map(_.rows).sum)
   }
 
   private def manifestsDir(relRoot: String) = s"$relRoot/_manifests"
-  private def legacyGenPath(relRoot: String, n: Long) = f"$relRoot/g-$n%09d"
   private def manifestName(n: Long) = f"m-$n%09d"
   private def intentName(n: Long) = f"r-$n%09d"
   private def markerPrefix(n: Long) = f"a-$n%09d-"
@@ -185,7 +178,7 @@ object Store {
     * forward before writers when upgrading a fleet. */
   private val FormatTag = "graft-store-v2"
 
-  /** Parsed manifest content (None = legacy empty manifest). */
+  /** Parsed manifest content. */
   private final case class Manifest(
       dirName: String, partitionSchema: StructType, dataSchema: StructType,
       files: Seq[FileEntry])
@@ -197,7 +190,7 @@ object Store {
     * reader's 3-field branch throws NumberFormatException on the tag
     * and skips the entry, losing only the count) — URL-encoding
     * removes `:`/`;` from names and values, so the shapes parse
-    * unambiguously and legacy 3-field manifests read unchanged. */
+    * unambiguously and int-only (pre-r14) manifests read unchanged. */
   private def renderStats(
       stats: Map[String, (Long, Long)],
       strStats: Map[String, (String, String)],
@@ -280,11 +273,17 @@ object Store {
     }.toSeq
 
   /** `where` names the manifest file in the corrupt-manifest error: a
-    * v2-tagged manifest missing its directory/schema lines is damage
-    * (truncated write, manual edit), never a legal state — failing
-    * loudly here beats a `<relRoot>/null` path or an NPE downstream. */
-  private def parseManifest(content: String, where: String): Option[Manifest] = {
-    if (!content.startsWith(FormatTag)) return None
+    * manifest without the v2 header, or missing its directory/schema
+    * lines, is damage (zero-byte or truncated write, manual edit) or a
+    * store from before the file-list manifest, never a legal state —
+    * failing loudly here beats a `<relRoot>/null` path or an NPE
+    * downstream. */
+  private def parseManifest(content: String, where: String): Manifest = {
+    if (!content.startsWith(FormatTag))
+      throw new IllegalStateException(
+        s"corrupt store manifest $where: the $FormatTag header is missing " +
+          s"(a zero-byte or truncated manifest, or a store written before " +
+          s"$FormatTag) — this store cannot be read; rebuild it")
     var dirName: String = null
     var pSchema: StructType = null
     var dSchema: StructType = null
@@ -301,7 +300,7 @@ object Store {
           s"but the directory/partition-schema/data-schema lines are " +
           s"incomplete (truncated or hand-edited manifest) — restore the " +
           s"manifest or roll back to the previous generation's pointer")
-    Some(Manifest(dirName, pSchema, dSchema, parseFileLines(content)))
+    Manifest(dirName, pSchema, dSchema, parseFileLines(content))
   }
 
   /** The pluggable commit primitive ([[StoreCommit]]): rename-based by
@@ -369,41 +368,28 @@ object Store {
   }
 
   private def loadManifest(
-      spark: SparkSession, relRoot: String, n: Long): Option[Manifest] = {
+      spark: SparkSession, relRoot: String, n: Long): Manifest = {
     val mf = new Path(manifestsDir(relRoot), manifestName(n))
     val fs = fileSystem(spark, mf)
-    val content = readSmallFile(fs, mf)
-    parseManifest(content, mf.toString)
+    parseManifest(readSmallFile(fs, mf), mf.toString)
   }
 
-  /** A fully-resolved view of the relation's live generation: the
-    * listing, the parsed manifest, and every append marker's file
-    * entries (with the `a-<uuid>/` batch prefix applied). */
-  private final case class Resolved(
-      st: State, manifest: Option[Manifest], markerFiles: Seq[FileEntry])
-
-  /** Resolve listing + manifest + markers as ONE consistent view,
-    * retrying when a listed manifest/marker file vanishes between the
-    * listing and its read — the reader-vs-maintenance race: a raced
-    * append WITHDRAWS its marker (its rows were never committed) and a
-    * committed rewrite sweeps superseded manifests/markers; both are
-    * resolved by re-listing, not by surfacing a raw missing-file
-    * error to a pure reader. */
-  private def resolve(spark: SparkSession, relRoot: String): Resolved = {
-    val mdir = new Path(manifestsDir(relRoot))
-    val fs = fileSystem(spark, mdir)
+  /** Read `view` off a fresh listing, re-listing when a listed
+    * manifest/marker file vanishes between the listing and its read —
+    * the reader-vs-maintenance race: a raced append WITHDRAWS its
+    * marker (its rows were never committed) and a committed rewrite
+    * sweeps superseded manifests/markers; both are resolved by
+    * re-listing, not by surfacing a raw missing-file error to a pure
+    * reader. */
+  private def relisting[T](spark: SparkSession, relRoot: String)(
+      view: State => T): T = {
     var attempts = 0
     var lastMiss: java.io.FileNotFoundException = null
     while (attempts < 4) {
       attempts += 1
       val st = listState(spark, relRoot)
-      try {
-        val manifest = loadManifest(spark, relRoot, st.n)
-        val markerFiles = st.markers.toSeq.sorted.flatMap { name =>
-          parseFileLines(readSmallFile(fs, new Path(mdir, name)))
-        }
-        return Resolved(st, manifest, markerFiles)
-      } catch {
+      try return view(st)
+      catch {
         case e: java.io.FileNotFoundException => lastMiss = e
       }
     }
@@ -414,35 +400,35 @@ object Store {
         s"damaged", lastMiss)
   }
 
+  /** A fully-resolved view of the relation's live generation: the
+    * listing, the parsed manifest, and every append marker's file
+    * entries (with the `a-<uuid>/` batch prefix applied). */
+  private final case class Resolved(
+      st: State, manifest: Manifest, markerFiles: Seq[FileEntry])
+
+  /** Resolve listing + manifest + markers as ONE consistent view. */
+  private def resolve(spark: SparkSession, relRoot: String): Resolved = {
+    val mdir = new Path(manifestsDir(relRoot))
+    val fs = fileSystem(spark, mdir)
+    relisting(spark, relRoot) { st =>
+      val manifest = loadManifest(spark, relRoot, st.n)
+      val markerFiles = st.markers.toSeq.sorted.flatMap { name =>
+        parseFileLines(readSmallFile(fs, new Path(mdir, name)))
+      }
+      Resolved(st, manifest, markerFiles)
+    }
+  }
+
   /** Resolve the live generation of one relation: the highest-numbered
     * manifest file wins. Fails loudly when the relation does not exist
     * (no manifest directory or no manifest file). Reads the listing
     * plus ONE manifest file — never the append markers' contents
     * (which only [[snapshot]]/[[partFileCount]] consume); on an object
-    * store that is one GET however many batches have landed. Retries
-    * a manifest that vanishes between the listing and its read (a
-    * committed rewrite sweeping superseded manifests), same as
-    * [[resolve]]. */
-  def currentGen(spark: SparkSession, relRoot: String): Gen = {
-    var attempts = 0
-    var lastMiss: java.io.FileNotFoundException = null
-    while (attempts < 4) {
-      attempts += 1
-      val st = listState(spark, relRoot)
-      try {
-        return loadManifest(spark, relRoot, st.n) match {
-          case Some(m) => Gen(st.n, s"$relRoot/${m.dirName}")
-          case None => Gen(st.n, legacyGenPath(relRoot, st.n))
-        }
-      } catch {
-        case e: java.io.FileNotFoundException => lastMiss = e
-      }
+    * store that is one GET however many batches have landed. */
+  def currentGen(spark: SparkSession, relRoot: String): Gen =
+    relisting(spark, relRoot) { st =>
+      Gen(st.n, s"$relRoot/${loadManifest(spark, relRoot, st.n).dirName}")
     }
-    throw new IllegalStateException(
-      s"store resolution at $relRoot kept racing concurrent maintenance: " +
-        s"the listed manifest vanished on $attempts consecutive attempts — " +
-        s"if no writer is active, the manifest directory is damaged", lastMiss)
-  }
 
   /** Resolve a read snapshot: the generation, its fence state, and a
     * DataFrame over exactly the files the manifest plus the current
@@ -460,21 +446,12 @@ object Store {
     * append REPORTED SUCCESS are stable. */
   def snapshot(spark: SparkSession, relRoot: String): Snap = {
     val r = resolve(spark, relRoot)
-    r.manifest match {
-      case Some(m) =>
-        val dataPath = s"$relRoot/${m.dirName}"
-        val files = m.files ++ r.markerFiles
-        val df = manifestDf(spark, dataPath, files,
-          m.partitionSchema, m.dataSchema)
-        Snap(relRoot, Gen(r.st.n, dataPath), r.st.markers, legacy = false,
-          df, files, m.partitionSchema, m.dataSchema)
-      case None =>
-        val dataPath = legacyGenPath(relRoot, r.st.n)
-        val df = spark.read.parquet(dataPath)
-        Snap(relRoot, Gen(r.st.n, dataPath),
-          legacyFingerprint(spark, dataPath), legacy = true,
-          df, Nil, new StructType(), df.schema)
-    }
+    val m = r.manifest
+    val dataPath = s"$relRoot/${m.dirName}"
+    val files = m.files ++ r.markerFiles
+    Snap(relRoot, Gen(r.st.n, dataPath), r.st.markers,
+      manifestDf(spark, dataPath, files, m.partitionSchema, m.dataSchema),
+      files, m.partitionSchema, m.dataSchema)
   }
 
   /** Read the live generation of one relation. */
@@ -489,14 +466,11 @@ object Store {
     * time under a single-ingest-loop caller contract; this check turns
     * a silent violation of that contract (occupancy undercount,
     * duplicate hash rows) into a detected one the caller can heal by
-    * re-resolving (ADVICE r15). Legacy stores re-fingerprint the data
-    * directory — same listing cost. */
-  private[graft] def changedSince(spark: SparkSession, snap: Snap): Boolean =
-    if (snap.legacy) legacyFingerprint(spark, snap.gen.dataPath) != snap.fence
-    else {
-      val st = listState(spark, snap.relRoot)
-      st.n != snap.gen.n || st.markers != snap.fence
-    }
+    * re-resolving (ADVICE r15). */
+  private[graft] def changedSince(spark: SparkSession, snap: Snap): Boolean = {
+    val st = listState(spark, snap.relRoot)
+    st.n != snap.gen.n || st.markers != snap.fence
+  }
 
   /** Read a store's ONE-ROW `meta` sidecar relation on the DRIVER —
     * no Spark job. Every ingest batch re-reads its table's meta row
@@ -624,8 +598,8 @@ object Store {
         ExternalCatalogUtils.unescapePathName(seg.drop(i + 1)))
     }.toMap
 
-  /** A file-pruned scan plus its pruning arithmetic (counts/bytes are
-    * -1 when the snapshot is legacy and pruning did not apply). */
+  /** A file-pruned scan plus its pruning arithmetic: the kept and the
+    * total file counts and bytes. */
   private[graft] final case class PrunedScan(
       df: DataFrame, keptFiles: Long, keptBytes: Long,
       totalFiles: Long, totalBytes: Long)
@@ -645,10 +619,10 @@ object Store {
     * `keep` receives the file's partition values (raw `k=v` path
     * strings) and its recorded stats (`col -> (min, max)` over the
     * file's NON-NULL values; sound for the null-insensitive key
-    * lookups probes perform). CONSERVATIVE by construction: legacy
-    * snapshots and files without stats are kept, so the pruned scan is
-    * always a superset of the matching rows — callers keep their
-    * exact semi-joins downstream. */
+    * lookups probes perform). CONSERVATIVE by construction: files
+    * without stats are kept, so the pruned scan is always a superset
+    * of the matching rows — callers keep their exact semi-joins
+    * downstream. */
   def pruneFiles(snap: Snap)(
       keep: (Map[String, String], Map[String, (Long, Long)]) => Boolean)
       : DataFrame =
@@ -657,27 +631,11 @@ object Store {
   private[graft] def prunedScan(snap: Snap)(
       keep: (Map[String, String], Map[String, (Long, Long)]) => Boolean)
       : PrunedScan = {
-    if (snap.legacy)
-      return PrunedScan(snap.df, -1L, -1L, -1L, -1L)
     val kept = snap.files.filter(f => keep(partitionValuesOf(f.rel), f.stats))
     val df = manifestDf(snap.df.sparkSession, snap.gen.dataPath, kept,
       snap.partitionSchema, snap.dataSchema)
     PrunedScan(df, kept.size.toLong, kept.map(_.size).sum,
       snap.files.size.toLong, snap.files.map(_.size).sum)
-  }
-
-  private def legacyFingerprint(
-      spark: SparkSession, dataPath: String): Set[String] = {
-    val p = new Path(dataPath)
-    val fs = fileSystem(spark, p)
-    val it = fs.listFiles(p, true)
-    val b = Set.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet"))
-        b += s"${f.getPath.getName}:${f.getLen}"
-    }
-    b.result()
   }
 
   /** Recursive `.parquet` listing of a directory the CALLER just wrote
@@ -995,60 +953,39 @@ object Store {
       write: String => Unit): Unit = {
     val st0 = listState(spark, relRoot)
     failIfIntent(relRoot, st0, "append")
-    val manifest = loadManifest(spark, relRoot, st0.n)
+    val m = loadManifest(spark, relRoot, st0.n)
     val mdir = new Path(manifestsDir(relRoot))
     val fs = fileSystem(spark, mdir)
-    manifest match {
-      case None =>
-        // legacy generation: files must land where directory discovery
-        // finds them; the fence is the pointer re-check + intent check.
-        // A legacy (empty) manifest always has its exact-named data
-        // directory — with manifests now rename-published a torn read
-        // can no longer masquerade as legacy, so a missing directory
-        // here is damage, and writing the batch into a fresh directory
-        // no reader resolves would be a silent loss
-        val legacyDir = new Path(legacyGenPath(relRoot, st0.n))
-        if (!fs.exists(legacyDir)) throw new IllegalStateException(
-          s"append to $relRoot: manifest ${manifestName(st0.n)} is empty " +
-            s"(legacy format) but its data directory $legacyDir does not " +
-            s"exist — the manifest directory is damaged; refusing to " +
-            s"write the batch where no reader would find it")
-        write(legacyDir.toString)
-        val st1 = listState(spark, relRoot)
-        failIfIntent(relRoot, st1, "append")
-        failIfMoved(relRoot, st0.n, st1.n)
-      case Some(m) =>
-        val sub = s"a-$uuid8"
-        val subPath = new Path(s"$relRoot/${m.dirName}/$sub")
-        write(subPath.toString)
-        val statted = statWritten(spark, fs, subPath)
-        if (statted.isEmpty) return
-        checkAppendSchema(relRoot, m, statted, fs, subPath)
-        val written = statted.map { case (f, _) =>
-          f.copy(rel = s"$sub/${f.rel}")
-        }
-        // publish gate 1: don't even publish under a live rewrite
-        val st1 = listState(spark, relRoot)
-        failIfIntent(relRoot, st1, "append")
-        failIfMoved(relRoot, st0.n, st1.n)
-        val markerName = markerPrefix(st0.n) + uuid8
-        val marker = new Path(mdir, markerName)
-        publishExclusive(fs, marker, renderMarker(written)) {
-          throw new RetryableConflictException(
-            s"append marker collision on $relRoot — retry the batch")
-        }
-        // publish gate 2: a rewrite intent that raced the marker means
-        // the rewrite may not have seen it — withdraw and replay
-        val st2 = listState(spark, relRoot)
-        if (st2.intents.nonEmpty || st2.n != st0.n) {
-          if (!fs.delete(marker, false))
-            throw new IllegalStateException(
-              s"append to $relRoot lost a race with a concurrent rewrite " +
-                s"AND could not withdraw its marker $markerName — remove it " +
-                s"manually before replaying, or the batch may double-apply")
-          failIfIntent(relRoot, st2, "append")
-          failIfMoved(relRoot, st0.n, st2.n)
-        }
+    val sub = s"a-$uuid8"
+    val subPath = new Path(s"$relRoot/${m.dirName}/$sub")
+    write(subPath.toString)
+    val statted = statWritten(spark, fs, subPath)
+    if (statted.isEmpty) return
+    checkAppendSchema(relRoot, m, statted, fs, subPath)
+    val written = statted.map { case (f, _) =>
+      f.copy(rel = s"$sub/${f.rel}")
+    }
+    // publish gate 1: don't even publish under a live rewrite
+    val st1 = listState(spark, relRoot)
+    failIfIntent(relRoot, st1, "append")
+    failIfMoved(relRoot, st0.n, st1.n)
+    val markerName = markerPrefix(st0.n) + uuid8
+    val marker = new Path(mdir, markerName)
+    publishExclusive(fs, marker, renderMarker(written)) {
+      throw new RetryableConflictException(
+        s"append marker collision on $relRoot — retry the batch")
+    }
+    // publish gate 2: a rewrite intent that raced the marker means
+    // the rewrite may not have seen it — withdraw and replay
+    val st2 = listState(spark, relRoot)
+    if (st2.intents.nonEmpty || st2.n != st0.n) {
+      if (!fs.delete(marker, false))
+        throw new IllegalStateException(
+          s"append to $relRoot lost a race with a concurrent rewrite " +
+            s"AND could not withdraw its marker $markerName — remove it " +
+            s"manually before replaying, or the batch may double-apply")
+      failIfIntent(relRoot, st2, "append")
+      failIfMoved(relRoot, st0.n, st2.n)
     }
   }
 
@@ -1125,9 +1062,10 @@ object Store {
     * `partitionCols`/`clusterBy`/`numFiles` shape the new generation
     * exactly as [[create]] — layout-preserving maintenance passes the
     * same layout the relation was built with (the retire/compact call
-    * sites pass their table's layout literally — deliberately, since a
-    * rewrite is also the legacy-store UPGRADE path, where discovering
-    * the old layout would preserve flatness instead of fixing it).
+    * sites pass their table's layout literally — deliberately, since
+    * compaction re-lays ANY relation into its declared layout, where
+    * discovering the old layout would preserve a drifted one instead
+    * of fixing it).
     * Fence-loser outcomes throw [[RetryableConflictException]]
     * ([[rewriteWithRetry]] is the bounded-replay harness).
     *
@@ -1187,9 +1125,7 @@ object Store {
       // while this rewrite's intent exists no OTHER maintenance can
       // commit, so a vanished fence marker can only mean withdrawal,
       // never a concurrent sweep.
-      val fenceNow =
-        if (snap.legacy) legacyFingerprint(spark, snap.gen.dataPath)
-        else listState(spark, relRoot).markers
+      val fenceNow = listState(spark, relRoot).markers
       if (fenceNow != snap.fence) throw new RetryableConflictException(
         s"rewrite of $relRoot aborted: the append-marker set changed " +
           s"after this rewrite's input snapshot was taken (added: " +
@@ -1339,10 +1275,10 @@ object Store {
     * within each file's recorded [min,max]: exactly right for a
     * relation this layer range-clustered in the first place, and a
     * sampling pass over the whole store avoided on every maintenance
-    * rewrite. None when any file lacks the stat (legacy generation) —
-    * the caller falls back to sampling. */
+    * rewrite. None when any file lacks the stat — the caller falls
+    * back to sampling. */
   def statsSplits(snap: Snap, key: String): Option[RangeSplits] = {
-    if (snap.legacy || snap.files.isEmpty) return None
+    if (snap.files.isEmpty) return None
     val ranged = snap.files.map { f =>
       f.stats.get(key).orElse(f.stats.collectFirst {
         case (k, v) if k.equalsIgnoreCase(key) => v
@@ -1481,10 +1417,9 @@ object Store {
   /** Highest value of an int partition column recorded in the
     * snapshot's file paths, plus one — the block count a maintenance
     * rewrite hands [[hashKeySplits]] for a 0-based partition domain
-    * (LSH band ids). None on legacy snapshots or when any file lacks
-    * the segment. */
+    * (LSH band ids). None when any file lacks the segment. */
   def partitionBlockCount(snap: Snap, colName: String): Option[Int] = {
-    if (snap.legacy || snap.files.isEmpty) return None
+    if (snap.files.isEmpty) return None
     val vals = snap.files.flatMap(f =>
       partitionValuesOf(f.rel).collectFirst {
         case (k, v) if k.equalsIgnoreCase(colName) => v.toInt
@@ -1562,9 +1497,8 @@ object Store {
   private def genNumberOf(dirName: String): Option[Long] = {
     if (!dirName.startsWith("g-")) return None
     val digits = dirName.drop(2).takeWhile(_.isDigit)
-    if (digits.isEmpty) None
-    else if (dirName.length == 2 + digits.length ||
-      dirName.charAt(2 + digits.length) == '-') Some(digits.toLong)
+    if (digits.nonEmpty && dirName.drop(2 + digits.length).startsWith("-"))
+      Some(digits.toLong)
     else None
   }
 
@@ -1603,25 +1537,12 @@ object Store {
     }
   }
 
-  /** Parquet part-file count of the relation's LIVE generation. For a
-    * manifest generation this is a line count over the manifest and
-    * its markers (no filesystem walk); legacy generations fall back to
-    * the recursive listing. The compaction signal every store's stats
-    * query reports. */
+  /** Parquet part-file count of the relation's LIVE generation: a
+    * line count over the manifest and its markers (no filesystem
+    * walk). The compaction signal every store's stats query reports. */
   def partFileCount(spark: SparkSession, relRoot: String): Long = {
     val r = resolve(spark, relRoot)
-    r.manifest match {
-      case Some(m) => m.files.size.toLong + r.markerFiles.size.toLong
-      case None =>
-        val p = new Path(legacyGenPath(relRoot, r.st.n))
-        val fs = fileSystem(spark, p)
-        val it = fs.listFiles(p, true)
-        var n = 0L
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-        n
-    }
+    r.manifest.files.size.toLong + r.markerFiles.size.toLong
   }
 
   /** Resolve a retirement list against the STORE'S OWN id type — the

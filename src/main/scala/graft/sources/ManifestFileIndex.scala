@@ -51,11 +51,12 @@ object ManifestFileIndex {
   *    individual FILES whose recorded `[min, max]` cannot satisfy the
   *    predicate — Iceberg-style file skipping. Evaluation is
   *    conservative interval logic: a file is dropped only when the
-  *    predicate is provably false for every value in range; files
-  *    without stats (legacy commits, non-integral columns) always
-  *    survive. Null semantics are safe by construction: the bounds
-  *    cover non-null values and every supported comparison is
-  *    null-insensitive (NULL never satisfies `=`, `<`, `IN`).
+  *    predicate is provably false for every value in range; a file
+  *    without a stat for the column (footer statistics missing,
+  *    non-integral columns) always survives. Null semantics are safe
+  *    by construction: the bounds cover non-null values and every
+  *    supported comparison is null-insensitive (NULL never satisfies
+  *    `=`, `<`, `IN`).
   */
 final class ManifestFileIndex(
     spark: SparkSession,

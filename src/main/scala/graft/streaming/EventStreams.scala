@@ -44,10 +44,11 @@ object EventStreams {
     * check a Structured Streaming execution path. */
   private def runStreamed(spark: SparkSession, path: String,
       outputMode: String = "complete")(
-      transform: DataFrame => DataFrame): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val batchSchema = spark.read.parquet(path).schema
+      transform: DataFrame => DataFrame): DataFrame =
     LandingZone.toMemory(spark, outputMode) { s =>
+      // nanosecond `ts` reads as long on the query's own session only
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val batchSchema = s.read.parquet(path).schema
       val raw = s.readStream.schema(batchSchema)
         .parquet(LandingZone.stageDir(path, "stream"))
       transform(
@@ -55,7 +56,6 @@ object EventStreams {
           raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         else raw)
     }
-  }
 
   /** [[hourlyTypeCounts]] executed as a real streaming query. */
   def hourlyTypeCountsStreamed(spark: SparkSession, path: String): DataFrame =

@@ -887,6 +887,63 @@ class StoreMaintenanceSpec extends GraftSpec {
       s"expected a loud corrupt-manifest error, got: ${ex.getMessage}")
   }
 
+  test("a zero-byte manifest fails loudly at every entry point, naming the file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_blank_").toString
+    val rel = s"$dir/rel"
+    Store.create(Seq((1L, "a")).toDF("id", "v"), rel)
+    java.nio.file.Files.write(
+      java.nio.file.Paths.get(s"$rel/_manifests/m-000000001"), Array.emptyByteArray)
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$rel/_manifests/.m-000000001.crc"))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "read" -> (() => Store.read(spark, rel)),
+      "snapshot" -> (() => Store.snapshot(spark, rel)),
+      "currentGen" -> (() => Store.currentGen(spark, rel)),
+      "partFileCount" -> (() => Store.partFileCount(spark, rel)),
+      "append" -> (() => Store.append(spark, rel) { d =>
+        Seq((2L, "b")).toDF("id", "v").write.mode("append").parquet(d)
+      }))
+    calls.foreach { case (name, call) =>
+      val ex = intercept[IllegalStateException](call())
+      assert(ex.getMessage.contains("corrupt store manifest") &&
+        ex.getMessage.contains("m-000000001"),
+        s"$name: expected a loud corrupt-manifest error, got: ${ex.getMessage}")
+    }
+  }
+
+  test("a bucket relation laid out flat is refused at open until compaction re-lays it") {
+    val sig = java.nio.file.Files.createTempDirectory("graft_flat_").toString + "/sig"
+    Dedup.writeSignatureTable(freshDocs(1L to 12L, 0L), "doc_id", "text", sig,
+      shingleLen = 3, numPerm = 64, bands = 16)
+    val batch = freshDocs(Seq(1L, 2L, 3L), 1000L)
+      .union(freshDocs(Seq(50L, 51L), 0L))
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Long].collect().toSet
+    // the survivors of the same batch against the table as written
+    val untouched = ids(Dedup.nearDedupIncremental(spark, sig, batch,
+      "doc_id", "text", threshold = 0.7))
+    val buckets = s"$sig/buckets"
+    val stored = Store.read(spark, buckets)
+    Store.create(spark.createDataFrame(
+      java.util.Arrays.asList(stored.collect(): _*), stored.schema), buckets)
+    def counts = Seq("sigs", "buckets")
+      .map(r => Store.snapshot(spark, s"$sig/$r").manifestRowCount)
+    val before = counts
+    def ingest() = ids(Dedup.nearDedupIngest(spark, sig, batch,
+      "doc_id", "text", threshold = 0.7))
+    Seq[() => Any](() => Dedup.openSignatureTable(spark, sig), () => ingest())
+      .foreach { call =>
+        val ex = intercept[IllegalStateException](call())
+        assert(ex.getMessage.contains(buckets) && ex.getMessage.contains("compact"),
+          s"expected the flat-layout refusal, got: ${ex.getMessage}")
+      }
+    assert(counts == before && before.forall(_.isDefined),
+      s"a refused ingest must commit nothing: $before -> $counts")
+    Dedup.compactSignatureTable(spark, sig, numFiles = 2)
+    val got = ingest()
+    assert(got == untouched && got == Set(50L, 51L), s"survivors $got")
+  }
+
   test("rewriteWithRetry racing a stream of appends commits with all rows accounted") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._

@@ -58,6 +58,8 @@ class StreamingSpec extends GraftSpec {
     val path = java.nio.file.Files.createTempDirectory("graft_conf_")
       .resolve("events").toString
     eventsDf.coalesce(1).write.parquet(path)
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    val nanos = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
     val own = spark.conf.get("spark.sql.shuffle.partitions")
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     @volatile var running = true
@@ -72,6 +74,8 @@ class StreamingSpec extends GraftSpec {
     assert(seen.toArray.toSet == Set(own),
       s"the caller's session saw shuffle partitions ${seen.toArray.toSet}, " +
         s"not only its own $own")
+    assert(spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong") == nanos,
+      "the streamed query changed the caller's nanosAsLong setting")
     val want = EventStreams.hourlyTypeCountsBatch(eventsDf)
       .select("hour", "event_type", "n", "total_value")
       .collect().map(_.toSeq).toSet
@@ -286,6 +290,23 @@ class StreamingSpec extends GraftSpec {
     // batch survivors were {1, 3} (TextDedupSpec) — the stream flags
     // the complement of the signature-bearing rows
     assert(flagged == Set(0L, 2L), s"flagged $flagged")
+  }
+
+  test("streamed fuzzy decontamination releases its cached benchmark side") {
+    // a benchmark no other test uses, so no earlier call cached its plan
+    val bench = Seq(
+      "which river runs through the old town of prague on its way north").toDF("text")
+    val staged = graft.Scratch.path("fuzzdecon_leak_spec")
+    Seq((0L, "which river runs through the old town of prague on its way north today"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(staged)
+    val sc = spark.sparkContext
+    val before = sc.getRDDStorageInfo.length
+    (1 to 2).foreach { _ =>
+      graft.operators.Dedup.decontaminateFuzzyStreamed(
+        spark, staged, "doc_id", "text", bench, "text").collect()
+    }
+    assert(sc.getRDDStorageInfo.length == before,
+      s"cached frames grew from $before to ${sc.getRDDStorageInfo.length}")
   }
 
   test("streamed LM scoring equals the batch operator bit-for-bit") {
