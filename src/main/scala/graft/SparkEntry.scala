@@ -6509,7 +6509,7 @@ object SparkEntry {
     // tokenization of the whole corpus — TRUE oracle: DuckDB retrains
     // the identical vocabulary and replays the greedy scan with a
     // recursive CTE over the distinct-word set. The 100-entry vocab is
-    // a bounded driver collect (the NearestCentroid transport — it
+    // a bounded driver collect (the native.nearestCentroid transport — it
     // ships with the plan, not a shuffle).
     "q_subword" -> { (s, dir) =>
       val docs = t(s, dir, "documents")

@@ -37,7 +37,7 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("n_copies"))
 
   /** Distinct hashes of word n-gram shingles — native one-pass kernel
-    * (graft.plans.ShingleHashesExpr). */
+    * ([[graft.plans.native.shingleHashes]]). */
   def shingleHashes(text: Column, n: Int): Column =
     graft.plans.native.shingleHashes(text, n)
 
@@ -50,13 +50,13 @@ object Dedup {
     * is blind to repetition (a doc and the same doc with its content
     * repeated 50× share the same gram SET, Jaccard 1); the weighted
     * form is the standard fix for boilerplate- and spam-heavy corpora.
-    * Native one-pass kernel (graft.plans.WeightedShingleHashesExpr). */
+    * Native one-pass kernel ([[graft.plans.native.shingleHashesWeighted]]). */
   def shingleHashesWeighted(text: Column, n: Int): Column =
     graft.plans.native.shingleHashesWeighted(text, n)
 
   /** MinHash signature: for each of `numPerm` hash functions
     * h_i(x) = XXH64(x, seed=i), the min over the shingle-hash set.
-    * Native codegen'd expression (graft.plans.MinHashSig) — the same
+    * Native codegen'd expression ([[graft.plans.native.minhashSig]]) — the same
     * math as nested `transform`/`array_min` HOFs ran ~100× slower
     * interpreted (260 s for 5k docs at sf0.1). */
   def minhashSignature(shingles: Column, numPerm: Int): Column =

@@ -14,17 +14,11 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Σ aᵢbᵢ as double (declarative HOF form — kept for reference/
-    * comparison; the hot paths use the native kernel). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0d), (s, x) => s + x)
-
   def norm(v: Column): Column =
     sqrt(aggregate(v, lit(0d), (s, x) => s + x.cast("double") * x.cast("double")))
 
   /** Cosine similarity — native codegen'd expression (one fused pass
-    * over both arrays, graft.plans.CosineSim). */
+    * over both arrays, [[graft.plans.native.cosineSim]]). */
   def cosine(a: Column, b: Column): Column =
     graft.plans.native.cosineSim(a, b)
 
@@ -357,7 +351,7 @@ object Similarity {
 
     // nearest centroid id: max cosine, ties → smallest id, evaluated as
     // ONE codegen'd call against the flattened L2-normalized centroid
-    // matrix (a plan reference object — see plans.NearestCentroid). A
+    // matrix (a plan reference object — see native.nearestCentroid). A
     // greatest()-of-k expression tree was quadratic in practice: at
     // k=800 the generated method blew past JIT limits and the 100×
     // rehearsal measured 44 s for the assignment-dominated pass; the
@@ -465,7 +459,7 @@ object Similarity {
     * Lloyd rounds, true squared-L2 assignment). Mirrors [[ivfIndex]]'s
     * layout — centroids live on the driver between rounds; each round
     * is ONE distributed pass where the m-way assignment is a single
-    * codegen'd [[graft.plans.PqEncodeExpr]] call, followed by a
+    * codegen'd [[graft.plans.native.pqEncode]] call, followed by a
     * (subspace, code) vector-sum aggregate whose result is m·k rows.
     * The posexplode multiplies rows by m (≤ 16, a constant), not dim.
     *
@@ -610,7 +604,7 @@ object Similarity {
   /** Approximate k-NN GRAPH: every vector's `k` nearest neighbours by
     * exact cosine, with candidate generation bounded by IVF
     * multi-assignment — each vector posts to its `nprobe` nearest
-    * centroid lists (one codegen'd [[graft.plans.NearestCentroids]]
+    * centroid lists (one codegen'd [[graft.plans.native.nearestCentroids]]
     * call), and only vectors sharing a list are ever compared, so a
     * near-boundary pair still meets in SOME common list with high
     * probability while the all-pairs N² never materializes. The graph

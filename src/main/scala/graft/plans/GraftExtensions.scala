@@ -1,10 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.types.{IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -63,15 +64,14 @@ object LevenshteinBandPrefilter extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 /** The native kernels as SQL functions, so `spark.sql` users get the
-  * same codegen'd one-pass implementations as the Column API. */
+  * same codegen'd one-pass implementations as the Column API. Each is
+  * built through [[native]], which checks the constants. */
 object GraftSqlFunctions {
 
   private type FB = Seq[Expression] => Expression
 
   private def intLit(e: Expression, fn: String, arg: String): Int = e match {
-    case Literal(i: Int, IntegerType) if i > 0 => i
-    case Literal(i: Int, IntegerType) => throw new IllegalArgumentException(
-      s"$fn: $arg must be positive, got $i")
+    case Literal(i: Int, IntegerType) => i
     case other => throw new IllegalArgumentException(
       s"$fn: $arg must be an integer literal, got $other")
   }
@@ -83,43 +83,45 @@ object GraftSqlFunctions {
       s"$fn: $arg must be a string literal, got $other")
   }
 
-  private def f(name: String, usage: String, arity: Int)(b: FB) = (
+  private def c(e: Expression): Column = GraftShim.column(e)
+
+  private def f(name: String, usage: String, arity: Int)(b: Seq[Expression] => Column) = (
     FunctionIdentifier(name),
     new ExpressionInfo("graft.plans.GraftSqlFunctions", null, name, usage, ""),
     (args: Seq[Expression]) => {
       require(args.length == arity,
         s"$name expects $arity arguments, got ${args.length}")
-      b(args)
+      GraftShim.expression(b(args))
     })
 
   val all: Seq[(FunctionIdentifier, ExpressionInfo, FB)] = Seq(
     f("graft_word_ngrams",
       "graft_word_ngrams(text, n) - word n-grams as strings", arity = 2) { args =>
-      WordNgramsExpr(args(0), intLit(args(1), "graft_word_ngrams", "n"))
+      native.wordNgrams(c(args(0)), intLit(args(1), "graft_word_ngrams", "n"))
     },
     f("graft_repetition_stats",
       "graft_repetition_stats(text, n) - [nTokens, totalGrams, distinctGrams]", arity = 2) { args =>
-      RepetitionStatsExpr(args(0), intLit(args(1), "graft_repetition_stats", "n"))
+      native.repetitionStats(c(args(0)), intLit(args(1), "graft_repetition_stats", "n"))
     },
     f("graft_shingle_hashes",
       "graft_shingle_hashes(text, n) - distinct xxh64 word-n-gram hashes", arity = 2) { args =>
-      ShingleHashesExpr(args(0), intLit(args(1), "graft_shingle_hashes", "n"))
+      native.shingleHashes(c(args(0)), intLit(args(1), "graft_shingle_hashes", "n"))
     },
     f("graft_minhash",
       "graft_minhash(shingleHashes, numPerm) - MinHash signature", arity = 2) { args =>
-      MinHashSig(args(0), intLit(args(1), "graft_minhash", "numPerm"))
+      native.minhashSig(c(args(0)), intLit(args(1), "graft_minhash", "numPerm"))
     },
     f("graft_simhash",
       "graft_simhash(tokens) - 64-bit SimHash of a token array", arity = 1) { args =>
-      SimHash64(args(0))
+      native.simhash64(c(args(0)))
     },
     f("graft_cosine",
       "graft_cosine(a, b) - cosine similarity of two float/double arrays", arity = 2) { args =>
-      CosineSim(args(0), args(1))
+      native.cosineSim(c(args(0)), c(args(1)))
     },
     f("graft_normalize",
       "graft_normalize(text, form) - Unicode normalization, form in NFC|NFD|NFKC|NFKD",
       arity = 2) { args =>
-      UnicodeNormalize(args(0), strLit(args(1), "graft_normalize", "form"))
+      native.unicodeNormalize(c(args(0)), strLit(args(1), "graft_normalize", "form"))
     })
 }

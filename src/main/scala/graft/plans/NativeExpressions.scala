@@ -1,678 +1,325 @@
 package graft.plans
 
+import java.lang.reflect.InvocationTargetException
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.classic.GraftShim
 import org.apache.spark.sql.types._
 
-/** Custom Catalyst expressions (SURVEY.md §7.3 "optional later" —
-  * promoted to required once the bench showed interpreted higher-order
-  * functions dominating the dedup/similarity queries).
+/** The one boundary between Catalyst and the native kernels
+  * (SURVEY.md §7.3 "optional later" — promoted to required once the
+  * bench showed interpreted higher-order functions dominating the
+  * dedup/similarity queries).
   *
-  * Each is a thin codegen'd call into [[VectorKernels]]: `doGenCode`
-  * emits a single static invocation, so the expression lives inside
-  * whole-stage codegen like any built-in, and the per-element loops run
-  * as monomorphic JVM code instead of interpreted lambda dispatch.
+  * A [[NativeCall]] is a null-safe call of one [[VectorKernels]] method:
+  * `doGenCode` emits a single static invocation, so the call lives
+  * inside whole-stage codegen like any built-in, and the per-element
+  * loops run as monomorphic JVM code instead of interpreted lambda
+  * dispatch. Each kernel is one line in [[native]]; adding a kernel
+  * needs no new expression class.
   */
 
-/** string text → array<long> distinct word n-gram shingle hashes. */
-case class ShingleHashesExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"ShingleHashesExpr: n must be positive, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.shingleHashes(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.shingleHashes($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashesExpr =
-    copy(child = newChild)
-}
+/** `graft.plans.VectorKernels.<kernel>(args)`; null when any child is
+  * null. `args` lists the method's parameters in declared order: the
+  * children's values in order, `isFloat` flags read from a child's
+  * resolved type, and plan constants — ints and longs are inlined,
+  * `String`s and `double[]`/`byte[]`/`String[]` matrices, bitsets and
+  * vocabularies ride the plan as reference objects (broadcast once with
+  * the serialized plan, so code size stays independent of their
+  * length). Renders as `kernel(children…, constants…)`. */
+case class NativeCall(
+    kernel: String,
+    dataType: DataType,
+    children: Seq[Expression],
+    args: Seq[NativeCall.Arg]) extends Expression {
+  import NativeCall._
 
-/** array<string> lower-cased tokens → string language code. */
-case class LangIdExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.langId(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.langId($c)")
-  override protected def withNewChildInternal(newChild: Expression): LangIdExpr =
-    copy(child = newChild)
-}
+  override def prettyName: String = kernel
+  override def foldable: Boolean = children.forall(_.foldable)
+  override def nullable: Boolean = children.exists(_.nullable)
+  override protected def stringArgs: Iterator[Any] =
+    children.iterator ++ args.iterator.collect { case Const(v) => v }
 
-/** string text → array<long> occurrence-expanded word n-gram shingle
-  * hashes (the k-th occurrence of a gram hashes distinctly, so plain
-  * set Jaccard over these equals WEIGHTED multiset Jaccard — see
-  * VectorKernels.shingleHashesWeighted). */
-case class WeightedShingleHashesExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"WeightedShingleHashesExpr: n must be positive, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.shingleHashesWeighted(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.shingleHashesWeighted($c, $n)")
-  override protected def withNewChildInternal(
-      newChild: Expression): WeightedShingleHashesExpr =
-    copy(child = newChild)
-}
+  private def isFloat(i: Int): Boolean = children(i).dataType match {
+    case ArrayType(FloatType, _) => true
+    case _                       => false
+  }
 
-/** array<long> shingle hashes → array<long> MinHash signature. */
-case class MinHashSig(child: Expression, numPerm: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.minhash(input.asInstanceOf[ArrayData], numPerm)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.minhash($c, $numPerm)")
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
+  /** Kernel names are not overloaded, so the name picks the method. */
+  @transient private lazy val method = VectorKernels.getClass.getMethods
+    .find(_.getName == kernel)
+    .getOrElse(throw new IllegalArgumentException(s"no kernel VectorKernels.$kernel"))
 
-/** array<string> tokens → long SimHash. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.simhash(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.simhash($c)")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
+  override def eval(input: InternalRow): Any = {
+    val values = children.map(_.eval(input))
+    if (values.contains(null)) return null
+    val next = values.iterator
+    val params = args.map {
+      case Col        => next.next()
+      case IsFloat(i) => isFloat(i)
+      case Const(v)   => v
+    }
+    try method.invoke(VectorKernels, params.map(_.asInstanceOf[AnyRef]): _*)
+    catch { case e: InvocationTargetException => throw e.getCause }
+  }
 
-/** string text → array<string> word n-grams (single-space joined). */
-case class WordNgramsExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"WordNgramsExpr: n must be positive, got $n")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.wordNgramStrings(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.wordNgramStrings($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): WordNgramsExpr =
-    copy(child = newChild)
-}
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    // constants are registered before the children generate, keeping
+    // reference and variable numbering stable
+    val fixed: Seq[Option[String]] = args.map {
+      case Col             => None
+      case IsFloat(i)      => Some(isFloat(i).toString)
+      case Const(v: Int)   => Some(v.toString)
+      case Const(v: Long)  => Some(s"${v}L")
+      case Const(v)        => Some(ctx.addReferenceObj(kernel, v, v.getClass.getCanonicalName))
+    }
+    val gens = children.map(_.genCode(ctx))
+    val values = gens.iterator.map(_.value.toString)
+    val call = s"${ev.value} = graft.plans.VectorKernels.$kernel(" +
+      fixed.map(_.getOrElse(values.next())).mkString(", ") + ");"
+    val decl = s"${CodeGenerator.javaType(dataType)} ${ev.value} = " +
+      s"${CodeGenerator.defaultValue(dataType)};"
+    if (!nullable) {
+      ev.copy(code = code"""
+        ${gens.map(_.code.toString).mkString("\n")}
+        $decl
+        $call""", isNull = FalseLiteral)
+    } else if (gens.length == 1) {
+      // the null-safe layout of Spark's UnaryExpression
+      val g = gens.head
+      ev.copy(code = code"""
+        ${g.code}
+        boolean ${ev.isNull} = ${g.isNull};
+        $decl
+        ${ctx.nullSafeExec(children.head.nullable, g.isNull)(call)}
+      """)
+    } else {
+      // the null-safe layout of Spark's BinaryExpression: each child
+      // is evaluated only once the ones before it are non-null
+      val body = children.zip(gens).foldRight(
+        s"\n${ev.isNull} = false; // resultCode could change nullability.\n$call\n") {
+        case ((c, g), inner) => s"${g.code}" + ctx.nullSafeExec(c.nullable, g.isNull)(inner)
+      }
+      ev.copy(code = code"""
+        boolean ${ev.isNull} = true;
+        $decl
+        $body
+      """)
+    }
+  }
 
-/** string text → array<long> [nTokens, totalGrams, distinctGrams] of
-  * word n-grams (exact distinctness — see VectorKernels.repetitionStats). */
-case class RepetitionStatsExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"RepetitionStatsExpr: n must be positive, got $n")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.repetitionStats(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.repetitionStats($c, $n)")
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStatsExpr =
-    copy(child = newChild)
-}
-
-/** (array<long>, array<long>) → int count of agreeing positions. */
-case class SigEqCount(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.eqCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.VectorKernels.eqCount($a, $b)")
   override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SigEqCount =
-    copy(left = newLeft, right = newRight)
+      newChildren: IndexedSeq[Expression]): NativeCall = copy(children = newChildren)
 }
 
-/** (long num, long den) → long fixed-point log2(num/den) in units of
-  * 2⁻³⁰ — the exact-integer squaring algorithm (VectorKernels.log2Fix),
-  * bit-reproducible on any engine, which is what lets log-domain
-  * scores into the hash-compared oracle gates. */
-case class Log2Fix(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.log2Fix(a.asInstanceOf[Long], b.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.VectorKernels.log2Fix($a, $b)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Log2Fix =
-    copy(left = newLeft, right = newRight)
+object NativeCall {
+  /** One kernel parameter. */
+  sealed trait Arg
+  /** The next child's value. */
+  case object Col extends Arg
+  /** `true` when child `i` resolves to `array<float>` (else double). */
+  final case class IsFloat(i: Int) extends Arg
+  /** A plan constant: Int, Long, String, Array[Double], Array[Byte] or
+    * Array[String]. */
+  final case class Const(v: Any) extends Arg
 }
 
-/** (array<float|double>, array<float|double>) → double cosine. Each
-  * side's element accessor is dispatched on ITS OWN static type (mixed
-  * float/double pairs are valid); dimension mismatch throws. */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.cosine(
-      a.asInstanceOf[ArrayData], isFloat(left),
-      b.asInstanceOf[ArrayData], isFloat(right))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.plans.VectorKernels.cosine($a, ${isFloat(left)}, $b, ${isFloat(right)})")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** array<float|double> → long hyperplane-LSH signature. `seed` picks an
-  * independent plane set (seed 0 = the original planes), letting callers
-  * draw several independent ≤64-bit signatures per vector. */
-case class HyperplaneSig(child: Expression, bits: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = LongType
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.hyperplaneSig(input.asInstanceOf[ArrayData], bits, isFloat, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.hyperplaneSig($c, $bits, $isFloat, ${seed}L)")
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneSig =
-    copy(child = newChild)
-}
-
-/** array<float|double> vector → int 1-based id of its max-cosine
-  * centroid (ties → smallest id). The centroid matrix travels inside
-  * the expression as a flattened row-major double[] reference object
-  * (k × dim, rows L2-normalized at construction — see
-  * [[VectorKernels.nearestCentroid]]), the same transport
-  * [[BloomMightContain]] uses for its bitset: broadcast once with the
-  * serialized plan, probed via one codegen'd static call — the
-  * expression stays k-independent in code SIZE, so whole-stage codegen
-  * survives centroid counts in the hundreds or thousands. */
-case class NearestCentroid(child: Expression, cents: Array[Double], k: Int)
-    extends UnaryExpression {
-  require(k > 0, s"NearestCentroid: k must be positive, got $k")
-  require(cents.nonEmpty && cents.length % k == 0,
-    s"NearestCentroid: ${cents.length} matrix values do not tile k=$k rows")
-  override def dataType: DataType = IntegerType
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.nearestCentroid(cents, k, input.asInstanceOf[ArrayData], isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("graftCentroids", cents, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.nearestCentroid($centsRef, $k, $c, $isFloat)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
-    copy(child = newChild)
-}
-
-/** array<float|double> → array<double> unit-normalized (zero vectors
-  * cast through unchanged). One fused codegen'd pass. */
-case class L2NormalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.l2Normalize(input.asInstanceOf[ArrayData], isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.l2Normalize($c, $isFloat)")
-  override protected def withNewChildInternal(newChild: Expression): L2NormalizeExpr =
-    copy(child = newChild)
-}
-
-/** array<float|double> vector → array<int> of m 1-based PQ codes
-  * (L2-nearest sub-centroid per contiguous subspace). The codebook
-  * travels as a flattened reference object like [[NearestCentroid]]'s
-  * matrix — m·k·subDim doubles broadcast once with the plan. */
-case class PqEncodeExpr(child: Expression, cents: Array[Double], m: Int, k: Int)
-    extends UnaryExpression {
-  require(m > 0 && k > 0, s"PqEncodeExpr: m and k must be positive, got m=$m k=$k")
-  require(cents.nonEmpty && cents.length % (m * k) == 0,
-    s"PqEncodeExpr: ${cents.length} codebook values do not tile m=$m × k=$k rows")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.pqEncode(cents, m, k, input.asInstanceOf[ArrayData], isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("graftPqCodebook", cents, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.pqEncode($centsRef, $m, $k, $c, $isFloat)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqEncodeExpr =
-    copy(child = newChild)
-}
-
-/** array<float|double> vector → long: all m 4-bit PQ codes packed in
-  * one word (k ≤ 16, m ≤ 16) — the 8-byte scan/shuffle format for the
-  * code table at scale. */
-case class PqEncodePackedExpr(child: Expression, cents: Array[Double], m: Int, k: Int)
-    extends UnaryExpression {
-  require(m > 0 && m <= 16 && k > 0 && k <= 16,
-    s"PqEncodePackedExpr: packed codes need 1 <= m,k <= 16, got m=$m k=$k")
-  require(cents.nonEmpty && cents.length % (m * k) == 0,
-    s"PqEncodePackedExpr: ${cents.length} codebook values do not tile m=$m × k=$k rows")
-  override def dataType: DataType = LongType
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.pqEncodePacked(cents, m, k, input.asInstanceOf[ArrayData], isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("graftPqCodebook", cents, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.pqEncodePacked($centsRef, $m, $k, $c, $isFloat)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): PqEncodePackedExpr =
-    copy(child = newChild)
-}
-
-/** (long packed codes, array<float|double> probe) → double ADC dot. */
-case class PqAdcPackedExpr(left: Expression, right: Expression,
-    cents: Array[Double], m: Int, k: Int) extends BinaryExpression {
-  require(m > 0 && m <= 16 && k > 0 && k <= 16,
-    s"PqAdcPackedExpr: packed codes need 1 <= m,k <= 16, got m=$m k=$k")
-  require(cents.nonEmpty && cents.length % (m * k) == 0,
-    s"PqAdcPackedExpr: ${cents.length} codebook values do not tile m=$m × k=$k rows")
-  override def dataType: DataType = DoubleType
-  private def probeFloat: Boolean = right.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(packed: Any, probe: Any): Any =
-    VectorKernels.pqAdcPacked(cents, m, k, packed.asInstanceOf[Long],
-      probe.asInstanceOf[ArrayData], probeFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("graftPqCodebook", cents, "double[]")
-    defineCodeGen(ctx, ev, (c, p) =>
-      s"graft.plans.VectorKernels.pqAdcPacked($centsRef, $m, $k, $c, $p, $probeFloat)")
-  }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdcPackedExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (array<int> PQ codes, array<float|double> probe) → double
-  * asymmetric-distance dot product against the same broadcast
-  * codebook the codes were produced with. */
-case class PqAdcExpr(left: Expression, right: Expression,
-    cents: Array[Double], m: Int, k: Int) extends BinaryExpression {
-  require(m > 0 && k > 0, s"PqAdcExpr: m and k must be positive, got m=$m k=$k")
-  require(cents.nonEmpty && cents.length % (m * k) == 0,
-    s"PqAdcExpr: ${cents.length} codebook values do not tile m=$m × k=$k rows")
-  override def dataType: DataType = DoubleType
-  private def probeFloat: Boolean = right.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(codes: Any, probe: Any): Any =
-    VectorKernels.pqAdc(cents, m, k, codes.asInstanceOf[ArrayData],
-      probe.asInstanceOf[ArrayData], probeFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("graftPqCodebook", cents, "double[]")
-    defineCodeGen(ctx, ev, (c, p) =>
-      s"graft.plans.VectorKernels.pqAdc($centsRef, $m, $k, $c, $p, $probeFloat)")
-  }
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdcExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** array<float|double> vector → array<int> of its `nprobe` nearest
-  * centroid ids, best-first (the multi-assignment form of
-  * [[NearestCentroid]], same flattened-matrix transport). */
-case class NearestCentroids(child: Expression, cents: Array[Double],
-    k: Int, nprobe: Int) extends UnaryExpression {
-  require(k > 0, s"NearestCentroids: k must be positive, got $k")
-  require(nprobe > 0, s"NearestCentroids: nprobe must be positive, got $nprobe")
-  require(cents.nonEmpty && cents.length % k == 0,
-    s"NearestCentroids: ${cents.length} matrix values do not tile k=$k rows")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.nearestCentroids(cents, k, nprobe,
-      input.asInstanceOf[ArrayData], isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("graftCentroids", cents, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.VectorKernels.nearestCentroids($centsRef, $k, $nprobe, $c, $isFloat)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
-    copy(child = newChild)
-}
-
-/** string → Unicode-normalized string. `form`: "NFC" | "NFD" | "NFKC"
-  * | "NFKD". Normalization-sensitive operators (dedup, fingerprinting,
-  * token counting) must run on normalized text or visually-identical
-  * documents hash apart; Spark ships no normalizer built-in. */
-case class UnicodeNormalize(child: Expression, form: String) extends UnaryExpression {
-  private val formCode: Int = form match {
-    case "NFC" => 0
-    case "NFD" => 1
-    case "NFKC" => 2
-    case "NFKD" => 3
-    case other => throw new IllegalArgumentException(
-      s"UnicodeNormalize: form must be NFC|NFD|NFKC|NFKD, got '$other'")
-  }
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.normalize(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], formCode)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.normalize($c, $formCode)")
-  override protected def withNewChildInternal(newChild: Expression): UnicodeNormalize =
-    copy(child = newChild)
-}
-
-/** string text → double deflate compression ratio (compressed/raw;
-  * empty → 1.0). Ordinal quality signal — see
-  * VectorKernels.deflateRatio. */
-case class DeflateRatioExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.deflateRatio(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.deflateRatio($c)")
-  override protected def withNewChildInternal(newChild: Expression): DeflateRatioExpr =
-    copy(child = newChild)
-}
-
-/** array<long> non-negative values → long Z-order (Morton) interleave
-  * of the low `bits` bits of each. */
-case class ZValueExpr(child: Expression, bits: Int) extends UnaryExpression {
-  require(bits > 0 && bits <= 63, s"ZValueExpr: bits must be in 1..63, got $bits")
-  override def dataType: DataType = LongType
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.zValue(input.asInstanceOf[ArrayData], bits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.zValue($c, $bits)")
-  override protected def withNewChildInternal(newChild: Expression): ZValueExpr =
-    copy(child = newChild)
-}
-
-/** long key-hash → boolean bloom membership. The bitset travels inside
-  * the expression (broadcast to executors with the serialized plan, the
-  * same transport a broadcast-hash-join bitmap uses) and is probed via
-  * a codegen'd static call — no per-row allocation, no UDF. */
-case class BloomMightContain(child: Expression, bits: Array[Byte], k: Int)
-    extends UnaryExpression {
-  require(bits.nonEmpty && (bits.length & (bits.length - 1)) == 0,
-    s"BloomMightContain: bitset length must be a power of two, got ${bits.length}")
-  require(k > 0, s"BloomMightContain: k must be positive, got $k")
-  override def dataType: DataType = BooleanType
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.bloomMightContain(bits, input.asInstanceOf[Long], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bitsRef = ctx.addReferenceObj("graftBloomBits", bits, "byte[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.bloomMightContain($bitsRef, $c, $k)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BloomMightContain =
-    copy(child = newChild)
-}
-
-/** string → array<int> hashed adjacent-token bigram feature buckets
-  * (DSIR). The poly-31 code-point hash is engine-mirrorable — see
-  * [[VectorKernels.hashedBigramBuckets]] for the exact contract the
-  * SQL oracle replays. */
-case class HashedBigramBucketsExpr(child: Expression, buckets: Int)
-    extends UnaryExpression {
-  require(buckets > 0, s"HashedBigramBucketsExpr: buckets must be positive, got $buckets")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.hashedBigramBuckets(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], buckets)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.hashedBigramBuckets($c, $buckets)")
-  override protected def withNewChildInternal(newChild: Expression): HashedBigramBucketsExpr =
-    copy(child = newChild)
-}
-
-/** array<float|double> → array<double> sign random projection
-  * (Johnson–Lindenstrauss); bit-reproducible across engines — see
-  * [[VectorKernels.signProject]] for the exact contract. */
-case class SignProjectExpr(child: Expression, outDim: Int, seed: Long)
-    extends UnaryExpression {
-  require(outDim > 0, s"SignProjectExpr: outDim must be positive, got $outDim")
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.signProject(input.asInstanceOf[ArrayData], outDim, seed, isFloat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.signProject($c, $outDim, ${seed}L, $isFloat)")
-  override protected def withNewChildInternal(newChild: Expression): SignProjectExpr =
-    copy(child = newChild)
-}
-
-/** string → array<string> all char-n-gram substrings per whitespace
-  * word (subword-vocab training candidates). */
-case class CharNgramsByWordExpr(child: Expression, minLen: Int, maxLen: Int)
-    extends UnaryExpression {
-  require(1 <= minLen && minLen <= maxLen,
-    s"CharNgramsByWordExpr: need 1 <= minLen <= maxLen, got [$minLen, $maxLen]")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.charNgramsByWord(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], minLen, maxLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.charNgramsByWord($c, $minLen, $maxLen)")
-  override protected def withNewChildInternal(newChild: Expression): CharNgramsByWordExpr =
-    copy(child = newChild)
-}
-
-/** string → array<string> greedy longest-match subword tokens. The
-  * vocabulary travels as a reference object with the plan (the
-  * [[NearestCentroid]] transport); per-executor it is interned into a
-  * hash set once. */
-case class GreedySubTokensExpr(child: Expression, vocab: Array[String])
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.greedySubTokens(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], vocab)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val vocabRef = ctx.addReferenceObj("graftSubwordVocab", vocab, "java.lang.String[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.greedySubTokens($c, $vocabRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): GreedySubTokensExpr =
-    copy(child = newChild)
-}
-
-/** string word → -joined per-code-point BPE symbol state. */
-case class BpeInitSymbolsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.bpeInitSymbols(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.bpeInitSymbols($c)")
-  override protected def withNewChildInternal(newChild: Expression): BpeInitSymbolsExpr =
-    copy(child = newChild)
-}
-
-/** One BPE merge round (pair (a, b) → a||b, leftmost-greedy) over a
-  * -joined symbol string. */
-case class BpeMergeStepExpr(child: Expression, a: String, b: String)
-    extends UnaryExpression {
-  require(a.nonEmpty && b.nonEmpty, "BPE merge pair symbols must be non-empty")
-  override def dataType: DataType = StringType
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.bpeMergeStep(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], a, b)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("graftBpeA", a, "java.lang.String")
-    val bRef = ctx.addReferenceObj("graftBpeB", b, "java.lang.String")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.bpeMergeStep($c, $aRef, $bRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BpeMergeStepExpr =
-    copy(child = newChild)
-}
-
-/** string text → array<string> BPE subtokens under a TRAINED merge
-  * list (flattened pairs ride the plan as a reference object). */
-case class BpeApplyExpr(child: Expression, mergePairs: Array[String])
-    extends UnaryExpression {
-  require(mergePairs.length % 2 == 0,
-    s"mergePairs must be flattened (a, b) pairs; got ${mergePairs.length} entries")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.bpeApplyAll(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], mergePairs)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pairsRef = ctx.addReferenceObj("graftBpeMerges", mergePairs, "java.lang.String[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.plans.VectorKernels.bpeApplyAll($c, $pairsRef)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): BpeApplyExpr =
-    copy(child = newChild)
-}
-
-/** (long id, string text) → string with deterministically-dropped
-  * words ([[VectorKernels.wordDropout]]). */
-case class WordDropoutExpr(left: Expression, right: Expression,
-    threshold: Long, seed: Long) extends BinaryExpression {
-  override def dataType: DataType = StringType
-  override def nullSafeEval(id: Any, text: Any): Any =
-    VectorKernels.wordDropout(id.asInstanceOf[Long],
-      text.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], threshold, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (i, t) =>
-      s"graft.plans.VectorKernels.wordDropout($i, $t, ${threshold}L, ${seed}L)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): WordDropoutExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** (long id, string text) → corrupted-text  target under the
-  * block-deterministic span-corruption contract
-  * ([[VectorKernels.spanCorrupt]]). */
-case class SpanCorruptExpr(left: Expression, right: Expression,
-    blockLen: Int, threshold: Long, seed: Long) extends BinaryExpression {
-  require(blockLen >= 1, s"SpanCorruptExpr: blockLen must be >= 1, got $blockLen")
-  override def dataType: DataType = StringType
-  override def nullSafeEval(id: Any, text: Any): Any =
-    VectorKernels.spanCorrupt(id.asInstanceOf[Long],
-      text.asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      blockLen, threshold, seed)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (i, t) =>
-      s"graft.plans.VectorKernels.spanCorrupt($i, $t, $blockLen, ${threshold}L, ${seed}L)")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SpanCorruptExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** string text → array<long> winnowing fingerprints, each packed as
-  * pos·2^31 + poly31hash (see VectorKernels.winnow). */
-case class WinnowExpr(child: Expression, k: Int, w: Int) extends UnaryExpression {
-  require(k > 0, s"WinnowExpr: k must be positive, got $k")
-  require(w > 0, s"WinnowExpr: w must be positive, got $w")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.winnow(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], k, w)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.plans.VectorKernels.winnow($c, $k, $w)")
-  override protected def withNewChildInternal(newChild: Expression): WinnowExpr =
-    copy(child = newChild)
-}
-
-/** string → array<string> FastSS deletion neighborhood (≤ maxDist
-  * code-point deletions, incl. the string itself, distinct — see
-  * VectorKernels.deletionVariants). */
-case class DeletionVariantsExpr(child: Expression, maxDist: Int)
-    extends UnaryExpression {
-  require(maxDist >= 0, s"DeletionVariantsExpr: maxDist must be >= 0, got $maxDist")
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.deletionVariants(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], maxDist)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.plans.VectorKernels.deletionVariants($c, $maxDist)")
-  override protected def withNewChildInternal(
-      newChild: Expression): DeletionVariantsExpr = copy(child = newChild)
-}
-
-/** Column-API entry points for the native expressions. */
+/** Column-API entry points for the native kernels. Each checks its
+  * plan constants and builds one [[NativeCall]]. */
 object native {
-  private def c(e: Expression): Column = GraftShim.column(e)
-  private def e(col: Column): Expression = GraftShim.expression(col)
+  private final case class FloatOf(col: Column)
 
-  def shingleHashes(text: Column, n: Int): Column =
-    c(ShingleHashesExpr(e(text), n))
-  def shingleHashesWeighted(text: Column, n: Int): Column =
-    c(WeightedShingleHashesExpr(e(text), n))
-  def langId(tokens: Column): Column = c(LangIdExpr(e(tokens)))
-  def minhashSig(shingleHashes: Column, numPerm: Int): Column =
-    c(MinHashSig(e(shingleHashes), numPerm))
-  def simhash64(tokens: Column): Column = c(SimHash64(e(tokens)))
-  def repetitionStats(text: Column, n: Int): Column =
-    c(RepetitionStatsExpr(e(text), n))
-  def wordNgrams(text: Column, n: Int): Column =
-    c(WordNgramsExpr(e(text), n))
-  def sigEqCount(a: Column, b: Column): Column =
-    c(SigEqCount(e(a), e(b)))
-  def log2Fix(num: Column, den: Column): Column =
-    c(Log2Fix(e(num), e(den)))
-  def cosineSim(a: Column, b: Column): Column = c(CosineSim(e(a), e(b)))
+  /** `VectorKernels.<kernel>(params)`: a Column param is a child, an
+    * `isFloat(c)` param that child's element-type flag, any other a
+    * plan constant. */
+  private def call(kernel: String, dataType: DataType, params: Any*): Column = {
+    val cols = params.collect { case c: Column => c }
+    val args = params.map {
+      case _: Column  => NativeCall.Col
+      case FloatOf(c) => NativeCall.IsFloat(cols.indexWhere(_ eq c))
+      case v          => NativeCall.Const(v)
+    }
+    GraftShim.column(NativeCall(kernel, dataType, cols.map(GraftShim.expression), args))
+  }
+  private def isFloat(c: Column) = FloatOf(c)
+
+  private def arrayOf(t: DataType) = ArrayType(t, containsNull = false)
+  private val Longs = arrayOf(LongType)
+  private val Ints = arrayOf(IntegerType)
+  private val Doubles = arrayOf(DoubleType)
+  private val Strings = arrayOf(StringType)
+
+  private def requireTiles(fn: String, cents: Array[Double], rows: Int, what: String): Unit =
+    require(cents.nonEmpty && cents.length % rows == 0,
+      s"$fn: ${cents.length} values do not tile $what")
+  private def requirePacked(fn: String, m: Int, k: Int): Unit =
+    require(m > 0 && m <= 16 && k > 0 && k <= 16,
+      s"$fn: packed codes need 1 <= m,k <= 16, got m=$m k=$k")
+
+  /** string text → array<long> distinct word n-gram shingle hashes. */
+  def shingleHashes(text: Column, n: Int): Column = {
+    require(n > 0, s"shingleHashes: n must be positive, got $n")
+    call("shingleHashes", Longs, text, n)
+  }
+  /** string text → array<long> occurrence-expanded shingle hashes (the
+    * k-th occurrence of a gram hashes distinctly, so set Jaccard over
+    * them is weighted multiset Jaccard). */
+  def shingleHashesWeighted(text: Column, n: Int): Column = {
+    require(n > 0, s"shingleHashesWeighted: n must be positive, got $n")
+    call("shingleHashesWeighted", Longs, text, n)
+  }
+  /** array<string> lower-cased tokens → string language code. */
+  def langId(tokens: Column): Column = call("langId", StringType, tokens)
+  /** array<long> shingle hashes → array<long> MinHash signature. */
+  def minhashSig(shingleHashes: Column, numPerm: Int): Column = {
+    require(numPerm > 0, s"minhashSig: numPerm must be positive, got $numPerm")
+    call("minhash", Longs, shingleHashes, numPerm)
+  }
+  /** array<string> tokens → long SimHash. */
+  def simhash64(tokens: Column): Column = call("simhash", LongType, tokens)
+  /** string text → array<long> [nTokens, totalGrams, distinctGrams]. */
+  def repetitionStats(text: Column, n: Int): Column = {
+    require(n > 0, s"repetitionStats: n must be positive, got $n")
+    call("repetitionStats", Longs, text, n)
+  }
+  /** string text → array<string> word n-grams (single-space joined). */
+  def wordNgrams(text: Column, n: Int): Column = {
+    require(n > 0, s"wordNgrams: n must be positive, got $n")
+    call("wordNgramStrings", Strings, text, n)
+  }
+  /** (array<long>, array<long>) → int count of agreeing positions. */
+  def sigEqCount(a: Column, b: Column): Column = call("eqCount", IntegerType, a, b)
+  /** (long num, long den) → long fixed-point log2(num/den) in units of
+    * 2⁻³⁰, bit-reproducible on any engine. */
+  def log2Fix(num: Column, den: Column): Column = call("log2Fix", LongType, num, den)
+  /** (array<float|double>, array<float|double>) → double cosine; each
+    * side is read by its own element type, dimension mismatch throws. */
+  def cosineSim(a: Column, b: Column): Column =
+    call("cosine", DoubleType, a, isFloat(a), b, isFloat(b))
+  /** array<float|double> → long hyperplane-LSH signature; `seed` picks
+    * an independent plane set (0 = the original planes). */
   def hyperplaneSig(v: Column, bits: Int, seed: Long = 0L): Column =
-    c(HyperplaneSig(e(v), bits, seed))
-  def bloomMightContain(keyHash: Column, bits: Array[Byte], k: Int): Column =
-    c(BloomMightContain(e(keyHash), bits, k))
-  def nearestCentroid(v: Column, cents: Array[Double], k: Int): Column =
-    c(NearestCentroid(e(v), cents, k))
-  def nearestCentroids(v: Column, cents: Array[Double], k: Int, nprobe: Int): Column =
-    c(NearestCentroids(e(v), cents, k, nprobe))
-  def l2Normalize(v: Column): Column = c(L2NormalizeExpr(e(v)))
-  def pqEncode(v: Column, cents: Array[Double], m: Int, k: Int): Column =
-    c(PqEncodeExpr(e(v), cents, m, k))
-  def pqAdc(codes: Column, probe: Column, cents: Array[Double], m: Int, k: Int): Column =
-    c(PqAdcExpr(e(codes), e(probe), cents, m, k))
-  def pqEncodePacked(v: Column, cents: Array[Double], m: Int, k: Int): Column =
-    c(PqEncodePackedExpr(e(v), cents, m, k))
-  def pqAdcPacked(packed: Column, probe: Column, cents: Array[Double], m: Int, k: Int): Column =
-    c(PqAdcPackedExpr(e(packed), e(probe), cents, m, k))
-  def unicodeNormalize(text: Column, form: String): Column =
-    c(UnicodeNormalize(e(text), form))
-  def zValue(vals: Column, bits: Int): Column = c(ZValueExpr(e(vals), bits))
-  def deflateRatio(text: Column): Column = c(DeflateRatioExpr(e(text)))
-  def hashedBigramBuckets(text: Column, buckets: Int): Column =
-    c(HashedBigramBucketsExpr(e(text), buckets))
-  def signProject(v: Column, outDim: Int, seed: Long = 0L): Column =
-    c(SignProjectExpr(e(v), outDim, seed))
-  def charNgramsByWord(text: Column, minLen: Int, maxLen: Int): Column =
-    c(CharNgramsByWordExpr(e(text), minLen, maxLen))
-  def bpeInitSymbols(word: Column): Column = c(BpeInitSymbolsExpr(e(word)))
-  def bpeMergeStep(state: Column, a: String, b: String): Column =
-    c(BpeMergeStepExpr(e(state), a, b))
-  def bpeApply(text: Column, mergePairs: Array[String]): Column =
-    c(BpeApplyExpr(e(text), mergePairs))
+    call("hyperplaneSig", LongType, v, bits, isFloat(v), seed)
+  /** long key-hash → boolean bloom membership against a plan-carried
+    * bitset. */
+  def bloomMightContain(keyHash: Column, bits: Array[Byte], k: Int): Column = {
+    require(bits.nonEmpty && (bits.length & (bits.length - 1)) == 0,
+      s"bloomMightContain: bitset length must be a power of two, got ${bits.length}")
+    require(k > 0, s"bloomMightContain: k must be positive, got $k")
+    call("bloomMightContain", BooleanType, bits, keyHash, k)
+  }
+  /** array<float|double> → int 1-based id of its max-cosine centroid
+    * (ties → smallest id) in a row-major k × dim matrix. */
+  def nearestCentroid(v: Column, cents: Array[Double], k: Int): Column = {
+    require(k > 0, s"nearestCentroid: k must be positive, got $k")
+    requireTiles("nearestCentroid", cents, k, s"k=$k rows")
+    call("nearestCentroid", IntegerType, cents, k, v, isFloat(v))
+  }
+  /** array<float|double> → array<int> its `nprobe` nearest centroid
+    * ids, best first. */
+  def nearestCentroids(v: Column, cents: Array[Double], k: Int, nprobe: Int): Column = {
+    require(k > 0, s"nearestCentroids: k must be positive, got $k")
+    require(nprobe > 0, s"nearestCentroids: nprobe must be positive, got $nprobe")
+    requireTiles("nearestCentroids", cents, k, s"k=$k rows")
+    call("nearestCentroids", Ints, cents, k, nprobe, v, isFloat(v))
+  }
+  /** array<float|double> → array<double> unit-normalized (zero vectors
+    * pass through). */
+  def l2Normalize(v: Column): Column = call("l2Normalize", Doubles, v, isFloat(v))
+  /** array<float|double> → array<int> of m 1-based PQ codes. */
+  def pqEncode(v: Column, cents: Array[Double], m: Int, k: Int): Column = {
+    require(m > 0 && k > 0, s"pqEncode: m and k must be positive, got m=$m k=$k")
+    requireTiles("pqEncode", cents, m * k, s"m=$m × k=$k rows")
+    call("pqEncode", Ints, cents, m, k, v, isFloat(v))
+  }
+  /** (array<int> PQ codes, array<float|double> probe) → double ADC dot. */
+  def pqAdc(codes: Column, probe: Column, cents: Array[Double], m: Int, k: Int): Column = {
+    require(m > 0 && k > 0, s"pqAdc: m and k must be positive, got m=$m k=$k")
+    requireTiles("pqAdc", cents, m * k, s"m=$m × k=$k rows")
+    call("pqAdc", DoubleType, cents, m, k, codes, probe, isFloat(probe))
+  }
+  /** array<float|double> → long: all m 4-bit PQ codes in one word. */
+  def pqEncodePacked(v: Column, cents: Array[Double], m: Int, k: Int): Column = {
+    requirePacked("pqEncodePacked", m, k)
+    requireTiles("pqEncodePacked", cents, m * k, s"m=$m × k=$k rows")
+    call("pqEncodePacked", LongType, cents, m, k, v, isFloat(v))
+  }
+  /** (long packed codes, array<float|double> probe) → double ADC dot. */
+  def pqAdcPacked(packed: Column, probe: Column, cents: Array[Double], m: Int, k: Int): Column = {
+    requirePacked("pqAdcPacked", m, k)
+    requireTiles("pqAdcPacked", cents, m * k, s"m=$m × k=$k rows")
+    call("pqAdcPacked", DoubleType, cents, m, k, packed, probe, isFloat(probe))
+  }
+  /** string → Unicode-normalized string, `form` NFC | NFD | NFKC | NFKD. */
+  def unicodeNormalize(text: Column, form: String): Column = {
+    val code = Seq("NFC", "NFD", "NFKC", "NFKD").indexOf(form)
+    require(code >= 0, s"unicodeNormalize: form must be NFC|NFD|NFKC|NFKD, got '$form'")
+    call("normalize", StringType, text, code)
+  }
+  /** array<long> non-negative values → long Z-order interleave of the
+    * low `bits` bits of each. */
+  def zValue(vals: Column, bits: Int): Column = {
+    require(bits > 0 && bits <= 63, s"zValue: bits must be in 1..63, got $bits")
+    call("zValue", LongType, vals, bits)
+  }
+  /** string text → double deflate ratio (compressed/raw; empty → 1.0). */
+  def deflateRatio(text: Column): Column = call("deflateRatio", DoubleType, text)
+  /** string → array<int> hashed adjacent-token bigram buckets (DSIR). */
+  def hashedBigramBuckets(text: Column, buckets: Int): Column = {
+    require(buckets > 0, s"hashedBigramBuckets: buckets must be positive, got $buckets")
+    call("hashedBigramBuckets", Ints, text, buckets)
+  }
+  /** array<float|double> → array<double> sign random projection. */
+  def signProject(v: Column, outDim: Int, seed: Long = 0L): Column = {
+    require(outDim > 0, s"signProject: outDim must be positive, got $outDim")
+    call("signProject", Doubles, v, outDim, seed, isFloat(v))
+  }
+  /** string → array<string> all char n-grams of each whitespace word. */
+  def charNgramsByWord(text: Column, minLen: Int, maxLen: Int): Column = {
+    require(1 <= minLen && minLen <= maxLen,
+      s"charNgramsByWord: need 1 <= minLen <= maxLen, got [$minLen, $maxLen]")
+    call("charNgramsByWord", Strings, text, minLen, maxLen)
+  }
+  /** string word → -joined per-code-point BPE symbol state. */
+  def bpeInitSymbols(word: Column): Column = call("bpeInitSymbols", StringType, word)
+  /** One leftmost-greedy BPE merge round (a, b) → a||b. */
+  def bpeMergeStep(state: Column, a: String, b: String): Column = {
+    require(a.nonEmpty && b.nonEmpty, "BPE merge pair symbols must be non-empty")
+    call("bpeMergeStep", StringType, state, a, b)
+  }
+  /** string text → array<string> BPE subtokens under a trained merge
+    * list of flattened (a, b) pairs. */
+  def bpeApply(text: Column, mergePairs: Array[String]): Column = {
+    require(mergePairs.length % 2 == 0,
+      s"mergePairs must be flattened (a, b) pairs; got ${mergePairs.length} entries")
+    call("bpeApplyAll", Strings, text, mergePairs)
+  }
+  /** (long id, string text) → text with deterministically dropped words. */
   def wordDropout(id: Column, text: Column, threshold: Long, seed: Long): Column =
-    c(WordDropoutExpr(e(id), e(text), threshold, seed))
+    call("wordDropout", StringType, id, text, threshold, seed)
+  /** (long id, string text) → block-deterministic span-corrupted text. */
   def spanCorrupt(id: Column, text: Column, blockLen: Int,
-      threshold: Long, seed: Long): Column =
-    c(SpanCorruptExpr(e(id), e(text), blockLen, threshold, seed))
+      threshold: Long, seed: Long): Column = {
+    require(blockLen >= 1, s"spanCorrupt: blockLen must be >= 1, got $blockLen")
+    call("spanCorrupt", StringType, id, text, blockLen, threshold, seed)
+  }
+  /** string → array<string> greedy longest-match subword tokens. */
   def greedySubTokens(text: Column, vocab: Array[String]): Column =
-    c(GreedySubTokensExpr(e(text), vocab))
-  def winnow(text: Column, k: Int, w: Int): Column =
-    c(WinnowExpr(e(text), k, w))
-  def deletionVariants(text: Column, maxDist: Int): Column =
-    c(DeletionVariantsExpr(e(text), maxDist))
+    call("greedySubTokens", Strings, text, vocab)
+  /** string text → array<long> winnowing fingerprints (pos·2^31 + hash). */
+  def winnow(text: Column, k: Int, w: Int): Column = {
+    require(k > 0, s"winnow: k must be positive, got $k")
+    require(w > 0, s"winnow: w must be positive, got $w")
+    call("winnow", Longs, text, k, w)
+  }
+  /** string → array<string> FastSS deletion neighborhood (≤ maxDist
+    * code-point deletions, incl. the string itself, distinct). */
+  def deletionVariants(text: Column, maxDist: Int): Column = {
+    require(maxDist >= 0, s"deletionVariants: maxDist must be >= 0, got $maxDist")
+    call("deletionVariants", Strings, text, maxDist)
+  }
 }

@@ -2,7 +2,8 @@ package graft.sources
 
 import graft.DataSourceException
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIdentifier
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -175,12 +176,17 @@ final case class CsvSource(
     val firstLine = lines.find { l =>
       l.trim.nonEmpty && comment.forall(c => !l.startsWith(c.toString))
     }.getOrElse(throw new DataSourceException(1, "empty header"))
+    lineFields(spark, firstLine)
+  }
+
+  /** One raw line's fields in this dialect. */
+  private def lineFields(spark: SparkSession, line: String): Seq[String] = {
     import spark.implicits._
     val head = spark.read
       .options(baseOptions)
       .option("header", "false")
       .option("mode", "PERMISSIVE")
-      .csv(spark.createDataset(Seq(firstLine)))
+      .csv(spark.createDataset(Seq(line)))
       .collect()
     if (head.isEmpty) throw new DataSourceException(1, "empty header")
     head.head.toSeq.map(v => if (v == null) "" else v.toString)
@@ -254,13 +260,7 @@ final case class CsvSource(
         df.select(selected.map(col): _*)
       }
 
-    // The reference's Row values are never null: unquoted empty fields
-    // parse to null in univocity (no option changes that), and short
-    // rows under PERMISSIVE yield nulls (csvplus right-pads with "",
-    // csvplus.go:1121-1124). In the FAILFAST modes short rows abort, so
-    // a null can only ever mean an empty field → coalesce to "" is
-    // exact in every mode.
-    projected.select(projected.columns.map(c => coalesce(col(c), lit("")).as(c)): _*)
+    projected.select(projected.columns.map(c => CsvSource.nonNull(col(quoteIdentifier(c)), c)): _*)
   }
 }
 
@@ -283,6 +283,7 @@ object CsvSource {
                    delimiter: Char = ','): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.LongType
+    val dialect = fromFile(path).delimiter(delimiter)
     val numbered = spark.sparkContext.textFile(path)
       .zipWithIndex()
       .map { case (line, i) => Row(line, i + 1L) } // 1-based, header = 1
@@ -291,45 +292,47 @@ object CsvSource {
     val names = {
       val head = linesDf.filter(col("_lineno") === 1L).collect()
       if (head.isEmpty) throw new DataSourceException(1, "empty header")
-      // quote: String.split takes a REGEX — a '|' or '.' delimiter
-      // would otherwise split on everything
-      head.head.getString(0)
-        .split(java.util.regex.Pattern.quote(delimiter.toString)).toSeq
+      dialect.lineFields(spark, head.head.getString(0))
     }
     if (names.isEmpty || names.forall(_.trim.isEmpty))
       throw new DataSourceException(1, "empty header")
     val schema = StructType(names.map(StructField(_, StringType, nullable = true)))
+    // blank lines are skipped, as the csv datasource does
     val parsed = linesDf
-      .filter(col("_lineno") > 1L)
-      .withColumn("_parsed", from_csv(col("_line"),
-        schema, Map("sep" -> delimiter.toString, "emptyValue" -> "")))
+      .filter(col("_lineno") > 1L && trim(col("_line")) =!= "")
+      .select(from_csv(col("_line"), schema, dialect.baseOptions).as("_parsed"),
+        col("_lineno"))
     parsed.select(
-      names.map(n => coalesce(col(s"_parsed.$n"), lit("")).as(n)) :+
-        col("_lineno"): _*)
+      names.map(n => nonNull(col("_parsed").getField(n), n)) :+ col("_lineno"): _*)
   }
 
   /** Reference `FromReader`/`FromReadCloser` (csvplus.go:935-947): CSV
     * from an already-in-memory byte stream. Spark-native form: parse a
     * `Dataset[String]` of lines with the csv datasource. Header = first
-    * line; all columns StringType. Dialect options beyond the delimiter
-    * follow Spark's csv defaults here — use [[fromFile]] for the full
-    * builder. */
+    * line; all columns StringType; the default [[fromFile]] dialect with
+    * the given delimiter — use [[fromFile]] for the full builder. */
   def fromLines(spark: SparkSession,
                 lines: org.apache.spark.sql.Dataset[String],
                 delimiter: Char = ','): DataFrame = {
     val header = lines.limit(1).collect()
     if (header.isEmpty || header.head.trim.isEmpty)
       throw new graft.DataSourceException(1, "empty header")
-    val reader = spark.read
-      .option("sep", delimiter.toString)
-      .option("header", "true")
-      .option("inferSchema", "false")
-      .option("emptyValue", "")
-    reader.csv(lines)
+    val df = spark.read.options(fromFile("").delimiter(delimiter).baseOptions)
+      .option("header", "true").csv(lines)
+    df.select(df.columns.map(c => nonNull(col(quoteIdentifier(c)), c)): _*)
   }
 
   def fromStrings(spark: SparkSession, csv: String, delimiter: Char): DataFrame = {
     import spark.implicits._
     fromLines(spark, spark.createDataset(csv.split("\n").toIndexedSeq), delimiter)
   }
+
+  /** The reference's Row values are never null: unquoted empty fields
+    * parse to null in univocity (no option changes that), and short
+    * rows under PERMISSIVE yield nulls (csvplus right-pads with "",
+    * csvplus.go:1121-1124). In the FAILFAST modes short rows abort, so
+    * a null can only ever mean an empty field → coalesce to "" is
+    * exact in every mode. */
+  private def nonNull(field: Column, name: String): Column =
+    coalesce(field, lit("")).as(name)
 }

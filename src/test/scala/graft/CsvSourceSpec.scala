@@ -161,6 +161,26 @@ class CsvSourceSpec extends GraftSpec {
     assert(e.getMessage == "row 1: empty header")
   }
 
+  test("the three readers parse the same bytes alike (quotes, empty fields, ragged rows)") {
+    val bytes = "id,\"a,b\",c.d\n1,\"x\"\"y\",\n\n2,,z\n" // a blank line is skipped
+    val want = Set(Seq("1", "x\"y", ""), Seq("2", "", "z"))
+    val f = tmpCsv(bytes)
+    val read = CsvSource.fromFile(f).read(spark)
+    val numbered = CsvSource.readNumbered(spark, f)
+    val lines = CsvSource.fromStrings(spark, bytes.stripSuffix("\n"), ',')
+    assert(read.columns.toSeq == Seq("id", "a,b", "c.d"))
+    assert(numbered.columns.toSeq == Seq("id", "a,b", "c.d", "_lineno"))
+    assert(lines.columns.toSeq == Seq("id", "a,b", "c.d"))
+    assert(read.collect().map(_.toSeq).toSet == want)
+    assert(numbered.collect().map(_.toSeq.take(3)).toSet == want)
+    assert(lines.collect().map(_.toSeq).toSet == want)
+    // a row wider than the header fails FAILFAST in every reader
+    val ragged = "a,b\n1,2,3"
+    intercept[Exception] { CsvSource.fromFile(tmpCsv(ragged)).read(spark).collect() }
+    intercept[Exception] { CsvSource.readNumbered(spark, tmpCsv(ragged)).collect() }
+    intercept[Exception] { CsvSource.fromStrings(spark, ragged, ',').collect() }
+  }
+
   test("toCsv with empty column list panics (reference parity)") {
     val e = intercept[IllegalArgumentException] {
       Pipe(people).toCsv("/tmp/never", Seq.empty)
