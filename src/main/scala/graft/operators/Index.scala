@@ -15,7 +15,11 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §4.2): the reference materializes the whole dataset in
   * driver RAM and binary-searches it. Here the "index" is a cached
   * DataFrame; lookups are Catalyst filters, and joins hash-probe it —
-  * broadcast when small, shuffle-hash/sort-merge when not. What stands
+  * broadcast when small, shuffle-hash/sort-merge when not — except for
+  * a probe that is a local relation (`Pipe.takeRows`): there the
+  * `LocalProbeJoin` optimizer rule filters the index by the probe's
+  * keys, and an inner join becomes that filtered scan generating the
+  * matching probe rows, with no join at all. What stands
   * in for the binary search depends on where the rows live: a
   * [[cached]] index is held key-sorted, so the in-memory scan's
   * per-batch min/max stats skip every batch that cannot hold the key;
@@ -157,7 +161,9 @@ final class Index private[operators] (
       .sortBy(keyCols.head, keyCols.tail: _*)
       .saveAsTable(tableName)
 
-  /** Build side of a join, with the broadcast hint applied. */
+  /** Build side of a join, with the broadcast hint applied. A join
+    * that `LocalProbeJoin` rewrites to a generate drops the hint with
+    * the join; `except` and larger local probes keep both. */
   private[operators] def buildSide: DataFrame =
     if (broadcastHint) broadcast(df) else df
 

@@ -191,7 +191,10 @@ final case class Pipe(df: DataFrame, order: Seq[Column] = Nil) {
     *
     * Physical: broadcast hash join when the index is broadcastable
     * (the exact moral equivalent of the reference's in-memory probe),
-    * shuffle join otherwise — Catalyst/AQE decides the rest.
+    * shuffle join otherwise — Catalyst/AQE decides the rest. A local
+    * probe (`takeRows`) plans no join: `LocalProbeJoin` turns it into
+    * the index scan filtered by the probe keys, generating the probe
+    * rows per match.
     */
   def join(index: Index, probeCols: String*): Pipe =
     copy(df = joinImpl(index, probeCols, anti = false))

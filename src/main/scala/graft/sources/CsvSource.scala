@@ -244,7 +244,7 @@ final case class CsvSource(
         val schema = StructType(actual.map(StructField(_, StringType, nullable = true)))
         val raw = spark.read.options(baseOptions).option("header", "true")
           .schema(schema).csv(path)
-        raw.select(resolved.sortBy(_._2).map { case (name, _) => col(name) }: _*)
+        raw.select(resolved.sortBy(_._2).map { case (name, _) => col(quoteIdentifier(name)) }: _*)
     }
 
     val projected =
@@ -257,7 +257,7 @@ final case class CsvSource(
             1,
             if (missing.size == 1) s"""column not found: "${missing.head}""""
             else "columns not found: " + missing.map(m => s""""$m"""").mkString(", "))
-        df.select(selected.map(col): _*)
+        df.select(selected.map(c => col(quoteIdentifier(c))): _*)
       }
 
     projected.select(projected.columns.map(c => CsvSource.nonNull(col(quoteIdentifier(c)), c)): _*)

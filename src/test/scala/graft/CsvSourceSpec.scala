@@ -79,6 +79,15 @@ class CsvSourceSpec extends GraftSpec {
     assert(e2.getMessage == "header spec: duplicate column name: id")
   }
 
+  test("dotted header names are column names, not struct access") {
+    import org.apache.spark.sql.Row
+    val f = tmpCsv("id,a.b\n1,x\n")
+    assert(CsvSource.fromFile(f).selectColumns("id", "a.b").read(spark).collect().toSeq ==
+      Seq(Row("1", "x")))
+    assert(CsvSource.fromFile(f).expectHeader(Map("id" -> 0, "a.b" -> 1))
+      .read(spark).collect().toSeq == Seq(Row("1", "x")))
+  }
+
   test("numFieldsAny right-pads short rows with empty strings (csvplus.go:1121-1124)") {
     val f = tmpCsv("a,b,c\n1,2,3\n4,5\n6\n")
     val df = CsvSource.fromFile(f).numFieldsAny().read(spark)

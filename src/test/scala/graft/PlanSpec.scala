@@ -507,4 +507,27 @@ class PlanSpec extends GraftSpec {
         s"$q candidate join must distribute by band bucket:\n$p")
     }
   }
+
+  test("local-probe join on a cached index: a filtered scan, no broadcast and no join") {
+    import graft.operators.{Index, Pipe}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val idx = Index.build(spark.range(0, 2000).select(
+        concat(lit("c"), (col("id") % 200).cast("string")).as("k"), col("id").as("v")),
+      Seq("k", "v"), unique = true, broadcastHint = false).cached()
+    val probe = Pipe.takeRows(spark, Seq(Row("c1"), Row("c3"), Row("c3")),
+      StructType(Seq(StructField("k", StringType))))
+    def physical(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    val joined = physical(probe.join(idx, "k").df)
+    assert(!joined.contains("BroadcastExchange") && !joined.contains("Join"),
+      s"a local probe must plan a generate over the filtered scan:\n$joined")
+    assert(joined.contains("Generate") && joined.contains("InMemoryTableScan"), joined)
+    val anti = physical(probe.except(idx, "k").df)
+    val scan = anti.split("\n\n").find(_.matches("(?s)\\(\\d+\\) InMemoryTableScan.*"))
+    assert(scan.exists(_.contains("INSET")),
+      s"except must filter the cached scan by the probe keys:\n$anti")
+    idx.df.unpersist()
+  }
 }
