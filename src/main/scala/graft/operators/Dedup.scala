@@ -3,8 +3,14 @@ package graft.operators
 import graft.functions.TextFunctions
 import graft.streaming.LandingZone
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, and n-gram-Jaccard-verified near-dup.
@@ -1350,15 +1356,17 @@ object Dedup {
       .filter(size(col("sh")) > 0)
       .select(col("id"), minhashSignature(col("sh"), numPerm).as("sig"))
 
-    /** (id, band, bucket) for every band key of the (id, sig) rows. */
-    def banded(sigs: DataFrame): DataFrame = {
+    /** The array of (band, bucket) keys of a `sig` column. */
+    def bandKeys: Column = {
       val rowsPerBand = numPerm / bands
-      val fn =
-        if (multiProbe) bandBucketsMultiProbe(col("sig"), bands, rowsPerBand)
-        else bandBuckets(col("sig"), bands, rowsPerBand)
-      sigs.select(col("id"), explode(fn).as("bb"))
-        .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+      if (multiProbe) bandBucketsMultiProbe(col("sig"), bands, rowsPerBand)
+      else bandBuckets(col("sig"), bands, rowsPerBand)
     }
+
+    /** (id, band, bucket) for every band key of the (id, sig) rows. */
+    def banded(sigs: DataFrame): DataFrame =
+      sigs.select(col("id"), explode(bandKeys).as("bb"))
+        .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
   }
 
   private object SigParams {
@@ -1480,13 +1488,27 @@ object Dedup {
     * Caller contract: id spaces disjoint (as in the reference form) and
     * the batch small enough to broadcast its bucket keys.
     *
-    * EAGER: this call RUNS Spark jobs before returning (the touched-key
-    * collect that drives file pruning, and the survivor materialization
-    * that cuts lineage from the store relations) — the returned frame
-    * is a stable materialized result, not a reusable lazy plan.
-    * Failures surface at call time, and the store view is frozen at
-    * the call, not at the first action on the result. Same for
-    * [[hammingNearDupsIncremental]] and the appendTo* family.
+    * Two paths, one answer. A batch whose band keys (docs × band ids)
+    * number at most [[BucketStore.MaxProbeKeys]], with integral or
+    * string ids, runs its batch-sized algebra on the driver
+    * (`driverProbe`); a larger batch runs the distributed algebra
+    * (`distributedProbe`), which is also the reference IncrementalProbeSpec
+    * holds the driver path to.
+    *
+    * EAGER: this call RUNS Spark jobs before returning, and the store
+    * view is frozen at the call, not at the first action on the result.
+    * On the driver path the jobs are three collects — the batch's
+    * (id, sig, band keys), the stored (id, band, bucket) rows of the
+    * touched keys, and the (id, sig) rows of the candidate corpus ids
+    * (skipped when there is none) — and the returned frame is
+    * `incoming` minus a literal rejected-id set (with a `pick`, the
+    * canonical pick over the batch-only clusters as a local relation):
+    * it reads no store relation. On the distributed path they are the
+    * touched-key and candidate-id collects, a checkpoint of the
+    * candidate edges materialized by the batch-edge count, and label
+    * propagation when batch edges exist; the returned frame reads the
+    * checkpoint. Same eagerness for [[hammingNearDupsIncremental]] and
+    * the appendTo* family.
     *
     * @return the surviving rows of `incoming` (original columns) */
   def nearDedupIncremental(
@@ -1541,32 +1563,205 @@ object Dedup {
   }
 
   /** Everything one probe computes that the SAME batch's append phase
-    * can reuse: the lazy survivor plan, the persisted batch signatures
-    * (the append re-derives survivor sigs with a semi-join instead of
-    * re-shingling), and the collected touched keys (the append's
-    * occupancy prune reuses them instead of collecting its own). The
-    * caller owns the two persists. */
+    * can reuse: the survivor plan, the survivors' (id, sig) rows as a
+    * function of the (materialized) survivors — a semi-join or a local
+    * relation, never a re-shingle — and the collected touched keys (the
+    * append's occupancy prune reuses them instead of collecting its
+    * own). `onDriver`: the survivor plan reads only `incoming` and
+    * driver-side values, so the append needs no checkpoint before it.
+    * `release` frees what the probe cached. */
   private final case class IncrementalProbe(
-      survivors: DataFrame, batchSigs: DataFrame,
-      batchBuckets: DataFrame, touched: Option[BucketStore.ProbeKeys])
+      survivors: DataFrame, onDriver: Boolean,
+      survivorSigs: DataFrame => DataFrame,
+      touched: Option[BucketStore.ProbeKeys], release: () => Unit)
 
   /** [[nearDedupIncremental]] against an already-open [[SigTableHandle]]. */
   def nearDedupIncremental(
       h: SigTableHandle,
       incoming: DataFrame, idCol: String, textCol: String,
-      threshold: Double, pick: Seq[Column]): DataFrame = {
+      threshold: Double, pick: Seq[Column]): DataFrame =
+    nearDedupIncremental(h, incoming, idCol, textCol, threshold, pick,
+      BucketStore.MaxProbeKeys)
+
+  /** [[nearDedupIncremental]] with the driver path's bound: a batch
+    * whose band keys, or the stored rows they touch, number more than
+    * `driverBound` takes the distributed algebra, and 0 forces it (the
+    * reference the parity spec compares the driver path against). */
+  private[graft] def nearDedupIncremental(
+      h: SigTableHandle,
+      incoming: DataFrame, idCol: String, textCol: String,
+      threshold: Double, pick: Seq[Column], driverBound: Int): DataFrame = {
     val r = nearDedupIncrementalCore(h, incoming, idCol, textCol,
-      threshold, pick)
-    r.batchSigs.unpersist(blocking = false)
-    r.batchBuckets.unpersist(blocking = false)
+      threshold, pick, driverBound)
+    r.release()
     r.survivors
   }
 
+  /** One probe: on the driver when the batch fits `driverBound`
+    * ([[driverProbe]]), the distributed algebra otherwise. */
   private def nearDedupIncrementalCore(
       h: SigTableHandle,
       incoming: DataFrame, idCol: String, textCol: String,
-      threshold: Double, pick: Seq[Column]): IncrementalProbe = {
+      threshold: Double, pick: Seq[Column],
+      driverBound: Int): IncrementalProbe = {
     val p = SigParams(h.meta)
+    driverProbe(h, p, incoming, idCol, textCol, threshold, pick, driverBound)
+      .getOrElse(distributedProbe(h, p, incoming, idCol, textCol, threshold, pick))
+  }
+
+  /** Spark's ascending order on an id type whose collected values
+    * compare and hash by value: integral types and binary-collated
+    * strings (UTF-8 byte order). None for any other id type, which
+    * takes the distributed path. */
+  private def driverIdOrder(t: DataType): Option[Ordering[Any]] = t match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      Some(Ordering.by[Any, Long](_.asInstanceOf[Number].longValue))
+    case StringType =>
+      Some(Ordering.by[Any, UTF8String](v => UTF8String.fromString(v.asInstanceOf[String])))
+    case _ => None
+  }
+
+  /** The probe with its batch-sized algebra on the driver: three
+    * collects, no shuffle, no checkpoint.
+    *  1. the batch's (id, sig, band keys), banded by [[SigParams.bandKeys]];
+    *  2. the stored (id, band, bucket) rows of the touched keys
+    *     ([[BucketStore.probeCollected]]: file prune + semi-join);
+    *  3. the (id, sig) rows of the candidate corpus ids (same fetch).
+    * The batch-side bucket cap, the batch×batch and batch×corpus pairs,
+    * the Jaccard estimate (the `sigEqCount` kernel) and union-find over
+    * the batch edges run here, with the distributed algebra's rules
+    * (null ids make no pair and are kept; a component is labelled by
+    * its min id). None (the distributed path) is returned when the
+    * batch's band keys or the stored rows number more than `bound`
+    * (the candidate ids are at most the stored rows), for an id type
+    * without a driver order, or when `bound` is 0. */
+  private def driverProbe(
+      h: SigTableHandle, p: SigParams,
+      incoming: DataFrame, idCol: String, textCol: String,
+      threshold: Double, pick: Seq[Column],
+      bound: Int): Option[IncrementalProbe] = {
+    val idType = incoming.schema(idCol).dataType
+    val order = driverIdOrder(idType)
+    if (bound <= 0 || order.isEmpty) return None
+    val spark = incoming.sparkSession
+    val frame = p.sigs(incoming, idCol, textCol)
+      .select(col("id"), col("sig"), p.bandKeys.as("keys"))
+    val docs = frame.limit(bound / p.bandCount + 1).collect()
+    if (docs.length.toLong * p.bandCount > bound) return None
+
+    type Key = (Int, Long)
+    def sigOf(r: Row): ArrayData = ArrayData.toArrayData(r.getSeq[Long](1).toArray)
+    // non-null batch ids → dense index; rows per key count every row
+    // (the capBuckets window), members only the rows that can pair
+    val index = mutable.HashMap[Any, Int]()
+    val ids = ArrayBuffer[Any]()
+    val sigs = ArrayBuffer[ArrayBuffer[ArrayData]]()
+    val rowsPer = mutable.HashMap[Key, Int]().withDefaultValue(0)
+    val members = mutable.HashMap[Key, ArrayBuffer[Int]]()
+    docs.foreach { r =>
+      val keys = r.getSeq[Row](2).map(k => (k.getInt(0), k.getLong(1)))
+      keys.foreach(k => rowsPer(k) += 1)
+      if (!r.isNullAt(0)) {
+        val i = index.getOrElseUpdate(r.get(0), {
+          ids += r.get(0); sigs += ArrayBuffer(); ids.length - 1 })
+        sigs(i) += sigOf(r)
+        keys.foreach(k => members.getOrElseUpdate(k, ArrayBuffer()) += i)
+      }
+    }
+    val capped = members.filter { case (k, _) => rowsPer(k) <= p.maxBucketSize }
+    val keySchema = frame.schema("keys").dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+    val touched = BucketStore.ProbeKeys(
+      rowsPer.keys.map { case (b, k) => Row(b, k) }.toArray, keySchema)
+
+    // not limited: a limit runs the scan as a chain of growing jobs,
+    // and the write-time cap holds it to max_bucket_size rows per key
+    val stored =
+      if (capped.isEmpty) Array.empty[Row]
+      else BucketStore.probeCollected(spark, h.bucketsSnap,
+          BucketStore.BandBucket, touched)
+        .select(col("id"), col("band"), col("bucket")).collect()
+    if (stored.length > bound) return None
+    val corpusIn = mutable.HashMap[Key, ArrayBuffer[Any]]()
+    stored.foreach { r =>
+      if (!r.isNullAt(0))
+        corpusIn.getOrElseUpdate((r.getInt(1), r.getLong(2)), ArrayBuffer()) += r.get(0)
+    }
+    val crossOf = Array.fill(ids.length)(mutable.HashSet[Any]())
+    capped.foreach { case (k, ms) =>
+      corpusIn.get(k).foreach(cs => ms.foreach(crossOf(_) ++= cs))
+    }
+    val wanted = crossOf.iterator.flatten.toSet
+    val corpusSigs: Map[Any, Seq[ArrayData]] =
+      if (wanted.isEmpty) Map.empty
+      else BucketStore.probeCollected(spark, h.sigsSnap, SigIdKey,
+          BucketStore.ProbeKeys(wanted.toArray.map(Row(_)),
+            StructType(Seq(h.bucketsSnap.df.schema("id")))))
+        .select(col("id"), col("sig")).collect()
+        .groupBy(_.get(0)).map { case (id, rs) => id -> rs.toSeq.map(sigOf) }
+
+    def near(a: collection.Seq[ArrayData], b: collection.Seq[ArrayData]): Boolean =
+      a.exists(x => b.exists(y => graft.plans.VectorKernels.eqCount(x, y)
+        .toDouble / p.numPerm.toDouble >= threshold))
+    val direct = ids.indices.filter(i =>
+      crossOf(i).exists(c => corpusSigs.get(c).exists(near(sigs(i), _))))
+
+    // union-find over the verified batch×batch edges
+    val parent = Array.tabulate(ids.length)(identity)
+    def root(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var j = i
+      while (parent(j) != r) { val n = parent(j); parent(j) = r; j = n }
+      r
+    }
+    val inEdge = new Array[Boolean](ids.length)
+    val pairs = mutable.HashSet[(Int, Int)]()
+    capped.valuesIterator.foreach(ms => for (a <- ms; b <- ms if a < b) pairs += ((a, b)))
+    pairs.foreach { case (a, b) =>
+      if (near(sigs(a), sigs(b))) {
+        inEdge(a) = true; inEdge(b) = true
+        parent(root(a)) = root(b)
+      }
+    }
+    val comps = ids.indices.filter(inEdge).groupBy(root)
+    val rejectedRoots = direct.filter(inEdge).map(root).toSet
+    val rejected: Set[Any] = (direct ++ rejectedRoots.flatMap(comps)).map(ids).toSet
+    val batchOnly = comps.collect { case (r, ms) if !rejectedRoots(r) =>
+      val label = ms.map(ids).min(order.get)
+      ms.map(i => Row(ids(i), label))
+    }.flatten.toSeq
+
+    def without(drop: Set[Any]): DataFrame =
+      if (drop.isEmpty) incoming
+      else incoming.filter(col(idCol).isNull || !col(idCol).isin(drop.toSeq: _*))
+    def sigRows(keep: Any => Boolean): DataFrame = spark.createDataFrame(
+      java.util.Arrays.asList(docs.collect {
+        case r if !r.isNullAt(0) && keep(r.get(0)) => Row(r.get(0), r.get(1))
+      }: _*), StructType(Seq(frame.schema("id"), frame.schema("sig"))))
+    val (survivors, survivorSigs) =
+      if (pick.isEmpty) {
+        val dropped = rejected ++ batchOnly.collect { case Row(id, l) if id != l => id }
+        val keptSigs = sigRows(id => !dropped(id))
+        (without(dropped), (_: DataFrame) => keptSigs)
+      } else {
+        val compsDf = spark.createDataFrame(java.util.Arrays.asList(batchOnly: _*),
+          StructType(Seq(StructField("id", idType), StructField("component", idType))))
+        (keepCanonical(without(rejected), idCol, compsDf, pick),
+          (s: DataFrame) => sigRows(id => !rejected(id))
+            .join(s.select(col(idCol).as("id")), Seq("id"), "left_semi"))
+      }
+    Some(IncrementalProbe(survivors, onDriver = true, survivorSigs,
+      Some(touched), () => ()))
+  }
+
+  /** The probe as a distributed plan over the persisted batch
+    * signatures and bucket keys: for batches above the driver bound,
+    * and the reference the driver path is checked against. */
+  private def distributedProbe(
+      h: SigTableHandle, p: SigParams,
+      incoming: DataFrame, idCol: String, textCol: String,
+      threshold: Double, pick: Seq[Column]): IncrementalProbe = {
     val batch = p.sigs(incoming, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val batchBucketsRaw = p.banded(batch)
@@ -1687,7 +1882,13 @@ object Dedup {
     IncrementalProbe(
       keepCanonical(incoming.join(rejectedIds, Seq(idCol), "left_anti"),
         idCol, batchOnlyComps, ordering),
-      batch, batchBuckets, touchedKeys)
+      onDriver = false,
+      s => batch.join(s.select(col(idCol).as("id")), Seq("id"), "left_semi"),
+      touchedKeys,
+      () => {
+        batch.unpersist(blocking = false)
+        batchBuckets.unpersist(blocking = false)
+      })
   }
 
   /** Append a batch's MinHash signatures to a persisted signature table
@@ -1749,35 +1950,46 @@ object Dedup {
     * admitted in batch N must reject its near-copy arriving in batch
     * N+1). Returns the survivors.
     *
-    * The survivors are materialized (localCheckpoint) BEFORE the
-    * append: their plan reads the very parquet relations the append
-    * mutates, so cutting the lineage first is what makes the returned
-    * frame stable however late it is consumed. Per-batch cost stays
-    * ∝ batch: the checkpoint writes batch-sized data, the append's
-    * corpus-side work is one semi-joined occupancy count. */
+    * EAGER, with the probe's two paths ([[nearDedupIncremental]]). On
+    * the driver path the jobs are the probe's collects plus the two
+    * appends; the survivors are `incoming` minus a literal id set and
+    * their signatures a local relation of the collected rows, so
+    * nothing is persisted or checkpointed and the returned frame reads
+    * no store relation. On the distributed path the survivors are
+    * materialized (localCheckpoint) BEFORE the append, so the returned
+    * frame is stable however late it is consumed. Per-batch cost stays
+    * ∝ batch: the append's corpus-side work is one semi-joined
+    * occupancy count. */
   def nearDedupIngest(
       spark: org.apache.spark.sql.SparkSession, sigTablePath: String,
       incoming: DataFrame, idCol: String, textCol: String,
-      threshold: Double, pick: Seq[Column] = Nil): DataFrame = {
+      threshold: Double, pick: Seq[Column] = Nil): DataFrame =
+    nearDedupIngest(spark, sigTablePath, incoming, idCol, textCol,
+      threshold, pick, BucketStore.MaxProbeKeys)
+
+  /** [[nearDedupIngest]] with the driver path's bound (0 forces the
+    * distributed algebra). */
+  private[graft] def nearDedupIngest(
+      spark: org.apache.spark.sql.SparkSession, sigTablePath: String,
+      incoming: DataFrame, idCol: String, textCol: String,
+      threshold: Double, pick: Seq[Column], driverBound: Int): DataFrame = {
     // one handle open, shared across BOTH phases of the batch: the
     // append reuses the probe's meta read, bucket-relation snapshot,
     // collected touched keys (its occupancy prune runs zero new driver
-    // actions) and persisted batch signatures (survivor sigs are a
-    // semi-join, not a re-shingle). The fence is NOT weakened:
+    // actions) and batch signatures (survivor sigs are a semi-join or
+    // a local relation, not a re-shingle). The fence is NOT weakened:
     // [[Store.append]] re-lists and re-validates at commit time, and
     // occupancy-from-the-probe-snapshot equals a fresh resolve under
     // the single-ingest-loop caller contract (nothing commits to the
     // bucket relation between the phases of one batch).
     val h = openSignatureTable(spark, sigTablePath)
     val r = nearDedupIncrementalCore(h, incoming, idCol, textCol,
-      threshold, pick)
-    val survivors = r.survivors.localCheckpoint(true)
+      threshold, pick, driverBound)
+    val survivors =
+      if (r.onDriver) r.survivors else r.survivors.localCheckpoint(true)
     appendSigsAndBuckets(spark, sigTablePath, h.meta,
-      r.batchSigs.join(survivors.select(col(idCol).as("id")),
-        Seq("id"), "left_semi"),
-      h.bucketsSnap, r.touched)
-    r.batchSigs.unpersist(blocking = false)
-    r.batchBuckets.unpersist(blocking = false)
+      r.survivorSigs(survivors), h.bucketsSnap, r.touched)
+    r.release()
     survivors
   }
 
@@ -2308,17 +2520,23 @@ object Dedup {
     * relation part-file counts (the [[compactSignatureTable]] signal
     * after many append generations).
     *
-    * Scale shape: two count aggregates plus one groupBy-max over
-    * bucket keys — all partial aggs; the 1-row joins are
+    * Scale shape: `n_docs` and `n_bucket_rows` are the manifests'
+    * recorded row counts (a count aggregate only for a relation whose
+    * manifest has none, such as an empty one), plus one groupBy-max
+    * over bucket keys — partial aggs; the 1-row joins are
     * broadcast-scalar crossJoins (the Stats.scala pattern). */
   def signatureTableStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val Seq(sigRel, bucketRel) = sigRelations(spark, path)
-    val buckets = bucketRel.read(spark, path)
     val sigsSnap = sigRel.snapshot(spark, path)
+    val bucketsSnap = Store.snapshot(spark, bucketRel.root(path))
+    val buckets = bucketsSnap.df
+    def rowCount(snap: Store.Snap, name: String): DataFrame =
+      snap.manifestRowCount.fold(snap.df.agg(count(lit(1)).as(name)))(n =>
+        spark.range(1).select(lit(n).as(name)))
     BucketStore.metaFrame(spark, path)
-      .crossJoin(sigsSnap.df.agg(count(lit(1)).as("n_docs")))
-      .crossJoin(buckets.agg(count(lit(1)).as("n_bucket_rows")))
+      .crossJoin(rowCount(sigsSnap, "n_docs"))
+      .crossJoin(rowCount(bucketsSnap, "n_bucket_rows"))
       .crossJoin(maxOccupancy(buckets))
       // bucket rows whose id has left sigs — the reconciliation signal
       // for retireFromSignatureTable's documented two-commit window

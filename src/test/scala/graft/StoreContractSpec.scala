@@ -153,6 +153,26 @@ class StoreContractSpec extends GraftSpec {
     }
   }
 
+  test("signature table stats read counts equal to a scan after each commit") {
+    val path = java.nio.file.Files.createTempDirectory("graft_contract_").toString
+    def check(step: String): Unit = {
+      val st = Dedup.signatureTableStats(spark, path).head()
+      Seq("sigs" -> "n_docs", "buckets" -> "n_bucket_rows").foreach { case (rel, stat) =>
+        val snap = graft.operators.Store.snapshot(spark, s"$path/$rel")
+        assert(snap.manifestRowCount.isDefined, s"$step: $rel has manifest counts")
+        assert(st.getAs[Long](stat) == snap.df.count(), s"$step: $stat")
+      }
+    }
+    Dedup.writeSignatureTable(corpus, "doc_id", "text", path)
+    check("create")
+    Dedup.appendToSignatureTable(spark, path, batch, "doc_id", "text")
+    check("append")
+    Dedup.retireFromSignatureTable(spark, path, Seq(Planted, CopyId).toDF("id"), "id")
+    check("retire")
+    Dedup.compactSignatureTable(spark, path, 1)
+    check("compact")
+  }
+
   test("a signature table keyed by int ids answers like the reference form") {
     // the candidate sig fetch prunes files by the collected int ids
     val path = java.nio.file.Files.createTempDirectory("graft_contract_").toString
