@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
@@ -136,6 +139,35 @@ private[graft] object BucketStore {
     val rows = keys.limit(MaxProbeKeys + 1).collect()
     if (rows.length > MaxProbeKeys) None
     else Some(ProbeKeys(rows, keys.schema))
+  }
+
+  /** The rows of `df` (in partition order, as `collect` gives them), or
+    * None when there are more than `n`. One job over every partition,
+    * with no `limit` job chain: each task sends at most n + 1 rows, and
+    * the driver drops what it holds once the running total passes `n`,
+    * so it never keeps more than n + 1. A plan that bounds its own rows
+    * by `n` (a local relation, which Spark collects without a job) is
+    * collected as it is. */
+  def collectAtMost(df: DataFrame, n: Int): Option[Array[Row]] = {
+    require(n >= 0 && n < Int.MaxValue, s"row bound $n")
+    val qe = df.queryExecution
+    if (qe.optimizedPlan.maxRows.exists(_ <= n)) return Some(df.collect())
+    val parts = SQLExecution.withNewExecutionId(qe, Some("collectAtMost")) {
+      val rdd = qe.toRdd
+      val parts = new Array[Array[InternalRow]](rdd.partitions.length)
+      var total = 0L
+      df.sparkSession.sparkContext.runJob(rdd,
+        (it: Iterator[InternalRow]) => it.take(n + 1).map(_.copy()).toArray,
+        (i: Int, rows: Array[InternalRow]) =>
+          if (total <= n) {
+            total += rows.length
+            if (total > n) java.util.Arrays.fill(parts.asInstanceOf[Array[AnyRef]], null)
+            else parts(i) = rows
+          })
+      if (total > n) None else Some(parts)
+    }
+    val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+    parts.map(_.flatMap(_.map(toRow)))
   }
 
   /** How a probe's key rows prune a relation: the key columns, the

@@ -1488,22 +1488,26 @@ object Dedup {
     * Caller contract: id spaces disjoint (as in the reference form) and
     * the batch small enough to broadcast its bucket keys.
     *
-    * Two paths, one answer. A batch whose band keys (docs × band ids)
-    * number at most [[BucketStore.MaxProbeKeys]], with integral or
-    * string ids, runs its batch-sized algebra on the driver
-    * (`driverProbe`); a larger batch runs the distributed algebra
-    * (`distributedProbe`), which is also the reference IncrementalProbeSpec
-    * holds the driver path to.
+    * Two paths, one answer. A batch with integral or string ids whose
+    * band keys (docs × band ids), and the stored bucket rows those keys
+    * touch, each number at most [[BucketStore.MaxProbeKeys]] runs its
+    * batch-sized algebra on the driver (`driverProbe`); any other batch
+    * runs the distributed algebra (`distributedProbe`), which is also
+    * the reference IncrementalProbeSpec holds the driver path to. Each
+    * driver collect stops holding rows once it passes the bound
+    * ([[BucketStore.collectAtMost]]), so the driver keeps at most
+    * bound + 1 rows of each.
     *
     * EAGER: this call RUNS Spark jobs before returning, and the store
     * view is frozen at the call, not at the first action on the result.
-    * On the driver path the jobs are three collects — the batch's
-    * (id, sig, band keys), the stored (id, band, bucket) rows of the
-    * touched keys, and the (id, sig) rows of the candidate corpus ids
-    * (skipped when there is none) — and the returned frame is
-    * `incoming` minus a literal rejected-id set (with a `pick`, the
-    * canonical pick over the batch-only clusters as a local relation):
-    * it reads no store relation. On the distributed path they are the
+    * On the driver path the jobs are three collects, one job each (none
+    * for a local batch) plus a broadcast job for each store fetch — the
+    * batch's (id, sig, band keys), the stored (id, band, bucket) rows
+    * of the capped touched keys, and the (id, sig) rows of the
+    * candidate corpus ids (skipped when there is none) — and the
+    * returned frame is `incoming` minus a literal rejected-id set (with
+    * a `pick`, the canonical pick over the batch-only clusters as a
+    * local relation): it reads no store relation. On the distributed path they are the
     * touched-key and candidate-id collects, a checkpoint of the
     * candidate edges materialized by the batch-edge count, and label
     * propagation when batch edges exist; the returned frame reads the
@@ -1597,16 +1601,40 @@ object Dedup {
     r.survivors
   }
 
-  /** One probe: on the driver when the batch fits `driverBound`
-    * ([[driverProbe]]), the distributed algebra otherwise. */
+  /** One probe: on the driver when the batch and the stored rows it
+    * touches fit `driverBound` ([[driverProbe]]), the distributed
+    * algebra otherwise. The batch's (id, sig, band keys) are collected
+    * by [[BucketStore.collectAtMost]], at most `driverBound / bandCount`
+    * docs, and no fallback computes a signature twice: when `incoming`'s
+    * plan bounds its rows (a local relation), a batch above that is
+    * sent to the distributed path before any signature is computed;
+    * otherwise the signatures are persisted by the collect's own job
+    * and the distributed path reads them when the collect is over the
+    * bound. A batch that fits but whose stored rows do not hands its
+    * collected signatures to the distributed path as a local relation. */
   private def nearDedupIncrementalCore(
       h: SigTableHandle,
       incoming: DataFrame, idCol: String, textCol: String,
       threshold: Double, pick: Seq[Column],
       driverBound: Int): IncrementalProbe = {
     val p = SigParams(h.meta)
-    driverProbe(h, p, incoming, idCol, textCol, threshold, pick, driverBound)
-      .getOrElse(distributedProbe(h, p, incoming, idCol, textCol, threshold, pick))
+    val batch = p.sigs(incoming, idCol, textCol)
+    def distributed(sigs: DataFrame) =
+      distributedProbe(h, p, sigs, incoming, idCol, threshold, pick)
+    val maxDocs = driverBound / p.bandCount
+    val order = driverIdOrder(incoming.schema(idCol).dataType)
+    val maxRows = incoming.queryExecution.optimizedPlan.maxRows
+    if (driverBound <= 0 || order.isEmpty || maxRows.exists(_ > maxDocs))
+      return distributed(batch)
+    val source =
+      if (maxRows.isDefined) batch
+      else batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val frame = source.select(col("id"), col("sig"), p.bandKeys.as("keys"))
+    BucketStore.collectAtMost(frame, maxDocs).fold(distributed(source)) { docs =>
+      if (maxRows.isEmpty) source.unpersist(blocking = false)
+      driverProbe(h, p, frame, docs, order.get, incoming, idCol, threshold, pick,
+        driverBound).getOrElse(distributed(localSigs(frame, docs)))
+    }
   }
 
   /** Spark's ascending order on an id type whose collected values
@@ -1621,34 +1649,34 @@ object Dedup {
     case _ => None
   }
 
-  /** The probe with its batch-sized algebra on the driver: three
-    * collects, no shuffle, no checkpoint.
-    *  1. the batch's (id, sig, band keys), banded by [[SigParams.bandKeys]];
-    *  2. the stored (id, band, bucket) rows of the touched keys
-    *     ([[BucketStore.probeCollected]]: file prune + semi-join);
-    *  3. the (id, sig) rows of the candidate corpus ids (same fetch).
+  /** The (id, sig) rows of collected `frame` rows as a local relation. */
+  private def localSigs(frame: DataFrame, rows: Seq[Row]): DataFrame =
+    frame.sparkSession.createDataFrame(
+      java.util.Arrays.asList(rows.map(r => Row(r.get(0), r.get(1))): _*),
+      StructType(Seq(frame.schema("id"), frame.schema("sig"))))
+
+  /** The probe with its batch-sized algebra on the driver, over the
+    * batch's collected (id, sig, band keys) `docs` (rows of `frame`).
+    * Two more collects ([[BucketStore.collectAtMost]] of a
+    * [[BucketStore.probeCollected]] fetch: file prune + semi-join), no
+    * shuffle, no checkpoint:
+    *  1. the stored (id, band, bucket) rows of the batch's keys that
+    *     pass the batch-side bucket cap;
+    *  2. the (id, sig) rows of the candidate corpus ids.
     * The batch-side bucket cap, the batch×batch and batch×corpus pairs,
     * the Jaccard estimate (the `sigEqCount` kernel) and union-find over
     * the batch edges run here, with the distributed algebra's rules
     * (null ids make no pair and are kept; a component is labelled by
-    * its min id). None (the distributed path) is returned when the
-    * batch's band keys or the stored rows number more than `bound`
-    * (the candidate ids are at most the stored rows), for an id type
-    * without a driver order, or when `bound` is 0. */
+    * its min id in `order`). Driver memory is linear in the batch's
+    * keys and the stored rows: pairs are walked, not gathered. None
+    * (the distributed path) when either fetch holds more than `bound`
+    * rows (the candidate ids are at most the stored rows). */
   private def driverProbe(
-      h: SigTableHandle, p: SigParams,
-      incoming: DataFrame, idCol: String, textCol: String,
+      h: SigTableHandle, p: SigParams, frame: DataFrame, docs: Array[Row],
+      order: Ordering[Any], incoming: DataFrame, idCol: String,
       threshold: Double, pick: Seq[Column],
       bound: Int): Option[IncrementalProbe] = {
-    val idType = incoming.schema(idCol).dataType
-    val order = driverIdOrder(idType)
-    if (bound <= 0 || order.isEmpty) return None
     val spark = incoming.sparkSession
-    val frame = p.sigs(incoming, idCol, textCol)
-      .select(col("id"), col("sig"), p.bandKeys.as("keys"))
-    val docs = frame.limit(bound / p.bandCount + 1).collect()
-    if (docs.length.toLong * p.bandCount > bound) return None
-
     type Key = (Int, Long)
     def sigOf(r: Row): ArrayData = ArrayData.toArrayData(r.getSeq[Long](1).toArray)
     // non-null batch ids → dense index; rows per key count every row
@@ -1671,42 +1699,54 @@ object Dedup {
     val capped = members.filter { case (k, _) => rowsPer(k) <= p.maxBucketSize }
     val keySchema = frame.schema("keys").dataType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType]
-    val touched = BucketStore.ProbeKeys(
-      rowsPer.keys.map { case (b, k) => Row(b, k) }.toArray, keySchema)
+    def keyRows(ks: Iterable[Key]) =
+      BucketStore.ProbeKeys(ks.map { case (b, k) => Row(b, k) }.toArray, keySchema)
+    // the append's occupancy prune needs every touched key; the stored
+    // rows are fetched only for the capped ones, the only ones that pair
+    val touched = keyRows(rowsPer.keys)
 
-    // not limited: a limit runs the scan as a chain of growing jobs,
-    // and the write-time cap holds it to max_bucket_size rows per key
-    val stored =
-      if (capped.isEmpty) Array.empty[Row]
-      else BucketStore.probeCollected(spark, h.bucketsSnap,
-          BucketStore.BandBucket, touched)
-        .select(col("id"), col("band"), col("bucket")).collect()
-    if (stored.length > bound) return None
+    val fetched =
+      if (capped.isEmpty) Some(Array.empty[Row])
+      else BucketStore.collectAtMost(BucketStore.probeCollected(spark, h.bucketsSnap,
+          BucketStore.BandBucket, keyRows(capped.keys))
+        .select(col("id"), col("band"), col("bucket")), bound)
+    if (fetched.isEmpty) return None
     val corpusIn = mutable.HashMap[Key, ArrayBuffer[Any]]()
-    stored.foreach { r =>
+    fetched.get.foreach { r =>
       if (!r.isNullAt(0))
         corpusIn.getOrElseUpdate((r.getInt(1), r.getLong(2)), ArrayBuffer()) += r.get(0)
     }
-    val crossOf = Array.fill(ids.length)(mutable.HashSet[Any]())
-    capped.foreach { case (k, ms) =>
-      corpusIn.get(k).foreach(cs => ms.foreach(crossOf(_) ++= cs))
-    }
-    val wanted = crossOf.iterator.flatten.toSet
-    val corpusSigs: Map[Any, Seq[ArrayData]] =
-      if (wanted.isEmpty) Map.empty
-      else BucketStore.probeCollected(spark, h.sigsSnap, SigIdKey,
+    val wanted = corpusIn.valuesIterator.flatten.toSet
+    val corpusRows =
+      if (wanted.isEmpty) Some(Array.empty[Row])
+      else BucketStore.collectAtMost(BucketStore.probeCollected(spark, h.sigsSnap, SigIdKey,
           BucketStore.ProbeKeys(wanted.toArray.map(Row(_)),
             StructType(Seq(h.bucketsSnap.df.schema("id")))))
-        .select(col("id"), col("sig")).collect()
-        .groupBy(_.get(0)).map { case (id, rs) => id -> rs.toSeq.map(sigOf) }
+        .select(col("id"), col("sig")), bound)
+    if (corpusRows.isEmpty) return None
+    val corpusSigs: Map[Any, Seq[ArrayData]] =
+      corpusRows.get.groupBy(_.get(0)).map { case (id, rs) => id -> rs.toSeq.map(sigOf) }
 
     def near(a: collection.Seq[ArrayData], b: collection.Seq[ArrayData]): Boolean =
       a.exists(x => b.exists(y => graft.plans.VectorKernels.eqCount(x, y)
         .toDouble / p.numPerm.toDouble >= threshold))
-    val direct = ids.indices.filter(i =>
-      crossOf(i).exists(c => corpusSigs.get(c).exists(near(sigs(i), _))))
+    // batch docs near a corpus doc sharing a capped key: each row's
+    // candidates are gathered once, so a pair sharing several keys is
+    // verified once
+    val direct = new Array[Boolean](ids.length)
+    val candidates = mutable.HashSet[Any]()
+    docs.foreach { r =>
+      if (!r.isNullAt(0) && !direct(index(r.get(0)))) {
+        val i = index(r.get(0))
+        candidates.clear()
+        r.getSeq[Row](2).foreach(k =>
+          corpusIn.get((k.getInt(0), k.getLong(1))).foreach(candidates ++= _))
+        direct(i) = candidates.exists(c => corpusSigs.get(c).exists(near(sigs(i), _)))
+      }
+    }
 
-    // union-find over the verified batch×batch edges
+    // union-find over the verified batch×batch edges; a pair already in
+    // one component adds nothing, so it is not verified
     val parent = Array.tabulate(ids.length)(identity)
     def root(i: Int): Int = {
       var r = i
@@ -1716,35 +1756,36 @@ object Dedup {
       r
     }
     val inEdge = new Array[Boolean](ids.length)
-    val pairs = mutable.HashSet[(Int, Int)]()
-    capped.valuesIterator.foreach(ms => for (a <- ms; b <- ms if a < b) pairs += ((a, b)))
-    pairs.foreach { case (a, b) =>
-      if (near(sigs(a), sigs(b))) {
-        inEdge(a) = true; inEdge(b) = true
-        parent(root(a)) = root(b)
+    capped.valuesIterator.foreach { ms =>
+      for (x <- ms.indices; y <- x + 1 until ms.length) {
+        val (a, b) = (ms(x), ms(y))
+        if (root(a) != root(b) && near(sigs(a), sigs(b))) {
+          inEdge(a) = true; inEdge(b) = true
+          parent(root(a)) = root(b)
+        }
       }
     }
     val comps = ids.indices.filter(inEdge).groupBy(root)
-    val rejectedRoots = direct.filter(inEdge).map(root).toSet
-    val rejected: Set[Any] = (direct ++ rejectedRoots.flatMap(comps)).map(ids).toSet
+    val rejectedRoots = ids.indices.filter(i => direct(i) && inEdge(i)).map(root).toSet
+    val rejected: Set[Any] =
+      (ids.indices.filter(direct) ++ rejectedRoots.flatMap(comps)).map(ids).toSet
     val batchOnly = comps.collect { case (r, ms) if !rejectedRoots(r) =>
-      val label = ms.map(ids).min(order.get)
+      val label = ms.map(ids).min(order)
       ms.map(i => Row(ids(i), label))
     }.flatten.toSeq
 
     def without(drop: Set[Any]): DataFrame =
       if (drop.isEmpty) incoming
       else incoming.filter(col(idCol).isNull || !col(idCol).isin(drop.toSeq: _*))
-    def sigRows(keep: Any => Boolean): DataFrame = spark.createDataFrame(
-      java.util.Arrays.asList(docs.collect {
-        case r if !r.isNullAt(0) && keep(r.get(0)) => Row(r.get(0), r.get(1))
-      }: _*), StructType(Seq(frame.schema("id"), frame.schema("sig"))))
+    def sigRows(keep: Any => Boolean): DataFrame =
+      localSigs(frame, docs.filter(r => !r.isNullAt(0) && keep(r.get(0))))
     val (survivors, survivorSigs) =
       if (pick.isEmpty) {
         val dropped = rejected ++ batchOnly.collect { case Row(id, l) if id != l => id }
         val keptSigs = sigRows(id => !dropped(id))
         (without(dropped), (_: DataFrame) => keptSigs)
       } else {
+        val idType = incoming.schema(idCol).dataType
         val compsDf = spark.createDataFrame(java.util.Arrays.asList(batchOnly: _*),
           StructType(Seq(StructField("id", idType), StructField("component", idType))))
         (keepCanonical(without(rejected), idCol, compsDf, pick),
@@ -1755,15 +1796,17 @@ object Dedup {
       Some(touched), () => ()))
   }
 
-  /** The probe as a distributed plan over the persisted batch
-    * signatures and bucket keys: for batches above the driver bound,
-    * and the reference the driver path is checked against. */
+  /** The probe as a distributed plan over the batch's (id, sig) rows
+    * `batchSigs` (persisted here unless they are already): for batches
+    * above the driver bound, and the reference the driver path is
+    * checked against. */
   private def distributedProbe(
-      h: SigTableHandle, p: SigParams,
-      incoming: DataFrame, idCol: String, textCol: String,
+      h: SigTableHandle, p: SigParams, batchSigs: DataFrame,
+      incoming: DataFrame, idCol: String,
       threshold: Double, pick: Seq[Column]): IncrementalProbe = {
-    val batch = p.sigs(incoming, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val batch =
+      if (batchSigs.storageLevel.isValid) batchSigs
+      else batchSigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val batchBucketsRaw = p.banded(batch)
     val batchBuckets = BucketStore.capBuckets(batchBucketsRaw, p.maxBucketSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

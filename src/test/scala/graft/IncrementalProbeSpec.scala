@@ -53,6 +53,9 @@ class IncrementalProbeSpec extends GraftSpec {
     path
   }
 
+  /** One default-corpus table for the cases that only probe it. */
+  private lazy val shared: String = table("ip_shared")
+
   /** A survivor frame from the distributed path reads its checkpointed
     * candidates; the driver path's reads `incoming` and local rows only. */
   private def onDriver(df: DataFrame): Boolean =
@@ -61,14 +64,16 @@ class IncrementalProbeSpec extends GraftSpec {
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   /** Both paths' surviving rows on one table and batch, asserted equal
-    * and returned. */
+    * and returned: the driver bound `bound` (the driver path, unless
+    * `driver` is false: the batch or its stored rows exceed it) against
+    * a bound of 0. */
   private def parity(path: String, batch: DataFrame,
-      pick: Seq[Column] = Nil): Seq[String] = {
+      pick: Seq[Column] = Nil, bound: Int = BucketStore.MaxProbeKeys,
+      driver: Boolean = true): Seq[String] = {
     val h = Dedup.openSignatureTable(spark, path)
-    val local = Dedup.nearDedupIncremental(h, batch, "doc_id", "text", Threshold, pick,
-      BucketStore.MaxProbeKeys)
+    val local = Dedup.nearDedupIncremental(h, batch, "doc_id", "text", Threshold, pick, bound)
     val reference = Dedup.nearDedupIncremental(h, batch, "doc_id", "text", Threshold, pick, 0)
-    assert(onDriver(local) && !onDriver(reference), "each path ran as asked")
+    assert(onDriver(local) == driver && !onDriver(reference), "each path ran as asked")
     val got = rows(local)
     assert(got == rows(reference), "the driver path keeps the distributed path's rows")
     got
@@ -81,14 +86,14 @@ class IncrementalProbeSpec extends GraftSpec {
     val c = chain(edit(doc(1), 2), 4)
     val batch = docs(c.zipWithIndex.map { case (t, i) => (101L + i, t) } :+
       (105L, doc(50)): _*)
-    assert(ids(parity(table("ip_chain"), batch)) == Set("105"))
+    assert(ids(parity(shared, batch)) == Set("105"))
   }
 
   test("a batch-only chain keeps its smallest id") {
     val c = chain(doc(60), 3)
     val batch = docs(c.zipWithIndex.map { case (t, i) => (203L - i, t) } :+
       (204L, doc(61)): _*)
-    assert(ids(parity(table("ip_batch_chain"), batch)) == Set("201", "204"))
+    assert(ids(parity(shared, batch)) == Set("201", "204"))
   }
 
   test("a batch bucket over maxBucketSize proposes no pair") {
@@ -120,28 +125,72 @@ class IncrementalProbeSpec extends GraftSpec {
     val batch = docs((601L, doc(66)), (602L, doc(66) + " tail words here"),
       (603L, edit(doc(4), 30)), (604L, doc(67)))
     val longest = Seq(length(col("text")).desc, col("doc_id").asc)
-    assert(ids(parity(table("ip_pick"), batch, longest)) == Set("602", "604"))
+    assert(ids(parity(shared, batch, longest)) == Set("602", "604"))
   }
 
   test("token-less and empty texts pass through") {
     val batch = docs((701L, ""), (702L, "   "), (703L, null), (704L, "two words"),
       (705L, doc(5)))
-    assert(ids(parity(table("ip_tokenless"), batch)) == Set("701", "702", "703", "704"))
+    assert(ids(parity(shared, batch)) == Set("701", "702", "703", "704"))
   }
 
   test("a null id is kept, whatever its text matches") {
     val batch = docs((null, doc(6)), (null, doc(68)), (801L, doc(7)),
       (802L, doc(68)))
-    assert(ids(parity(table("ip_null"), batch)) == Set("null", "802"))
+    assert(ids(parity(shared, batch)) == Set("null", "802"))
   }
 
   test("an empty batch keeps nothing") {
-    assert(parity(table("ip_empty_batch"), docs()).isEmpty)
+    assert(parity(shared, docs()).isEmpty)
   }
 
   test("an empty, unprunable store dedups the batch among itself") {
     val batch = docs((901L, doc(69)), (902L, edit(doc(69), 4)), (903L, doc(8)))
     assert(ids(parity(table("ip_empty_store", docs()), batch)) == Set("901", "903"))
+  }
+
+  test("stored rows over the bound send a fitting batch to the distributed path") {
+    // three stored copies of one text: a copy of it and a fresh doc
+    // have 32 keys, within a bound of 40; the 48 stored rows of the
+    // copy's 16 keys are not
+    val copies = docs((1L, doc(9)), (2L, doc(9)), (3L, doc(9)), (4L, doc(10)))
+    val path = table("ip_stored_over", copies)
+    val batch = docs((1101L, doc(9)), (1102L, doc(77)))
+    assert(ids(parity(path, batch, bound = 40, driver = false)) == Set("1102"))
+    assert(ids(parity(path, batch, bound = 48)) == Set("1102"))
+  }
+
+  test("a multi-partition batch read from files, within and over the bound") {
+    val c = chain(edit(doc(1), 2), 3)
+    val dir = Scratch.path("ip_files_batch")
+    Scratch.remove("ip_files_batch")
+    docs((1201L, c(0)), (1202L, c(1)), (1203L, c(2)), (1204L, doc(78)),
+      (1205L, edit(doc(78), 8)), (1206L, doc(79)))
+      .repartition(3).write.parquet(dir)
+    val batch = spark.read.parquet(dir)
+    assert(batch.queryExecution.optimizedPlan.maxRows.isEmpty &&
+      batch.rdd.getNumPartitions > 1, "a file batch of unknown size, in several partitions")
+    // 6 docs × 16 band ids: 96 keys
+    assert(ids(parity(shared, batch)) == Set("1204", "1206"))
+    assert(ids(parity(shared, batch, bound = 95, driver = false)) == Set("1204", "1206"))
+  }
+
+  test("a local batch over the bound is sent to the distributed path") {
+    val batch = docs((1301L, doc(80)), (1302L, edit(doc(80), 5)), (1303L, doc(81)))
+    assert(ids(parity(shared, batch, bound = 47, driver = false)) == Set("1301", "1303"))
+    assert(ids(parity(shared, batch, bound = 48)) == Set("1301", "1303"))
+  }
+
+  test("collectAtMost returns collect's rows, or None over its bound") {
+    // an RDD's plan does not bound its rows: the one-job path
+    val df = spark.sparkContext.parallelize(0L until 50L, 4).toDF("n")
+    assert(df.queryExecution.optimizedPlan.maxRows.isEmpty)
+    assert(BucketStore.collectAtMost(df, 50).map(_.toSeq) == Some(df.collect().toSeq))
+    assert(BucketStore.collectAtMost(df, 49).isEmpty)
+    assert(BucketStore.collectAtMost(df.filter(col("n") < 0), 0).exists(_.isEmpty))
+    // a local relation of at most n rows is collected as it is
+    val local = (0L until 5L).toDF("n")
+    assert(BucketStore.collectAtMost(local, 5).map(_.toSeq) == Some(local.collect().toSeq))
   }
 
   test("the ingest chain appends the same rows on both paths") {
