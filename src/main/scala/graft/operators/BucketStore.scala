@@ -1,5 +1,9 @@
 package graft.operators
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.FutureAction
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -102,6 +106,13 @@ private[graft] object BucketStore {
   def metaFrame(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(metaDir(path))
 
+  /** A relation's row count as a one-row frame of column `name`, for
+    * the stats queries: the manifest's recorded count, or a count
+    * aggregate where the manifest records none (an empty relation). */
+  def rowCount(snap: Store.Snap, name: String): DataFrame =
+    snap.manifestRowCount.fold(snap.df.agg(count(lit(1)).as(name)))(n =>
+      snap.df.sparkSession.range(1).select(lit(n).as(name)))
+
   /** Drop every row of a (band, bucket) relation whose bucket holds
     * more than `maxBucketSize` rows — the skew guard of every banded
     * match and store write. `Int.MaxValue` keeps every row, with no
@@ -117,12 +128,13 @@ private[graft] object BucketStore {
 
   // ───────── probe-side dynamic file pruning ─────────
 
-  /** Probes touching more keys than this skip driver-side file pruning
-    * (collecting the key list stops being "tiny") and fall back to the
-    * full manifest scan + broadcast semi-join — which a batch of that
-    * size amortizes anyway. The collect this bounds is the SAME key
-    * relation the probe already broadcasts, so the guard's cost model
-    * matches the join's. */
+  /** The bound of every driver collect under a store probe: a probe
+    * whose keys number more than this skips the driver-side file prune
+    * and falls back to the full manifest scan + broadcast semi-join,
+    * which a batch of that size amortizes anyway, and the signature
+    * table's driver probe takes its distributed path above it. Each
+    * collect goes through [[collectAtMost]], so the driver never holds
+    * more than this + 1 rows of one. */
   val MaxProbeKeys: Int = 1 << 20
 
   /** The collected key rows of one probe — gathered ONCE on the driver
@@ -132,21 +144,15 @@ private[graft] object BucketStore {
     * phase. */
   final case class ProbeKeys(rows: Array[Row], schema: StructType)
 
-  /** The one bounded key collect: None when `keys` holds more than
-    * [[MaxProbeKeys]] rows, where callers fall back to the distributed
-    * broadcast path. */
-  def collectKeys(keys: DataFrame): Option[ProbeKeys] = {
-    val rows = keys.limit(MaxProbeKeys + 1).collect()
-    if (rows.length > MaxProbeKeys) None
-    else Some(ProbeKeys(rows, keys.schema))
-  }
-
   /** The rows of `df` (in partition order, as `collect` gives them), or
-    * None when there are more than `n`. One job over every partition,
-    * with no `limit` job chain: each task sends at most n + 1 rows, and
-    * the driver drops what it holds once the running total passes `n`,
-    * so it never keeps more than n + 1. A plan that bounds its own rows
-    * by `n` (a local relation, which Spark collects without a job) is
+    * None when there are more than `n`: the one bounded driver collect.
+    * One job over every partition, with no `limit` job chain: each task
+    * sends at most n + 1 rows, and once the running total passes `n`
+    * the driver drops what it holds and cancels the job, so no task
+    * starts after the cancel lands. Over the bound any failure of the job —
+    * the cancel, or a `spark.driver.maxResultSize` abort of the results
+    * already in flight — means None. A plan that bounds its own rows by
+    * `n` (a local relation, which Spark collects without a job) is
     * collected as it is. */
   def collectAtMost(df: DataFrame, n: Int): Option[Array[Row]] = {
     require(n >= 0 && n < Int.MaxValue, s"row bound $n")
@@ -156,15 +162,27 @@ private[graft] object BucketStore {
       val rdd = qe.toRdd
       val parts = new Array[Array[InternalRow]](rdd.partitions.length)
       var total = 0L
-      df.sparkSession.sparkContext.runJob(rdd,
+      // the handler runs on the scheduler's event thread, maybe before
+      // `job` is set: whichever of it and this thread sees the other's
+      // write cancels (a cancel only posts an event, never blocks)
+      @volatile var over = false
+      @volatile var job: FutureAction[Unit] = null
+      job = df.sparkSession.sparkContext.submitJob(rdd,
         (it: Iterator[InternalRow]) => it.take(n + 1).map(_.copy()).toArray,
+        rdd.partitions.indices,
         (i: Int, rows: Array[InternalRow]) =>
           if (total <= n) {
             total += rows.length
-            if (total > n) java.util.Arrays.fill(parts.asInstanceOf[Array[AnyRef]], null)
-            else parts(i) = rows
-          })
-      if (total > n) None else Some(parts)
+            if (total > n) {
+              java.util.Arrays.fill(parts.asInstanceOf[Array[AnyRef]], null)
+              over = true
+              if (job != null) job.cancel()
+            } else parts(i) = rows
+          },
+        ())
+      if (over) job.cancel()
+      Await.ready(job, Duration.Inf)
+      if (total > n) None else { job.value.get.get; Some(parts) }
     }
     val toRow = ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
     parts.map(_.flatMap(_.map(toRow)))
@@ -242,9 +260,9 @@ private[graft] object BucketStore {
     * collected key — a conservative SUPERSET (files without stats
     * survive), so it prunes BYTES, never rows. */
   def prunedScan(snap: Store.Snap, scheme: KeyScheme,
-      keys: ProbeKeys): DataFrame =
+      keys: Array[Row]): DataFrame =
     if (unprunable(snap)) snap.df
-    else Store.pruneFiles(snap)(scheme.keep(keys.rows))
+    else Store.pruneFiles(snap)(scheme.keep(keys))
 
   /** [[probe]] over keys a caller ALREADY collected — pruned scan +
     * local-relation broadcast semi-join, zero additional driver
@@ -253,51 +271,44 @@ private[graft] object BucketStore {
       scheme: KeyScheme, keys: ProbeKeys): DataFrame = {
     val local = spark
       .createDataFrame(java.util.Arrays.asList(keys.rows: _*), keys.schema)
-    prunedScan(snap, scheme, keys).join(
+    prunedScan(snap, scheme, keys.rows).join(
       broadcast(scheme.guard.fold(local)(local.filter)), scheme.cols,
       "left_semi")
   }
 
-  /** The stored rows matching a probe's `touched` keys: the serving-path
-    * scan bound. The key plan is evaluated ONCE: the same collected
-    * rows drive both the driver-side file prune and (as a local
-    * relation) the exact semi-join — re-evaluating the distributed
-    * plan for the broadcast would repeat its shuffle on every probe.
-    * Probes touching more than [[MaxProbeKeys]] keys (or an empty
-    * relation) fall back to the distributed broadcast, where
-    * the scan-side bound comes from DPP alone. On a banded relation
-    * Catalyst's DPP prunes the band partitions through the semi-join;
-    * the file prune covers the file-in-partition granularity DPP cannot
-    * reach on V1 sources. PlanSpec pins the REAL serving plan — the
-    * semi-join must reach a banded scan as a `dynamicpruningexpression`
-    * partition filter on `band`. */
-  def probe(snap: Store.Snap, scheme: KeyScheme,
-      touched: DataFrame): DataFrame = {
-    val keys = scheme.guard.fold(touched)(touched.filter)
-      .select(scheme.cols.map(col): _*)
-    (if (unprunable(snap)) None else collectKeys(keys)) match {
-      case Some(k) => probeCollected(touched.sparkSession, snap, scheme, k)
-      case None => snap.df.join(broadcast(keys), scheme.cols, "left_semi")
-    }
-  }
-
-  /** [[probe]] of a banded relation with the batch's (band, bucket)
-    * rows: `touched`. Keys are collected from `superset` (a superset of
-    * `touched`, e.g. before the batch-side bucket cap), so the same
-    * batch's append can reuse them for its occupancy count. Returns the
-    * stored rows and the collected keys. */
-  def bandProbe(snap: Store.Snap, superset: DataFrame,
-      touched: DataFrame): (DataFrame, Option[ProbeKeys]) = {
-    val keys =
+  /** The stored rows matching the distinct `scheme` keys of `touched`
+    * (the serving-path scan bound), and the keys the probe collected.
+    * The keys are collected ONCE ([[collectAtMost]]) and drive both the
+    * driver-side file prune and (as a local relation) the exact
+    * semi-join — re-evaluating the distributed key plan for the
+    * broadcast would repeat its shuffle on every probe. They are
+    * collected from `superset` when given (a superset of `touched`'s
+    * keys, e.g. a batch's before its bucket cap), so the same batch's
+    * append can reuse them for its occupancy count. A probe with more
+    * than [[MaxProbeKeys]] keys (or of an empty relation) collects
+    * nothing more: it falls back to the distributed broadcast of
+    * `touched`'s keys, where the scan-side bound comes from DPP alone.
+    * On a banded relation Catalyst's DPP prunes the band partitions
+    * through the semi-join; the file prune covers the
+    * file-in-partition granularity DPP cannot reach on V1 sources.
+    * PlanSpec pins the REAL serving plan — the semi-join must reach a
+    * banded scan as a `dynamicpruningexpression` partition filter on
+    * `band`. */
+  def probe(snap: Store.Snap, scheme: KeyScheme, touched: DataFrame,
+      superset: Option[DataFrame] = None): (DataFrame, Option[ProbeKeys]) = {
+    def keysOf(df: DataFrame) = scheme.guard.fold(df)(df.filter)
+      .select(scheme.cols.map(col): _*).distinct()
+    val keys = keysOf(touched)
+    val collected =
       if (unprunable(snap)) None
-      else collectKeys(superset.filter(col("band") >= 0)
-        .select(col("band"), col("bucket")).distinct())
-    val stored = keys match {
-      case Some(k) => probeCollected(superset.sparkSession, snap, BandBucket, k)
-      case None => probe(snap, BandBucket,
-        touched.select(col("band"), col("bucket")).distinct())
-    }
-    (stored, keys)
+      else {
+        val from = superset.fold(keys)(keysOf)
+        collectAtMost(from, MaxProbeKeys).map(ProbeKeys(_, from.schema))
+      }
+    val stored = collected.fold(
+      snap.df.join(broadcast(keys), scheme.cols, "left_semi"))(
+      probeCollected(touched.sparkSession, snap, scheme, _))
+    (stored, collected)
   }
 
   /** A probe-time result reused at append time only while the relation
@@ -318,12 +329,12 @@ private[graft] object BucketStore {
     * to measure. */
   def footprint(snap: Store.Snap, scheme: KeyScheme,
       touched: DataFrame): (Long, Long, Long, Long) = {
-    val keys = collectKeys(touched)
+    val keys = collectAtMost(touched, MaxProbeKeys)
     require(keys.isDefined,
       s"probe footprint measures the pruned path, and this batch " +
         s"touches > $MaxProbeKeys keys, where the probe falls back to " +
         s"the full scan; measure a smaller batch")
-    val p = Store.prunedScan(snap)(scheme.keep(keys.get.rows))
+    val p = Store.prunedScan(snap)(scheme.keep(keys.get))
     (p.keptFiles, p.keptBytes, p.totalFiles, p.totalBytes)
   }
 
@@ -343,12 +354,11 @@ private[graft] object BucketStore {
   def appendBanded(spark: SparkSession, path: String, rel: Relation,
       rows: DataFrame, maxBucketSize: Int, snap: Store.Snap,
       touched: Option[ProbeKeys]): Unit = {
-    def keys = rows.select(col("band"), col("bucket")).distinct()
     val storedRows = touched match {
       case Some(k) => fenced(spark, snap)(
         probeCollected(spark, snap, BandBucket, k))(
-        probe(rel.snapshot(spark, path), BandBucket, keys))
-      case None => probe(snap, BandBucket, keys)
+        probe(rel.snapshot(spark, path), BandBucket, rows)._1)
+      case None => probe(snap, BandBucket, rows)._1
     }
     val stored = storedRows
       .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("__stored"))
@@ -391,7 +401,7 @@ private[graft] object BucketStore {
     }
     val keys =
       if (counted.clusterBy == Seq(key) &&
-        stored.schema(key).dataType == LongType) collectKeys(gone)
+        stored.schema(key).dataType == LongType) collectAtMost(gone, MaxProbeKeys)
       else None
     def drop(snap: Store.Snap) =
       snap.df.join(broadcast(gone), Seq(key), "left_anti")

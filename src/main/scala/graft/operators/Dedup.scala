@@ -1507,12 +1507,14 @@ object Dedup {
     * candidate corpus ids (skipped when there is none) — and the
     * returned frame is `incoming` minus a literal rejected-id set (with
     * a `pick`, the canonical pick over the batch-only clusters as a
-    * local relation): it reads no store relation. On the distributed path they are the
-    * touched-key and candidate-id collects, a checkpoint of the
-    * candidate edges materialized by the batch-edge count, and label
-    * propagation when batch edges exist; the returned frame reads the
-    * checkpoint. Same eagerness for [[hammingNearDupsIncremental]] and
-    * the appendTo* family.
+    * local relation): it reads no store relation. On the distributed
+    * path they are the touched-key collect (none when the driver path
+    * handed over the keys it already holds) and the candidate-id
+    * collect, one [[BucketStore.collectAtMost]] job each, a checkpoint
+    * of the candidate edges materialized by the batch-edge count, and
+    * label propagation when batch edges exist; the returned frame reads
+    * the checkpoint. Same eagerness for [[hammingNearDupsIncremental]]
+    * and the appendTo* family.
     *
     * @return the surviving rows of `incoming` (original columns) */
   def nearDedupIncremental(
@@ -1611,7 +1613,8 @@ object Dedup {
     * otherwise the signatures are persisted by the collect's own job
     * and the distributed path reads them when the collect is over the
     * bound. A batch that fits but whose stored rows do not hands its
-    * collected signatures to the distributed path as a local relation. */
+    * collected signatures to the distributed path as a local relation,
+    * and its collected touched keys, so that path collects no key. */
   private def nearDedupIncrementalCore(
       h: SigTableHandle,
       incoming: DataFrame, idCol: String, textCol: String,
@@ -1619,21 +1622,21 @@ object Dedup {
       driverBound: Int): IncrementalProbe = {
     val p = SigParams(h.meta)
     val batch = p.sigs(incoming, idCol, textCol)
-    def distributed(sigs: DataFrame) =
-      distributedProbe(h, p, sigs, incoming, idCol, threshold, pick)
+    def distributed(sigs: DataFrame, touched: Option[BucketStore.ProbeKeys]) =
+      distributedProbe(h, p, sigs, touched, incoming, idCol, threshold, pick)
     val maxDocs = driverBound / p.bandCount
     val order = driverIdOrder(incoming.schema(idCol).dataType)
     val maxRows = incoming.queryExecution.optimizedPlan.maxRows
     if (driverBound <= 0 || order.isEmpty || maxRows.exists(_ > maxDocs))
-      return distributed(batch)
+      return distributed(batch, None)
     val source =
       if (maxRows.isDefined) batch
       else batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val frame = source.select(col("id"), col("sig"), p.bandKeys.as("keys"))
-    BucketStore.collectAtMost(frame, maxDocs).fold(distributed(source)) { docs =>
+    BucketStore.collectAtMost(frame, maxDocs).fold(distributed(source, None)) { docs =>
       if (maxRows.isEmpty) source.unpersist(blocking = false)
       driverProbe(h, p, frame, docs, order.get, incoming, idCol, threshold, pick,
-        driverBound).getOrElse(distributed(localSigs(frame, docs)))
+        driverBound).fold(k => distributed(localSigs(frame, docs), Some(k)), identity)
     }
   }
 
@@ -1668,14 +1671,15 @@ object Dedup {
     * the batch edges run here, with the distributed algebra's rules
     * (null ids make no pair and are kept; a component is labelled by
     * its min id in `order`). Driver memory is linear in the batch's
-    * keys and the stored rows: pairs are walked, not gathered. None
-    * (the distributed path) when either fetch holds more than `bound`
-    * rows (the candidate ids are at most the stored rows). */
+    * keys and the stored rows: pairs are walked, not gathered. When
+    * either fetch holds more than `bound` rows (the candidate ids are
+    * at most the stored rows), the batch's touched keys instead, for
+    * the distributed path. */
   private def driverProbe(
       h: SigTableHandle, p: SigParams, frame: DataFrame, docs: Array[Row],
       order: Ordering[Any], incoming: DataFrame, idCol: String,
       threshold: Double, pick: Seq[Column],
-      bound: Int): Option[IncrementalProbe] = {
+      bound: Int): Either[BucketStore.ProbeKeys, IncrementalProbe] = {
     val spark = incoming.sparkSession
     type Key = (Int, Long)
     def sigOf(r: Row): ArrayData = ArrayData.toArrayData(r.getSeq[Long](1).toArray)
@@ -1710,7 +1714,7 @@ object Dedup {
       else BucketStore.collectAtMost(BucketStore.probeCollected(spark, h.bucketsSnap,
           BucketStore.BandBucket, keyRows(capped.keys))
         .select(col("id"), col("band"), col("bucket")), bound)
-    if (fetched.isEmpty) return None
+    if (fetched.isEmpty) return Left(touched)
     val corpusIn = mutable.HashMap[Key, ArrayBuffer[Any]]()
     fetched.get.foreach { r =>
       if (!r.isNullAt(0))
@@ -1723,7 +1727,7 @@ object Dedup {
           BucketStore.ProbeKeys(wanted.toArray.map(Row(_)),
             StructType(Seq(h.bucketsSnap.df.schema("id")))))
         .select(col("id"), col("sig")), bound)
-    if (corpusRows.isEmpty) return None
+    if (corpusRows.isEmpty) return Left(touched)
     val corpusSigs: Map[Any, Seq[ArrayData]] =
       corpusRows.get.groupBy(_.get(0)).map { case (id, rs) => id -> rs.toSeq.map(sigOf) }
 
@@ -1792,17 +1796,18 @@ object Dedup {
           (s: DataFrame) => sigRows(id => !rejected(id))
             .join(s.select(col(idCol).as("id")), Seq("id"), "left_semi"))
       }
-    Some(IncrementalProbe(survivors, onDriver = true, survivorSigs,
+    Right(IncrementalProbe(survivors, onDriver = true, survivorSigs,
       Some(touched), () => ()))
   }
 
   /** The probe as a distributed plan over the batch's (id, sig) rows
     * `batchSigs` (persisted here unless they are already): for batches
     * above the driver bound, and the reference the driver path is
-    * checked against. */
+    * checked against. `touched` is the batch's (band, bucket) keys
+    * when the driver path already collected them. */
   private def distributedProbe(
       h: SigTableHandle, p: SigParams, batchSigs: DataFrame,
-      incoming: DataFrame, idCol: String,
+      touched: Option[BucketStore.ProbeKeys], incoming: DataFrame, idCol: String,
       threshold: Double, pick: Seq[Column]): IncrementalProbe = {
     val batch =
       if (batchSigs.storageLevel.isValid) batchSigs
@@ -1820,9 +1825,14 @@ object Dedup {
     // the capped probe keys (pruning stays conservative-correct) AND of
     // the append's survivor keys, so the fused ingest path reuses ONE
     // collect for every phase — an over-cap batch bucket must still
-    // see its true stored occupancy at append time.
-    val (corpusMatch, touchedKeys) =
-      BucketStore.bandProbe(h.bucketsSnap, batchBucketsRaw, batchBuckets)
+    // see its true stored occupancy at append time. The driver path's
+    // keys are that same uncapped set.
+    val (corpusMatch, touchedKeys) = touched match {
+      case Some(k) => (BucketStore.probeCollected(incoming.sparkSession,
+        h.bucketsSnap, BucketStore.BandBucket, k), touched)
+      case None => BucketStore.probe(h.bucketsSnap, BucketStore.BandBucket,
+        batchBuckets, Some(batchBucketsRaw))
+    }
 
     // candidates: batch×batch (self-join) ∪ batch×corpus — id spaces
     // are disjoint, so the two relations cannot share a pair, and they
@@ -1852,21 +1862,10 @@ object Dedup {
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"))
     // the candidate corpus-id set drives the sig relation's driver-side
-    // file prune AND its exact semi-join, so it is COLLECTED once (the
-    // candidate join runs exactly one time) and re-enters the plan as a
-    // local relation — the former eager checkpoint paid one action to
-    // materialize and a second inside the prune's own collect.
-    // Over-limit (or non-long-id) batches keep the checkpointed path.
-    val idIsLong = incoming.schema(idCol).dataType ==
-      org.apache.spark.sql.types.LongType
-    val neededPlan = crossPairs.select(col("id_b").as("id")).distinct()
-    val corpusSigs =
-      (if (idIsLong) BucketStore.collectKeys(neededPlan) else None) match {
-        case Some(k) => BucketStore.probeCollected(
-          incoming.sparkSession, h.sigsSnap, SigIdKey, k)
-        case None => BucketStore.probe(
-          h.sigsSnap, SigIdKey, neededPlan.localCheckpoint(true))
-      }
+    // file prune AND its exact semi-join: collected once, it re-enters
+    // the plan as a local relation
+    val corpusSigs = BucketStore.probe(h.sigsSnap, SigIdKey,
+      crossPairs.select(col("id_b").as("id")))._1
     val edgesBatch = estimate(batchPairs,
       batch.select(col("id").as("id_b"), col("sig").as("sig_b")))
     // batch docs with a confirmed corpus near-dup: the corpus flag
@@ -2000,8 +1999,11 @@ object Dedup {
     * nothing is persisted or checkpointed and the returned frame reads
     * no store relation. On the distributed path the survivors are
     * materialized (localCheckpoint) BEFORE the append, so the returned
-    * frame is stable however late it is consumed. Per-batch cost stays
-    * ∝ batch: the append's corpus-side work is one semi-joined
+    * frame is stable however late it is consumed. The append's
+    * occupancy count reuses the touched keys the probe collected (the
+    * driver path's, when it handed the batch over), so it collects
+    * none of its own unless they were over the bound. Per-batch cost
+    * stays ∝ batch: the append's corpus-side work is one semi-joined
     * occupancy count. */
   def nearDedupIngest(
       spark: org.apache.spark.sql.SparkSession, sigTablePath: String,
@@ -2314,7 +2316,7 @@ object Dedup {
     val incB = hamBanded(incoming, idCol, sigCol,
       if (multiProbe) hammingBandsMultiProbe(_, nBands)
       else hammingBands(_, nBands))
-    val (stored, touchedKeys) = BucketStore.bandProbe(h.bucketsSnap, incB, incB)
+    val (stored, touchedKeys) = BucketStore.probe(h.bucketsSnap, BucketStore.BandBucket, incB)
     val matches = incB.join(stored.select(col("band"), col("bucket"),
         col("id").as("corpus_id"), col("sig").as("corpus_sig")),
         Seq("band", "bucket"))
@@ -2574,12 +2576,9 @@ object Dedup {
     val sigsSnap = sigRel.snapshot(spark, path)
     val bucketsSnap = Store.snapshot(spark, bucketRel.root(path))
     val buckets = bucketsSnap.df
-    def rowCount(snap: Store.Snap, name: String): DataFrame =
-      snap.manifestRowCount.fold(snap.df.agg(count(lit(1)).as(name)))(n =>
-        spark.range(1).select(lit(n).as(name)))
     BucketStore.metaFrame(spark, path)
-      .crossJoin(rowCount(sigsSnap, "n_docs"))
-      .crossJoin(rowCount(bucketsSnap, "n_bucket_rows"))
+      .crossJoin(BucketStore.rowCount(sigsSnap, "n_docs"))
+      .crossJoin(BucketStore.rowCount(bucketsSnap, "n_bucket_rows"))
       .crossJoin(maxOccupancy(buckets))
       // bucket rows whose id has left sigs — the reconciliation signal
       // for retireFromSignatureTable's documented two-commit window
@@ -2602,15 +2601,16 @@ object Dedup {
 
   /** [[signatureTableStats]] for a persisted Hamming table (n_docs is
     * the distinct stored id count — the banded relation holds
-    * `max_hamming + 1` rows per document minus write-cap drops). */
+    * `max_hamming + 1` rows per document minus write-cap drops;
+    * n_bucket_rows is the manifest's recorded count). */
   def hammingTableStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val rel = hamBuckets(spark, path)
-    val buckets = rel.read(spark, path)
+    val snap = Store.snapshot(spark, rel.root(path))
+    val buckets = snap.df
     BucketStore.metaFrame(spark, path)
-      .crossJoin(buckets.agg(
-        count_distinct(col("id")).as("n_docs"),
-        count(lit(1)).as("n_bucket_rows")))
+      .crossJoin(buckets.agg(count_distinct(col("id")).as("n_docs")))
+      .crossJoin(BucketStore.rowCount(snap, "n_bucket_rows"))
       .crossJoin(maxOccupancy(buckets))
       .withColumn("n_bucket_files",
         lit(Store.partFileCount(spark, rel.root(path))))
@@ -2905,8 +2905,7 @@ object Dedup {
       sep: String): (DataFrame, DataFrame) = {
     val lines = paragraphLines(incoming, idCol, textCol, sep)
       .withColumn("h", xxhash64(col("line")))
-    val storedHit =
-      BucketStore.probe(snap, ParaKey, lines.select(col("h")).distinct())
+    val storedHit = BucketStore.probe(snap, ParaKey, lines)._1
     val survivors = firstOccurrences(lines.join(storedHit, Seq("h"), "left_anti"))
       .groupBy(col("doc_id")).agg(joinedLines(sep).as("text"))
       .select(col("doc_id").as(idCol), col("text"))
@@ -2933,7 +2932,7 @@ object Dedup {
       batch: DataFrame, idCol: String, textCol: String): Unit = {
     val hashes = paraHashes(batch, textCol, paraSep(spark, path))
     val storedHit =
-      BucketStore.probe(ParaHashes.snapshot(spark, path), ParaKey, hashes)
+      BucketStore.probe(ParaHashes.snapshot(spark, path), ParaKey, hashes)._1
     ParaHashes.append(spark, path)(hashes.join(storedHit, Seq("h"), "left_anti"))
   }
 
@@ -2964,7 +2963,7 @@ object Dedup {
     ParaHashes.append(spark, path) {
       val hashes = paraHashes(survivors, "text", sep)
       hashes.join(BucketStore.fenced(spark, snap)(storedHit)(
-        BucketStore.probe(ParaHashes.snapshot(spark, path), ParaKey, hashes)),
+        BucketStore.probe(ParaHashes.snapshot(spark, path), ParaKey, hashes)._1),
         Seq("h"), "left_anti")
     }
     survivors
@@ -3048,15 +3047,14 @@ object Dedup {
   /** One-row operational summary of a persisted paragraph table (the
     * [[signatureTableStats]] shape): the pinned separator (what every
     * batch silently splits under), the distinct-paragraph count (8
-    * bytes each — the table's working-set arithmetic at corpus scale),
-    * and the hash relation's part-file count (the
-    * [[compactParagraphTable]] signal). All partial aggs plus 1-row
-    * broadcast joins. */
+    * bytes each — the table's working-set arithmetic at corpus scale;
+    * the manifest's recorded count), and the hash relation's part-file
+    * count (the [[compactParagraphTable]] signal). */
   def paragraphTableStats(
       spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     BucketStore.metaFrame(spark, path)
-      .crossJoin(ParaHashes.read(spark, path)
-        .agg(count(lit(1)).as("n_paragraphs")))
+      .crossJoin(BucketStore.rowCount(
+        Store.snapshot(spark, ParaHashes.root(path)), "n_paragraphs"))
       .withColumn("n_hash_files",
         lit(Store.partFileCount(spark, ParaHashes.root(path))))
 

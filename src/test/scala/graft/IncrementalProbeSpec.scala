@@ -2,6 +2,9 @@ package graft
 
 import graft.operators.{BucketStore, Dedup, Store}
 
+import org.apache.spark.Success
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -191,6 +194,38 @@ class IncrementalProbeSpec extends GraftSpec {
     // a local relation of at most n rows is collected as it is
     val local = (0L until 5L).toDF("n")
     assert(BucketStore.collectAtMost(local, 5).map(_.toSeq) == Some(local.collect().toSeq))
+  }
+
+  test("collectAtMost over its bound cancels its one job") {
+    // 400 partitions of 500 rows against a bound of 1,000: the third
+    // task's rows pass it, and the tasks not yet run never start
+    val df = spark.range(0L, 200000L, 1L, 400).toDF("n")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val succeeded = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.map(_.numTasks).sum == 400) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.reason == Success) succeeded.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      assert(BucketStore.collectAtMost(df, 1000).isEmpty)
+      // one listener sees its events in order: once it has seen a later
+      // job end, it has seen every task end of the collect
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (ended.get < 2 && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, "one job")
+    assert(succeeded.get < 200, s"${succeeded.get} of 400 tasks ran to completion")
   }
 
   test("the ingest chain appends the same rows on both paths") {

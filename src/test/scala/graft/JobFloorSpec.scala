@@ -5,11 +5,11 @@ import graft.operators.Dedup
 import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.DataFrame
 
-/** The Spark-job floor of one signature-table probe and one ingest: a
-  * small batch's batch-sized algebra runs on the driver, so the job
-  * count is its few collects and appends. Counted with a job group
-  * through the status tracker; a change that adds jobs to either call
-  * fails here. */
+/** The Spark-job floor of one signature-table probe and of one ingest
+  * into each banded or hashed store: a small batch's signature-table
+  * algebra runs on the driver, so the job count is its few collects and
+  * appends. Counted with a job group through the status tracker; a
+  * change that adds jobs to any of these calls fails here. */
 class JobFloorSpec extends GraftSpec {
 
   import spark.implicits._
@@ -18,6 +18,10 @@ class JobFloorSpec extends GraftSpec {
   private val ProbeFloor = 6
   /** Jobs run by an 8-doc ingest, as measured when the floor was set. */
   private val IngestFloor = 13
+  /** Jobs run by an 8-row Hamming ingest, as measured when the floor was set. */
+  private val HammingIngestFloor = 22
+  /** Jobs run by an 8-doc paragraph ingest, as measured when the floor was set. */
+  private val ParagraphIngestFloor = 12
 
   private def doc(f: Int): String = (0 until 40).map(j => s"f${f}w$j").mkString(" ")
 
@@ -71,5 +75,36 @@ class JobFloorSpec extends GraftSpec {
     val path = table("jf_ingest")
     val n = jobs { Dedup.nearDedupIngest(spark, path, batch(2000L, 200), "doc_id", "text", 0.7) }
     assert(n <= IngestFloor, s"the ingest ran $n jobs")
+  }
+
+  test(s"an 8-row Hamming ingest runs at most $HammingIngestFloor jobs") {
+    Scratch.remove("jf_ham")
+    val path = Scratch.path("jf_ham")
+    def sig(i: Long): Long = i * 0x9E3779B97F4A7C15L
+    Dedup.writeHammingTable((1L to 64L).map(i => (i, sig(i))).toDF("doc_id", "sig"),
+      "doc_id", "sig", path)
+    // half one bit off a stored signature, half fresh
+    val rows = (0 until 8).map { j =>
+      (3000L + j, if (j % 2 == 0) sig(j + 1L) ^ 1L else sig(500L + j))
+    }.toDF("doc_id", "sig")
+    var kept: DataFrame = null
+    val n = jobs { kept = Dedup.hammingIngest(spark, path, rows, "doc_id", "sig") }
+    assert(kept.select("doc_id").as[Long].collect().toSet == Set(3001L, 3003L, 3005L, 3007L))
+    assert(n <= HammingIngestFloor, s"the Hamming ingest ran $n jobs")
+  }
+
+  test(s"an 8-doc paragraph ingest runs at most $ParagraphIngestFloor jobs") {
+    Scratch.remove("jf_para")
+    val path = Scratch.path("jf_para")
+    def para(f: Int): String = doc(f).grouped(60).mkString("\n")
+    Dedup.writeParagraphTable((1 to 64).map(i => (i.toLong, para(i))).toDF("doc_id", "text"),
+      "doc_id", "text", path)
+    // half copies of stored docs, which lose every paragraph, half fresh
+    val docs = (0 until 8).map(j =>
+      (4000L + j, para(if (j % 2 == 0) j + 1 else 400 + j))).toDF("doc_id", "text")
+    var kept: DataFrame = null
+    val n = jobs { kept = Dedup.paragraphIngest(spark, path, docs, "doc_id", "text") }
+    assert(kept.select("doc_id").as[Long].collect().toSet == Set(4001L, 4003L, 4005L, 4007L))
+    assert(n <= ParagraphIngestFloor, s"the paragraph ingest ran $n jobs")
   }
 }

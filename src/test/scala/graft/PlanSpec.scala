@@ -228,7 +228,7 @@ class PlanSpec extends GraftSpec {
       .map(i => (i.toInt % 16, i * 7919L)).toDF("band", "bucket")
       .persist()
       .distinct()
-    val probe = BucketStore.probe(h.bucketsSnap, BucketStore.BandBucket, touched)
+    val probe = BucketStore.probe(h.bucketsSnap, BucketStore.BandBucket, touched)._1
     val p = probe.queryExecution
       .explainString(ExplainMode.fromString("formatted"))
     assert(p.contains("LocalTableScan"),
@@ -271,7 +271,7 @@ class PlanSpec extends GraftSpec {
         (col("id") * 7919L).as("bucket"))
       .persist()
       .distinct()
-    val p = BucketStore.probe(h.bucketsSnap, BucketStore.BandBucket, touched)
+    val p = BucketStore.probe(h.bucketsSnap, BucketStore.BandBucket, touched)._1
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     touched.unpersist(blocking = false)
     val pf = p.linesIterator.filter(_.contains("PartitionFilters")).toSeq

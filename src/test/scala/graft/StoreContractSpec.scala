@@ -153,24 +153,49 @@ class StoreContractSpec extends GraftSpec {
     }
   }
 
-  test("signature table stats read counts equal to a scan after each commit") {
-    val path = java.nio.file.Files.createTempDirectory("graft_contract_").toString
-    def check(step: String): Unit = {
-      val st = Dedup.signatureTableStats(spark, path).head()
-      Seq("sigs" -> "n_docs", "buckets" -> "n_bucket_rows").foreach { case (rel, stat) =>
-        val snap = graft.operators.Store.snapshot(spark, s"$path/$rel")
-        assert(snap.manifestRowCount.isDefined, s"$step: $rel has manifest counts")
-        assert(st.getAs[Long](stat) == snap.df.count(), s"$step: $stat")
+  /** Each text store's stats row, the stat that reads each relation's
+    * manifest count, an append of [[batch]], and a retire of the
+    * planted source and of a row the append added. */
+  private final case class Counted(
+      stats: String => DataFrame, counts: Seq[(String, String)],
+      append: String => Unit, retire: String => Unit)
+
+  private def counted = Map(
+    "signature table" -> Counted(Dedup.signatureTableStats(spark, _),
+      Seq("sigs" -> "n_docs", "buckets" -> "n_bucket_rows"),
+      Dedup.appendToSignatureTable(spark, _, batch, "doc_id", "text"),
+      Dedup.retireFromSignatureTable(spark, _, Seq(Planted, CopyId).toDF("id"), "id")),
+    "Hamming table" -> Counted(Dedup.hammingTableStats(spark, _),
+      Seq("buckets" -> "n_bucket_rows"),
+      Dedup.appendToHammingTable(spark, _, hamSigs(batch), "doc_id", "sig"),
+      Dedup.retireFromHammingTable(spark, _, Seq(Planted, CopyId).toDF("id"), "id")),
+    "paragraph table" -> Counted(Dedup.paragraphTableStats(spark, _),
+      Seq("hashes" -> "n_paragraphs"),
+      Dedup.appendToParagraphTable(spark, _, batch, "doc_id", "text"),
+      Dedup.retireFromParagraphTable(spark, _,
+        (text(Planted) + "\n" + text(OtherId)).split("\n").toSeq.toDF("text"), "text")))
+
+  kinds.filter(k => counted.contains(k.name)).foreach { k =>
+    test(s"${k.name} stats read counts equal to a scan after each commit") {
+      val c = counted(k.name)
+      val path = java.nio.file.Files.createTempDirectory("graft_contract_").toString
+      def check(step: String): Unit = {
+        val st = c.stats(path).head()
+        c.counts.foreach { case (rel, stat) =>
+          val snap = graft.operators.Store.snapshot(spark, s"$path/$rel")
+          assert(snap.manifestRowCount.isDefined, s"$step: $rel has manifest counts")
+          assert(st.getAs[Long](stat) == snap.df.count(), s"$step: $stat")
+        }
       }
+      k.build(path)
+      check("create")
+      c.append(path)
+      check("append")
+      c.retire(path)
+      check("retire")
+      k.compact(path, 1)
+      check("compact")
     }
-    Dedup.writeSignatureTable(corpus, "doc_id", "text", path)
-    check("create")
-    Dedup.appendToSignatureTable(spark, path, batch, "doc_id", "text")
-    check("append")
-    Dedup.retireFromSignatureTable(spark, path, Seq(Planted, CopyId).toDF("id"), "id")
-    check("retire")
-    Dedup.compactSignatureTable(spark, path, 1)
-    check("compact")
   }
 
   test("a signature table keyed by int ids answers like the reference form") {
