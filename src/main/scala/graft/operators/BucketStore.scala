@@ -26,17 +26,24 @@ private[graft] object BucketStore {
 
   type KeepFn = (Map[String, String], Map[String, (Long, Long)]) => Boolean
 
+  /** The files one shaped append of a signature or Hamming table
+    * relation writes per partition directory: its slot count. */
+  val AppendFiles: Int = 4
+
   /** One persisted relation of a store, at `<store path>/<dir>`: its
     * partition columns, cluster keys and sampling-free range placement
     * (`splits(None)` at create, `splits(Some(snap))` on a rewrite of
-    * `snap`), and `shape`, the batch-sized placement an append's rows
-    * take before they are written. */
+    * `snap`), `shape`, the batch-sized placement an append's rows take
+    * before they are written, and `slot`, the per-row file slot `shape`
+    * places them by when that is a row expression (a banded
+    * relation's slot arithmetic). */
   final case class Relation(
       dir: String,
       partitionCols: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil,
       splits: Option[Store.Snap] => Option[Store.RangeSplits] = _ => None,
-      shape: DataFrame => DataFrame = identity) {
+      shape: DataFrame => DataFrame = identity,
+      slot: Option[Column] = None) {
     def root(path: String): String = s"$path/$dir"
 
     /** The live snapshot, refused when the relation's manifest is not
@@ -62,8 +69,14 @@ private[graft] object BucketStore {
     /** Append `rows` under the [[Store.append]] fence, shaped and
       * partitioned by the declared layout. */
     def append(spark: SparkSession, path: String)(rows: => DataFrame): Unit =
+      appendPlaced(spark, path)(shape(rows))
+
+    /** Append rows already placed as `shape` would place them (one
+      * partition per file slot), under the same fence, partitioned by
+      * the declared layout. */
+    def appendPlaced(spark: SparkSession, path: String)(placed: => DataFrame): Unit =
       Store.append(spark, root(path)) { dir =>
-        val w = shape(rows).write.mode("append")
+        val w = placed.write.mode("append")
         (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
           .parquet(dir)
       }
@@ -79,16 +92,18 @@ private[graft] object BucketStore {
   /** A banded (id, …, band, bucket) relation: partitioned by band and
     * range-clustered by bucket, so DPP prunes band directories and the
     * per-file bucket ranges prune files inside them. An append is
-    * placed into 4 files by `slot(band, bucket, slots)`, a monotone
-    * partition index over the (band, bucket) order computed by
-    * arithmetic — a range partitioner's sample would run the occupancy
-    * window and store probe a second time per append. */
+    * placed into [[AppendFiles]] files by `slot(band, bucket, slots)`,
+    * a monotone partition index over the (band, bucket) order computed
+    * by arithmetic — a range partitioner's sample would run the
+    * occupancy window and store probe a second time per append. */
   def banded(slot: (Column, Column, Int) => Column)(
-      splits: Option[Store.Snap] => Option[Store.RangeSplits]): Relation =
+      splits: Option[Store.Snap] => Option[Store.RangeSplits]): Relation = {
+    val pid = slot(col("band"), col("bucket"), AppendFiles)
     Relation("buckets", Seq("band"), Seq("bucket"), splits,
-      Store.placeByPid(_, slot(col("band"), col("bucket"), 4), 4,
-        Seq(col("band"), col("bucket")))
-        .sortWithinPartitions(col("band"), col("bucket")))
+      Store.placeByPid(_, pid, AppendFiles, Seq(col("band"), col("bucket")))
+        .sortWithinPartitions(col("band"), col("bucket")),
+      Some(pid))
+  }
 
   /** A store's write-once `meta` relation: one row of the construction
     * parameters every probe and append reads back. */
@@ -139,9 +154,11 @@ private[graft] object BucketStore {
 
   /** The collected key rows of one probe — gathered ONCE on the driver
     * and reused by every phase of an ingest batch (the driver-side file
-    * prune, the exact local-relation semi-join, and the append's
-    * occupancy count), so the touched-key plan never re-executes per
-    * phase. */
+    * prune, the exact local-relation semi-join, and a distributed
+    * append's occupancy count), so the touched-key plan never
+    * re-executes per phase. An append from rows the driver already
+    * holds ([[appendBandedCollected]]) takes the stored occupancy
+    * itself instead. */
   final case class ProbeKeys(rows: Array[Row], schema: StructType)
 
   /** The rows of `df` (in partition order, as `collect` gives them), or
@@ -317,8 +334,7 @@ private[graft] object BucketStore {
     * (a violated single-ingest-loop contract) would make the reused
     * result stale — an occupancy undercount or duplicate rows — so it
     * is recomputed against a fresh snapshot instead. */
-  def fenced(spark: SparkSession, snap: Store.Snap)(reuse: => DataFrame)(
-      fresh: => DataFrame): DataFrame =
+  def fenced[T](spark: SparkSession, snap: Store.Snap)(reuse: => T)(fresh: => T): T =
     if (!Store.changedSince(spark, snap)) reuse else fresh
 
   /** The measured file-skipping arithmetic of one probe, WITHOUT running
@@ -350,7 +366,10 @@ private[graft] object BucketStore {
     * write-time capping, never a quadratic blow-up. `snap` is the
     * snapshot occupancy is counted against and `touched` optionally
     * carries a probe's already-collected key superset (the fused ingest
-    * path — no new driver action, under the [[fenced]] check). */
+    * path — no new driver action, under the [[fenced]] check). This is
+    * the distributed form, and the parity reference and stale-occupancy
+    * fallback of [[appendBandedCollected]], which appends rows whose
+    * occupancy the driver already holds. */
   def appendBanded(spark: SparkSession, path: String, rel: Relation,
       rows: DataFrame, maxBucketSize: Int, snap: Store.Snap,
       touched: Option[ProbeKeys]): Unit = {
@@ -370,6 +389,69 @@ private[graft] object BucketStore {
         .join(stored, Seq("band", "bucket"), "left")
         .filter(coalesce(col("__stored"), lit(0L)) + col("__rn") <= maxBucketSize)
         .select(rows.columns.map(col): _*)
+    }
+  }
+
+  // ───────── appends of rows the driver already holds ─────────
+
+  /** Write `slots(i)`, rows of `schema` on the driver, as the relation's
+    * file slot i: one Spark job over one partition per slot, no
+    * exchange, each file sorted by the declared partition and cluster
+    * keys as `shape` sorts it. The rows travel in the job's tasks. */
+  private def appendSlots(spark: SparkSession, path: String, rel: Relation,
+      schema: StructType, slots: Seq[Seq[Row]]): Unit =
+    rel.appendPlaced(spark, path) {
+      val rdd = spark.sparkContext.parallelize(slots, slots.length).flatMap(identity)
+      spark.createDataFrame(rdd, schema)
+        .sortWithinPartitions((rel.partitionCols ++ rel.clusterBy).map(col): _*)
+    }
+
+  /** Append `rows` of a relation shaped by [[Store.placeBatchByKey]] on
+    * its one cluster key, placed on the driver as that shape places
+    * them: the ntile([[AppendFiles]]) slot of each row in key `order`
+    * (the first `n % files` slots hold one row more). Keys are non-null. */
+  def appendCollectedByKey(spark: SparkSession, path: String, rel: Relation,
+      schema: StructType, rows: Seq[Row], order: Ordering[Any]): Unit = {
+    val key = schema.fieldIndex(rel.clusterBy.head)
+    val sorted = rows.sortBy(_.get(key))(order)
+    val (size, padded) = (sorted.length / AppendFiles, sorted.length % AppendFiles)
+    val ends = (0 until AppendFiles).scanLeft(0)((e, i) => e + size + (if (i < padded) 1 else 0))
+    appendSlots(spark, path, rel, schema,
+      ends.sliding(2).map { case Seq(a, b) => sorted.slice(a, b) }.toSeq)
+  }
+
+  /** [[appendBanded]] over banded `rows` of `schema` the driver already
+    * holds, with the stored `occupancy` of every (band, bucket) key they
+    * touch, read from `snap`: the headroom admission runs here (within
+    * a bucket, rank by (non-null) id in `order` + stored ≤
+    * `maxBucketSize`), each row goes to the slot the relation's `shape`
+    * would give it (its `slot` evaluated on a local projection of the
+    * keys, which Spark folds without a job) and the relation is written
+    * in one job. When
+    * the relation has committed since `snap`, the occupancy is stale and
+    * [[appendBanded]] recounts it against a fresh snapshot instead. */
+  def appendBandedCollected(spark: SparkSession, path: String, rel: Relation,
+      schema: StructType, rows: Seq[Row], order: Ordering[Any], maxBucketSize: Int,
+      snap: Store.Snap, occupancy: collection.Map[(Int, Long), Long]): Unit = {
+    val Seq(id, band, bucket) = Seq("id", "band", "bucket").map(schema.fieldIndex)
+    fenced(spark, snap) {
+      val admitted = rows.groupBy(r => (r.getInt(band), r.getLong(bucket))).toSeq.map {
+        case (k, rs) =>
+          val room = maxBucketSize.toLong - occupancy.getOrElse(k, 0L)
+          k -> rs.sortBy(_.get(id))(order).take(math.max(0L, room).min(rs.length).toInt)
+      }
+      val keys = spark.createDataFrame(
+        java.util.Arrays.asList(admitted.map { case ((b, k), _) => Row(b, k) }: _*),
+        StructType(Seq(schema(band), schema(bucket))))
+      val slotOf = keys.select(col("band"), col("bucket"), rel.slot.get).collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r.getInt(2)).toMap
+      val slots = Seq.fill(AppendFiles)(Seq.newBuilder[Row])
+      admitted.foreach { case (k, rs) => slots(slotOf(k)) ++= rs }
+      appendSlots(spark, path, rel, schema, slots.map(_.result()))
+    } {
+      appendBanded(spark, path, rel,
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+        maxBucketSize, rel.snapshot(spark, path), None)
     }
   }
 

@@ -1319,7 +1319,7 @@ object Dedup {
     * execute the batch plan once more per append. */
   private val SigIds = BucketStore.Relation("sigs", clusterBy = Seq("id"),
     splits = _.flatMap(Store.statsSplits(_, "id")),
-    shape = Store.placeBatchByKey(_, "id", 4).sortWithinPartitions("id"))
+    shape = Store.placeBatchByKey(_, "id", BucketStore.AppendFiles).sortWithinPartitions("id"))
 
   private val SigIdKey = BucketStore.longKey("id")
 
@@ -1503,11 +1503,12 @@ object Dedup {
     * On the driver path the jobs are three collects, one job each (none
     * for a local batch) plus a broadcast job for each store fetch — the
     * batch's (id, sig, band keys), the stored (id, band, bucket) rows
-    * of the capped touched keys, and the (id, sig) rows of the
-    * candidate corpus ids (skipped when there is none) — and the
-    * returned frame is `incoming` minus a literal rejected-id set (with
-    * a `pick`, the canonical pick over the batch-only clusters as a
-    * local relation): it reads no store relation. On the distributed
+    * of every touched key (skipped when there is none), and the (id,
+    * sig) rows of the candidate corpus ids (skipped when there is
+    * none) — and the returned frame is `incoming` minus a literal
+    * rejected-id set (with a `pick`, the canonical pick over the
+    * batch-only clusters as a local relation): it reads no store
+    * relation. On the distributed
     * path they are the touched-key collect (none when the driver path
     * handed over the keys it already holds) and the candidate-id
     * collect, one [[BucketStore.collectAtMost]] job each, a checkpoint
@@ -1568,18 +1569,19 @@ object Dedup {
         .select(col("band"), col("bucket")).distinct())
   }
 
-  /** Everything one probe computes that the SAME batch's append phase
-    * can reuse: the survivor plan, the survivors' (id, sig) rows as a
-    * function of the (materialized) survivors — a semi-join or a local
-    * relation, never a re-shingle — and the collected touched keys (the
-    * append's occupancy prune reuses them instead of collecting its
-    * own). `onDriver`: the survivor plan reads only `incoming` and
-    * driver-side values, so the append needs no checkpoint before it.
-    * `release` frees what the probe cached. */
+  /** One probe, and the SAME batch's append built from what it
+    * computed: `append(path, survivors)` appends the (materialized)
+    * survivors' signatures to the table at `path` without re-shingling
+    * them. On the driver path it writes the survivors' collected rows
+    * and reads the stored occupancy the probe fetched; on the
+    * distributed path it is [[BucketStore.appendBanded]] over a
+    * semi-join of the batch signatures, whose occupancy count reuses the
+    * probe's collected touched keys. `onDriver`: the survivor plan reads
+    * only `incoming` and driver-side values, so the append needs no
+    * checkpoint before it. `release` frees what the probe cached. */
   private final case class IncrementalProbe(
       survivors: DataFrame, onDriver: Boolean,
-      survivorSigs: DataFrame => DataFrame,
-      touched: Option[BucketStore.ProbeKeys], release: () => Unit)
+      append: (String, DataFrame) => Unit, release: () => Unit)
 
   /** [[nearDedupIncremental]] against an already-open [[SigTableHandle]]. */
   def nearDedupIncremental(
@@ -1663,8 +1665,11 @@ object Dedup {
     * Two more collects ([[BucketStore.collectAtMost]] of a
     * [[BucketStore.probeCollected]] fetch: file prune + semi-join), no
     * shuffle, no checkpoint:
-    *  1. the stored (id, band, bucket) rows of the batch's keys that
-    *     pass the batch-side bucket cap;
+    *  1. the stored (id, band, bucket) rows of every key the batch
+    *     touches — the pairs read only the keys that pass the
+    *     batch-side bucket cap, the append's occupancy all of them (an
+    *     over-cap key adds at most `max_bucket_size` stored rows, by the
+    *     write invariant);
     *  2. the (id, sig) rows of the candidate corpus ids.
     * The batch-side bucket cap, the batch×batch and batch×corpus pairs,
     * the Jaccard estimate (the `sigEqCount` kernel) and union-find over
@@ -1674,7 +1679,9 @@ object Dedup {
     * keys and the stored rows: pairs are walked, not gathered. When
     * either fetch holds more than `bound` rows (the candidate ids are
     * at most the stored rows), the batch's touched keys instead, for
-    * the distributed path. */
+    * the distributed path. The returned append writes the survivors'
+    * collected rows ([[appendCollected]]); with a `pick` and batch-only
+    * clusters it first collects the picked ids, one bounded collect. */
   private def driverProbe(
       h: SigTableHandle, p: SigParams, frame: DataFrame, docs: Array[Row],
       order: Ordering[Any], incoming: DataFrame, idCol: String,
@@ -1705,20 +1712,22 @@ object Dedup {
       .elementType.asInstanceOf[StructType]
     def keyRows(ks: Iterable[Key]) =
       BucketStore.ProbeKeys(ks.map { case (b, k) => Row(b, k) }.toArray, keySchema)
-    // the append's occupancy prune needs every touched key; the stored
-    // rows are fetched only for the capped ones, the only ones that pair
+    // one fetch of every touched key: only the capped keys pair, and
+    // the append's occupancy counts every stored row, null ids included
     val touched = keyRows(rowsPer.keys)
-
     val fetched =
-      if (capped.isEmpty) Some(Array.empty[Row])
+      if (rowsPer.isEmpty) Some(Array.empty[Row])
       else BucketStore.collectAtMost(BucketStore.probeCollected(spark, h.bucketsSnap,
-          BucketStore.BandBucket, keyRows(capped.keys))
+          BucketStore.BandBucket, touched)
         .select(col("id"), col("band"), col("bucket")), bound)
     if (fetched.isEmpty) return Left(touched)
     val corpusIn = mutable.HashMap[Key, ArrayBuffer[Any]]()
+    val occupancy = mutable.HashMap[Key, Long]().withDefaultValue(0L)
     fetched.get.foreach { r =>
-      if (!r.isNullAt(0))
-        corpusIn.getOrElseUpdate((r.getInt(1), r.getLong(2)), ArrayBuffer()) += r.get(0)
+      val k = (r.getInt(1), r.getLong(2))
+      occupancy(k) += 1
+      if (!r.isNullAt(0) && capped.contains(k))
+        corpusIn.getOrElseUpdate(k, ArrayBuffer()) += r.get(0)
     }
     val wanted = corpusIn.valuesIterator.flatten.toSet
     val corpusRows =
@@ -1781,23 +1790,50 @@ object Dedup {
     def without(drop: Set[Any]): DataFrame =
       if (drop.isEmpty) incoming
       else incoming.filter(col(idCol).isNull || !col(idCol).isin(drop.toSeq: _*))
-    def sigRows(keep: Any => Boolean): DataFrame =
-      localSigs(frame, docs.filter(r => !r.isNullAt(0) && keep(r.get(0))))
-    val (survivors, survivorSigs) =
+    // the survivors' collected rows, for the append
+    def append(keep: Any => Boolean)(path: String): Unit =
+      appendCollected(spark, path, h, p, frame.schema,
+        docs.filter(r => !r.isNullAt(0) && keep(r.get(0))).toSeq, order, occupancy)
+    val (survivors, appendTo) =
       if (pick.isEmpty) {
         val dropped = rejected ++ batchOnly.collect { case Row(id, l) if id != l => id }
-        val keptSigs = sigRows(id => !dropped(id))
-        (without(dropped), (_: DataFrame) => keptSigs)
-      } else {
+        (without(dropped), append(id => !dropped(id)) _)
+      } else if (batchOnly.isEmpty) (without(rejected), append(id => !rejected(id)) _)
+      else {
         val idType = incoming.schema(idCol).dataType
         val compsDf = spark.createDataFrame(java.util.Arrays.asList(batchOnly: _*),
           StructType(Seq(StructField("id", idType), StructField("component", idType))))
-        (keepCanonical(without(rejected), idCol, compsDf, pick),
-          (s: DataFrame) => sigRows(id => !rejected(id))
-            .join(s.select(col(idCol).as("id")), Seq("id"), "left_semi"))
+        val kept = keepCanonical(without(rejected), idCol, compsDf, pick)
+        val members = batchOnly.map(_.get(0)).toSet
+        // keepCanonical keeps one row per cluster: the collect is bounded
+        // by the cluster count
+        (kept, (path: String) => {
+          val picked = BucketStore.collectAtMost(kept.select(col(idCol))
+              .filter(col(idCol).isin(members.toSeq: _*)), batchOnly.map(_.get(1)).distinct.size)
+            .get.map(_.get(0)).toSet
+          append(id => !rejected(id) && (!members(id) || picked(id)))(path)
+        })
       }
-    Right(IncrementalProbe(survivors, onDriver = true, survivorSigs,
-      Some(touched), () => ()))
+    Right(IncrementalProbe(survivors, onDriver = true, (path, _) => appendTo(path), () => ()))
+  }
+
+  /** The driver path's append of the survivors' collected (id, sig,
+    * band keys) `rows` (of `schema`): `sigs` in the ntile-by-id files
+    * its shape gives them, `buckets` admitted against the `occupancy`
+    * the probe read from the handle's snapshot
+    * ([[BucketStore.appendBandedCollected]], which recounts it when the
+    * relation has committed since). One Spark job each, no exchange. */
+  private def appendCollected(spark: org.apache.spark.sql.SparkSession, path: String,
+      h: SigTableHandle, p: SigParams, schema: StructType, rows: Seq[Row],
+      order: Ordering[Any], occupancy: collection.Map[(Int, Long), Long]): Unit = {
+    BucketStore.appendCollectedByKey(spark, path, SigIds,
+      StructType(Seq(schema("id"), schema("sig"))), rows.map(r => Row(r.get(0), r.get(1))),
+      order)
+    val keys = schema("keys").dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
+    BucketStore.appendBandedCollected(spark, path, p.buckets,
+      StructType(schema("id") +: keys.fields),
+      rows.flatMap(r => r.getSeq[Row](2).map(k => Row(r.get(0), k.get(0), k.get(1)))),
+      order, p.maxBucketSize, h.bucketsSnap, occupancy)
   }
 
   /** The probe as a distributed plan over the batch's (id, sig) rows
@@ -1925,8 +1961,9 @@ object Dedup {
       keepCanonical(incoming.join(rejectedIds, Seq(idCol), "left_anti"),
         idCol, batchOnlyComps, ordering),
       onDriver = false,
-      s => batch.join(s.select(col(idCol).as("id")), Seq("id"), "left_semi"),
-      touchedKeys,
+      (path, s) => appendSigsAndBuckets(incoming.sparkSession, path, p,
+        batch.join(s.select(col(idCol).as("id")), Seq("id"), "left_semi"),
+        h.bucketsSnap, touchedKeys),
       () => {
         batch.unpersist(blocking = false)
         batchBuckets.unpersist(blocking = false)
@@ -1958,27 +1995,25 @@ object Dedup {
   def appendToSignatureTable(
       spark: org.apache.spark.sql.SparkSession, path: String,
       batch: DataFrame, idCol: String, textCol: String): Unit = {
-    val meta = BucketStore.readMeta(spark, path)
-    val p = SigParams(meta)
+    val p = SigParams(BucketStore.readMeta(spark, path))
     val sigs = p.sigs(batch, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    appendSigsAndBuckets(spark, path, meta, sigs,
+    appendSigsAndBuckets(spark, path, p, sigs,
       p.buckets.snapshot(spark, path), touched = None)
     sigs.unpersist(blocking = false)
   }
 
-  /** The shared write half of a signature-table append: `sigs` must be
-    * the batch's (id, sig) rows computed with the table's own meta
-    * parameters. `bktSnap` is the bucket-relation snapshot occupancy is
-    * counted against, and `touched` optionally carries a probe's
+  /** The shared distributed write half of a signature-table append:
+    * `sigs` must be the batch's (id, sig) rows computed with the table's
+    * parameters `p`. `bktSnap` is the bucket-relation snapshot occupancy
+    * is counted against, and `touched` optionally carries a probe's
     * already-collected key superset so no new driver action runs here
     * (the fused ingest path); both appends still commit under the
     * [[Store.append]] fence, which re-lists and re-validates. */
   private def appendSigsAndBuckets(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      meta: org.apache.spark.sql.Row, sigs: DataFrame,
+      p: SigParams, sigs: DataFrame,
       bktSnap: Store.Snap, touched: Option[BucketStore.ProbeKeys]): Unit = {
-    val p = SigParams(meta)
     SigIds.append(spark, path)(sigs)
     BucketStore.appendBanded(spark, path, p.buckets, p.banded(sigs),
       p.maxBucketSize, bktSnap, touched)
@@ -1993,18 +2028,28 @@ object Dedup {
     * N+1). Returns the survivors.
     *
     * EAGER, with the probe's two paths ([[nearDedupIncremental]]). On
-    * the driver path the jobs are the probe's collects plus the two
-    * appends; the survivors are `incoming` minus a literal id set and
-    * their signatures a local relation of the collected rows, so
+    * the driver path the jobs are the probe's collects plus one write
+    * job per relation, with no exchange: the appended rows of both
+    * relations are computed on the driver from the rows the probe
+    * collected — the survivors' (id, sig, band keys) and the stored
+    * occupancy of every touched key — with
+    * [[BucketStore.appendBanded]]'s headroom admission, and placed into
+    * the files each relation's append shape would give them
+    * ([[BucketStore.appendCollectedByKey]],
+    * [[BucketStore.appendBandedCollected]]). With a `pick` and
+    * batch-only clusters one more bounded collect learns the picked
+    * ids. The survivors are `incoming` minus a literal id set, so
     * nothing is persisted or checkpointed and the returned frame reads
-    * no store relation. On the distributed path the survivors are
-    * materialized (localCheckpoint) BEFORE the append, so the returned
-    * frame is stable however late it is consumed. The append's
-    * occupancy count reuses the touched keys the probe collected (the
-    * driver path's, when it handed the batch over), so it collects
-    * none of its own unless they were over the bound. Per-batch cost
-    * stays ∝ batch: the append's corpus-side work is one semi-joined
-    * occupancy count. */
+    * no store relation. If the bucket relation committed between the
+    * probe and the append, its occupancy is recounted against a fresh
+    * snapshot by [[BucketStore.appendBanded]]. On the distributed path
+    * the survivors are materialized (localCheckpoint) BEFORE the
+    * append, so the returned frame is stable however late it is
+    * consumed, and the append is [[BucketStore.appendBanded]] over a
+    * semi-join of the batch signatures: its occupancy count reuses the
+    * touched keys the probe collected (the driver path's, when it
+    * handed the batch over), so it collects none of its own unless
+    * they were over the bound. Per-batch cost stays ∝ batch. */
   def nearDedupIngest(
       spark: org.apache.spark.sql.SparkSession, sigTablePath: String,
       incoming: DataFrame, idCol: String, textCol: String,
@@ -2020,20 +2065,18 @@ object Dedup {
       threshold: Double, pick: Seq[Column], driverBound: Int): DataFrame = {
     // one handle open, shared across BOTH phases of the batch: the
     // append reuses the probe's meta read, bucket-relation snapshot,
-    // collected touched keys (its occupancy prune runs zero new driver
-    // actions) and batch signatures (survivor sigs are a semi-join or
-    // a local relation, not a re-shingle). The fence is NOT weakened:
+    // and what it collected (the driver path's survivor rows and
+    // occupancy, the distributed path's touched keys) and batch
+    // signatures, never re-shingled. The fence is NOT weakened:
     // [[Store.append]] re-lists and re-validates at commit time, and
-    // occupancy-from-the-probe-snapshot equals a fresh resolve under
-    // the single-ingest-loop caller contract (nothing commits to the
-    // bucket relation between the phases of one batch).
+    // the occupancy read at the probe is recounted when the bucket
+    // relation committed between the phases of one batch.
     val h = openSignatureTable(spark, sigTablePath)
     val r = nearDedupIncrementalCore(h, incoming, idCol, textCol,
       threshold, pick, driverBound)
     val survivors =
       if (r.onDriver) r.survivors else r.survivors.localCheckpoint(true)
-    appendSigsAndBuckets(spark, sigTablePath, h.meta,
-      r.survivorSigs(survivors), h.bucketsSnap, r.touched)
+    r.append(sigTablePath, survivors)
     r.release()
     survivors
   }

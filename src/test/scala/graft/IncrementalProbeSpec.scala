@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.{BucketStore, Dedup, Store}
+import graft.operators.{BucketStore, Dedup, LinkOrRenameStoreCommit, Store, StoreCommit}
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.Success
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
@@ -16,7 +18,9 @@ import org.apache.spark.sql.types._
   * distributed one forced with a driver bound of 0) and asserts the
   * same surviving rows, plus the survivors the case was built for, so
   * a case that stopped exercising its shape would fail. The ingest
-  * chain checks the appended `sigs` and `buckets` rows too. */
+  * cases check the appended `sigs` and `buckets` rows too: the same
+  * rows and files on both paths, the bucket cap's headroom admission,
+  * and the recount when the bucket relation moved under the append. */
 class IncrementalProbeSpec extends GraftSpec {
 
   import spark.implicits._
@@ -250,5 +254,120 @@ class IncrementalProbeSpec extends GraftSpec {
     assert(ids(local._1) == Set("1002", "1004", "null", "1005"))
     assert(ids(local._2) == Set("2003", "2004"))
     assert(local._3.size == 10 + 2 + 2, "the token-ful survivors with an id are appended")
+  }
+
+  private type Key = (Int, Long)
+
+  /** The ids in each (band, bucket) of a table's bucket relation, sorted. */
+  private def buckets(path: String): Map[Key, Seq[Long]] =
+    Store.read(spark, s"$path/buckets").select("id", "band", "bucket").collect()
+      .groupBy(r => (r.getInt(1), r.getLong(2)))
+      .map { case (k, rs) => k -> rs.map(_.getLong(0)).toSeq.sorted }
+
+  /** A threshold-1.0 ingest of `batch` (near-copies survive it) into a
+    * table of `stored` docs capped at 2, on the driver path and
+    * forced-distributed: both keep every doc and append the same rows,
+    * and each bucket the batch touches admits its smallest ids up to
+    * its headroom. Returns each touched key's stored and batch ids. */
+  private def headroom(name: String, stored: DataFrame,
+      batch: DataFrame): Seq[(Seq[Long], Seq[Long])] = {
+    val before = buckets(table(s"${name}_before", stored, maxBucketSize = 2))
+    val offered = buckets(table(s"${name}_keys", batch))
+    def ingest(bound: Int): (Seq[String], Map[Key, Seq[Long]]) = {
+      val path = table(s"${name}_$bound", stored, maxBucketSize = 2)
+      (rows(Dedup.nearDedupIngest(spark, path, batch, "doc_id", "text", 1.0, Nil, bound)),
+        buckets(path))
+    }
+    val local = ingest(BucketStore.MaxProbeKeys)
+    assert(local == ingest(0), "both paths keep and append the same rows")
+    assert(ids(local._1) == ids(rows(batch)), "every near-copy survives")
+    offered.toSeq.map { case (k, batchIds) =>
+      val was = before.getOrElse(k, Nil)
+      val admitted = local._2.getOrElse(k, Nil).filterNot(was.contains)
+      assert(admitted == batchIds.take(math.max(0, 2 - was.size)),
+        s"bucket $k held $was and was offered $batchIds")
+      (was, batchIds)
+    }
+  }
+
+  test("a full bucket admits nothing and one free slot admits the smallest id") {
+    // doc 1 stored twice fills its buckets; doc 2 stored once leaves one slot
+    val touched = headroom("ip_headroom",
+      docs((1L, doc(1)), (2L, doc(1)), (3L, doc(2))),
+      docs((1501L, edit(doc(1), 5)), (1502L, edit(doc(1), 25)),
+        (1503L, edit(doc(2), 5)), (1504L, edit(doc(2), 25))))
+    assert(touched.exists { case (was, offered) => was.size == 2 && offered.nonEmpty },
+      "a full bucket is offered a row")
+    assert(touched.exists { case (was, offered) => was.size == 1 && offered.size >= 2 },
+      "a bucket with one free slot is offered two rows")
+  }
+
+  test("a batch key over maxBucketSize is admitted against its stored rows") {
+    // three near-copies of a doc stored once: the keys they share hold
+    // more batch rows than the cap of 2, and one stored row
+    val touched = headroom("ip_overcap", docs((1L, doc(1)), (2L, doc(2))),
+      docs((1601L, edit(doc(1), 5)), (1602L, edit(doc(1), 20)), (1603L, edit(doc(1), 35))))
+    assert(touched.exists { case (was, offered) => was.nonEmpty && offered.size > 2 },
+      "an over-cap batch key with a stored row")
+  }
+
+  test("both paths write each appended file with the same rows and footer range") {
+    val batch = docs((1 to 20).map(i => (1700L + i, if (i % 4 == 0) edit(doc(i / 4), 9)
+      else doc(100 + i))): _*)
+    val slot = """(band=\d+/)?part-\d+""".r
+    // per relation, band and slot: the file's sorted rows and footer stats
+    def written(bound: Int): Map[String, (Seq[String], Map[String, (Long, Long)])] = {
+      val path = table(s"ip_files_$bound")
+      val rels = Seq("sigs", "buckets")
+      val before = rels.map(r => Store.snapshot(spark, s"$path/$r").files.map(_.rel).toSet)
+      Dedup.nearDedupIngest(spark, path, batch, "doc_id", "text", Threshold, Nil, bound)
+      val files = rels.zip(before).flatMap { case (r, old) =>
+        val snap = Store.snapshot(spark, s"$path/$r")
+        snap.files.filterNot(f => old(f.rel)).map { f =>
+          s"$r/${slot.findFirstIn(f.rel).get}" ->
+            (rows(spark.read.parquet(s"${snap.gen.dataPath}/${f.rel}")), f.stats)
+        }
+      }
+      assert(files.map(_._1).distinct.size == files.size, "one file per slot")
+      files.toMap
+    }
+    val local = written(BucketStore.MaxProbeKeys)
+    assert(local == written(0))
+    assert(local.keys.count(_.startsWith("sigs/")) == BucketStore.AppendFiles,
+      "the survivors fill every sigs slot")
+    assert(local.keys.filter(_.startsWith("buckets/")).map(_.takeRight(5)).size ==
+      BucketStore.AppendFiles, "and every buckets slot")
+  }
+
+  test("a bucket commit between the probe and the append is recounted") {
+    // once the ingest's sigs marker publishes, two stored copies of the
+    // batch doc's text are committed to the buckets: its buckets are
+    // full, which the probe's occupancy does not know
+    val text = doc(95)
+    val path = table("ip_fence", maxBucketSize = 2)
+    val copies = Store.read(spark,
+      s"${table("ip_fence_copies", docs((9001L, text), (9002L, text)))}/buckets")
+    val committed = new java.util.concurrent.atomic.AtomicBoolean()
+    Store.setCommitService(new StoreCommit {
+      def createExclusive(fs: FileSystem, p: Path): Boolean =
+        LinkOrRenameStoreCommit.createExclusive(fs, p)
+      def publishExclusive(fs: FileSystem, p: Path, content: String): Boolean = {
+        val won = LinkOrRenameStoreCommit.publishExclusive(fs, p, content)
+        if (won && p.getName.startsWith("a-") && p.getParent.getParent.getName == "sigs" &&
+          !committed.getAndSet(true))
+          Store.append(spark, s"$path/buckets")(copies.write.partitionBy("band").parquet(_))
+        won
+      }
+    })
+    try {
+      val kept = Dedup.nearDedupIngest(spark, path, docs((1801L, text)), "doc_id", "text",
+        Threshold)
+      assert(onDriver(kept) && ids(rows(kept)) == Set("1801"))
+    } finally Store.setCommitService(LinkOrRenameStoreCommit)
+    assert(committed.get, "the extra batch committed")
+    val after = buckets(path)
+    assert(after.values.forall(_.size <= 2), "no bucket over its cap")
+    assert(after.values.count(_ == Seq(9001L, 9002L)) == 16, "the copies' buckets are full")
+    assert(Store.read(spark, s"$path/sigs").filter(col("id") === 1801L).count() == 1)
   }
 }

@@ -2,22 +2,29 @@ package graft
 
 import graft.operators.Dedup
 
-import org.apache.spark.JobExecutionStatus
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The Spark-job floor of one signature-table probe and of one ingest
   * into each banded or hashed store: a small batch's signature-table
   * algebra runs on the driver, so the job count is its few collects and
-  * appends. Counted with a job group through the status tracker; a
-  * change that adds jobs to any of these calls fails here. */
+  * appends. Counted by job group with a listener; a change that adds
+  * jobs to any of these calls fails here, naming each job's SQL
+  * execution so the phase that added one shows. */
 class JobFloorSpec extends GraftSpec {
 
   import spark.implicits._
 
   /** Jobs run by an 8-doc probe plus the caller's collect. */
-  private val ProbeFloor = 6
+  private val ProbeFloor = 4
   /** Jobs run by an 8-doc ingest, as measured when the floor was set. */
-  private val IngestFloor = 13
+  private val IngestFloor = 6
   /** Jobs run by an 8-row Hamming ingest, as measured when the floor was set. */
   private val HammingIngestFloor = 22
   /** Jobs run by an 8-doc paragraph ingest, as measured when the floor was set. */
@@ -39,42 +46,70 @@ class JobFloorSpec extends GraftSpec {
     path
   }
 
-  /** The jobs `f` runs, by job group. The status store is fed
-    * asynchronously, so a marker job is run after `f`: once its end is
-    * visible, every earlier job's start is too. */
-  private def jobs(f: => Unit): Int = {
+  /** The jobs `f` runs, by job group: one line per job, its id and its
+    * SQL execution's description and its first stage's name. Listener events arrive asynchronously but in order,
+    * so a marker job is run after `f`: once its end is seen, every
+    * earlier job's start is too. */
+  private def jobs(f: => Unit): Seq[String] = {
     val sc = spark.sparkContext
     val group = s"job-floor-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val executions = new ConcurrentHashMap[Long, String]()
+    val started = new ConcurrentLinkedQueue[(Int, Option[Long], String)]()
+    val markerEnded = new CountDownLatch(1)
+    val markerJobs = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `group` => started.add((e.jobId,
+            Option(e.properties.getProperty("spark.sql.execution.id")).map(_.toLong),
+            e.stageInfos.headOption.fold("")(_.name)))
+          case `marker` => markerJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markerEnded.countDown()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => executions.put(s.executionId, s.description)
+        case _ =>
+      }
+    }
+    // no group description: it would stand in for each execution's own
     def inGroup(g: String)(body: => Unit): Unit = {
-      sc.setJobGroup(g, g)
+      sc.setJobGroup(g, null)
       try body finally sc.clearJobGroup()
     }
-    inGroup(group)(f)
-    inGroup(s"$group-marker")(sc.parallelize(Seq(1), 1).count())
-    val tracker = sc.statusTracker
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (!tracker.getJobIdsForGroup(s"$group-marker").exists(id =>
-      tracker.getJobInfo(id).exists(_.status == JobExecutionStatus.SUCCEEDED)) &&
-      System.nanoTime() < deadline) Thread.sleep(10)
-    tracker.getJobIdsForGroup(group).length
+    sc.addSparkListener(listener)
+    try {
+      inGroup(group)(f)
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      assert(markerEnded.await(30, TimeUnit.SECONDS), "the marker job's end was seen")
+    } finally sc.removeSparkListener(listener)
+    started.asScala.toSeq.sortBy(_._1).map { case (id, exec, stage) =>
+      val sql = exec.flatMap(x => Option(executions.get(x))).fold("no SQL execution")(d => s"SQL: $d")
+      s"job $id: $sql; first stage: $stage"
+    }
   }
+
+  private def report(what: String, js: Seq[String]): String =
+    s"the $what ran ${js.size} jobs:\n${js.mkString("\n")}"
 
   test(s"an 8-doc probe and its collect run at most $ProbeFloor jobs") {
     val path = table("jf_probe")
     val probe = batch(1000L, 100)
     var kept = Set.empty[Long]
-    val n = jobs {
+    val js = jobs {
       kept = Dedup.nearDedupIncremental(spark, path, probe, "doc_id", "text", 0.7)
         .select("doc_id").as[Long].collect().toSet
     }
     assert(kept == Set(1001L, 1003L, 1005L, 1007L))
-    assert(n <= ProbeFloor, s"the probe ran $n jobs")
+    assert(js.size <= ProbeFloor, report("probe", js))
   }
 
   test(s"an 8-doc ingest runs at most $IngestFloor jobs") {
     val path = table("jf_ingest")
-    val n = jobs { Dedup.nearDedupIngest(spark, path, batch(2000L, 200), "doc_id", "text", 0.7) }
-    assert(n <= IngestFloor, s"the ingest ran $n jobs")
+    val js = jobs { Dedup.nearDedupIngest(spark, path, batch(2000L, 200), "doc_id", "text", 0.7) }
+    assert(js.size <= IngestFloor, report("ingest", js))
   }
 
   test(s"an 8-row Hamming ingest runs at most $HammingIngestFloor jobs") {
@@ -88,9 +123,9 @@ class JobFloorSpec extends GraftSpec {
       (3000L + j, if (j % 2 == 0) sig(j + 1L) ^ 1L else sig(500L + j))
     }.toDF("doc_id", "sig")
     var kept: DataFrame = null
-    val n = jobs { kept = Dedup.hammingIngest(spark, path, rows, "doc_id", "sig") }
+    val js = jobs { kept = Dedup.hammingIngest(spark, path, rows, "doc_id", "sig") }
     assert(kept.select("doc_id").as[Long].collect().toSet == Set(3001L, 3003L, 3005L, 3007L))
-    assert(n <= HammingIngestFloor, s"the Hamming ingest ran $n jobs")
+    assert(js.size <= HammingIngestFloor, report("Hamming ingest", js))
   }
 
   test(s"an 8-doc paragraph ingest runs at most $ParagraphIngestFloor jobs") {
@@ -103,8 +138,8 @@ class JobFloorSpec extends GraftSpec {
     val docs = (0 until 8).map(j =>
       (4000L + j, para(if (j % 2 == 0) j + 1 else 400 + j))).toDF("doc_id", "text")
     var kept: DataFrame = null
-    val n = jobs { kept = Dedup.paragraphIngest(spark, path, docs, "doc_id", "text") }
+    val js = jobs { kept = Dedup.paragraphIngest(spark, path, docs, "doc_id", "text") }
     assert(kept.select("doc_id").as[Long].collect().toSet == Set(4001L, 4003L, 4005L, 4007L))
-    assert(n <= ParagraphIngestFloor, s"the paragraph ingest ran $n jobs")
+    assert(js.size <= ParagraphIngestFloor, report("paragraph ingest", js))
   }
 }
